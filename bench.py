@@ -408,8 +408,10 @@ def _stream_benches(
     from pyspark.sql import functions as F
 
     from flink_fraud_detection_rocks_db_app_spark.streaming import (
+        REPLAY_STATE_PARTITIONS,
         read_replay_stream,
         record_buffer_tumbling_stream,
+        replay_state_confs,
         run_to_memory,
         running_sum_alerts_stream,
         session_agg_stream,
@@ -456,145 +458,120 @@ def _stream_benches(
     )
     os.makedirs(scratch, exist_ok=True)
     timings: dict[str, float] = {}
-    # Streaming state partitioning is a deployment knob: each shuffle
-    # partition is a state-store instance that pays open/commit PER
-    # MICRO-BATCH. On a cluster you size it to executor count; on
-    # local[N] with a 6-file replay, 8 instances amortize far better
-    # than 32 (measured ~2x on the sliding job) while still exercising
-    # the RocksDB provider. Batch queries keep the session default.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    stream_confs: list[str] = []
     try:
         chunks = write_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        # 4 state partitions: measured 8 -> 4 cuts the tumbling job
-        # ~25% and 16 doubles it — per-instance open/commit cost is the
-        # bottleneck at replay size, not per-partition compute. Apply
-        # the reference-mirroring RocksDB knobs + changelog
-        # checkpointing (commit ships the delta, not a full snapshot;
-        # measured ~1s/job here, and it's the setting a real cluster
-        # would run with for exactly the same reason).
-        from flink_fraud_detection_rocks_db_app_spark.session import rocksdb_tuning
-
-        for k, v in rocksdb_tuning().items():
-            spark.conf.set(k, v)
-            stream_confs.append(k)
-        changelog = (
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled"
-        )
-        spark.conf.set(changelog, "true")
-        stream_confs.append(changelog)
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # The interval join needs TWO reader instances (one per join
-        # side) over a TYPED replay — event_type rides in the payload,
-        # the way a real broker stream arrives. (An A/B against
-        # broadcast-joining the type onto untyped chunks measured the
-        # in-payload form ~16% faster end to end: 5.87 s vs 7.01 s —
-        # two fewer per-batch join stages.) The other jobs take one
-        # plain stream; wrapped to the same `job(stream)` shape — the
-        # arg is the click side, the purchase side opens its own
-        # reader over the same typed chunks.
-        # 3 chunks, not 6: micro-batch sizing is THE deployment knob
-        # for this job — each batch pays state open/commit on every
-        # partition for BOTH join sides, and SCALE.md's density probe
-        # shows that fixed cost dominates at replay scale (rows/s grows
-        # ~linearly with density). Halving the batch count halves it;
-        # the emitted pair set is identical (inner-join emission does
-        # not depend on batch boundaries), and the 6-chunk suite
-        # differential (tests/test_streaming_custom.py) still pins the
-        # fine-grained watermark semantics every round.
-        typed_chunks = write_replay_chunks(
-            spark, sf_dir, os.path.join(scratch, "typed"), n_chunks=3,
-            with_event_type=True,
-        )
-
-        def _ivj_side(etype, cols):
-            return (
-                read_replay_stream(spark, typed_chunks, with_event_type=True)
-                .where(F.col("event_type") == etype)
-                .select(*cols)
+        # The stream jobs run under the replay faces' state confs (4
+        # state partitions, RocksDB tuning, changelog checkpointing),
+        # restored afterwards so batch work keeps the session defaults.
+        with replay_state_confs(spark):
+            # The interval join needs TWO reader instances (one per join
+            # side) over a TYPED replay — event_type rides in the payload,
+            # the way a real broker stream arrives. (An A/B against
+            # broadcast-joining the type onto untyped chunks measured the
+            # in-payload form ~16% faster end to end: 5.87 s vs 7.01 s —
+            # two fewer per-batch join stages.) The other jobs take one
+            # plain stream; wrapped to the same `job(stream)` shape — the
+            # arg is the click side, the purchase side opens its own
+            # reader over the same typed chunks.
+            # 3 chunks, not 6: micro-batch sizing is THE deployment knob
+            # for this job — each batch pays state open/commit on every
+            # partition for BOTH join sides, and SCALE.md's density probe
+            # shows that fixed cost dominates at replay scale (rows/s grows
+            # ~linearly with density). Halving the batch count halves it;
+            # the emitted pair set is identical (inner-join emission does
+            # not depend on batch boundaries), and the 6-chunk suite
+            # differential (tests/test_streaming_custom.py) still pins the
+            # fine-grained watermark semantics every round.
+            typed_chunks = write_replay_chunks(
+                spark, sf_dir, os.path.join(scratch, "typed"), n_chunks=3,
+                with_event_type=True,
             )
 
-        def _interval_join(_clicks_unused):
-            c = _ivj_side(
-                "click",
-                [
-                    "account_id",
-                    F.col("event_time").alias("c_time"),
-                    F.col("event_id").alias("click_id"),
-                ],
-            ).withWatermark("c_time", "0 seconds")
-            p = _ivj_side(
-                "purchase",
-                [
-                    F.col("account_id").alias("p_user"),
-                    F.col("event_time").alias("p_time"),
-                    F.col("event_id").alias("purchase_id"),
-                    F.col("amount").alias("purchase_value"),
-                ],
-            ).withWatermark("p_time", "0 seconds")
-            return c.join(
-                p,
-                (F.col("account_id") == F.col("p_user"))
-                & (F.col("p_time") > F.col("c_time"))
-                & (F.col("p_time") <= F.col("c_time") + F.expr("INTERVAL 7 DAYS")),
-            ).select("account_id", "click_id", "purchase_id", "purchase_value")
+            def _ivj_side(etype, cols):
+                return (
+                    read_replay_stream(spark, typed_chunks, with_event_type=True)
+                    .where(F.col("event_type") == etype)
+                    .select(*cols)
+                )
 
-        jobs["stream_interval_join_7d"] = _interval_join
-        # Workload-config fingerprint per streaming row (ADVICE r7):
-        # micro-batch count and state partitioning ARE the workload for
-        # these jobs (per-batch state open/commit dominates at replay
-        # scale), so a knob change — like r7 halving the interval-join
-        # replay from 6 to 3 chunks — must be mechanically visible in
-        # the per-round JSON, not just in a comment, for cross-round
-        # trend comparisons to detect the discontinuity.
-        for name in jobs:
-            workload[name] = {
-                "n_chunks": 3 if name == "stream_interval_join_7d" else 6,
-                "state_partitions": 4,
-            }
-        for name, job in jobs.items():
-            # Failure isolation (round-2 lesson: one broken query must
-            # not black out every other measurement — BENCH_r02 was
-            # rc=1 with zero numbers recorded). min-of-2 for streams
-            # too since r4: the r3 single-shot numbers produced a false
-            # +45% "regression" on the F5 job that a warm re-measure
-            # showed was scheduler noise — the same ±25% band batch
-            # queries already guard against.
-            try:
-                best = None
-                best_stats = None
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    out = job(read_replay_stream(spark, chunks))
-                    stats = run_to_memory(out, f"bench_{name}_{uuid.uuid4().hex[:8]}")
-                    elapsed = time.perf_counter() - t0
-                    # keep the stats from the run that produced the
-                    # reported (min) wall time, so rows_per_sec and the
-                    # min-of-2 timing describe the SAME run (ADVICE r5)
-                    if best is None or elapsed < best:
-                        best, best_stats = elapsed, stats
-                timings[name] = round(best, 3)
-                # Throughput in the reference's own Prometheus metric
-                # (numEvents / processing duration, BASELINE.md) from
-                # StreamingQueryProgress — tracks engine processing
-                # rate independently of harness wall-clock overhead.
-                if best_stats["sec"] > 0:
-                    throughput[name] = {
-                        "rows": best_stats["rows"],
-                        "rows_per_sec": round(best_stats["rows"] / best_stats["sec"], 1),
-                    }
-            except Exception as exc:  # noqa: BLE001
-                print(f"bench: {name} FAILED: {exc!r}", file=sys.stderr)
-                timings[name] = -1.0
-                errors[name] = _err_summary(exc)
+            def _interval_join(_clicks_unused):
+                c = _ivj_side(
+                    "click",
+                    [
+                        "account_id",
+                        F.col("event_time").alias("c_time"),
+                        F.col("event_id").alias("click_id"),
+                    ],
+                ).withWatermark("c_time", "0 seconds")
+                p = _ivj_side(
+                    "purchase",
+                    [
+                        F.col("account_id").alias("p_user"),
+                        F.col("event_time").alias("p_time"),
+                        F.col("event_id").alias("purchase_id"),
+                        F.col("amount").alias("purchase_value"),
+                    ],
+                ).withWatermark("p_time", "0 seconds")
+                return c.join(
+                    p,
+                    (F.col("account_id") == F.col("p_user"))
+                    & (F.col("p_time") > F.col("c_time"))
+                    & (F.col("p_time") <= F.col("c_time") + F.expr("INTERVAL 7 DAYS")),
+                ).select("account_id", "click_id", "purchase_id", "purchase_value")
+
+            jobs["stream_interval_join_7d"] = _interval_join
+            # Workload-config fingerprint per streaming row (ADVICE r7):
+            # micro-batch count and state partitioning ARE the workload for
+            # these jobs (per-batch state open/commit dominates at replay
+            # scale), so a knob change — like r7 halving the interval-join
+            # replay from 6 to 3 chunks — must be mechanically visible in
+            # the per-round JSON, not just in a comment, for cross-round
+            # trend comparisons to detect the discontinuity.
+            for name in jobs:
+                workload[name] = {
+                    "n_chunks": 3 if name == "stream_interval_join_7d" else 6,
+                    "state_partitions": REPLAY_STATE_PARTITIONS,
+                }
+            for name, job in jobs.items():
+                # Failure isolation (round-2 lesson: one broken query must
+                # not black out every other measurement — BENCH_r02 was
+                # rc=1 with zero numbers recorded). min-of-2 for streams
+                # too since r4: the r3 single-shot numbers produced a false
+                # +45% "regression" on the F5 job that a warm re-measure
+                # showed was scheduler noise — the same ±25% band batch
+                # queries already guard against.
+                try:
+                    best = None
+                    best_stats = None
+                    for _ in range(2):
+                        view = f"bench_{name}_{uuid.uuid4().hex[:8]}"
+                        t0 = time.perf_counter()
+                        out = job(read_replay_stream(spark, chunks))
+                        stats = run_to_memory(out, view)
+                        elapsed = time.perf_counter() - t0
+                        spark.catalog.dropTempView(view)
+                        # keep the stats from the run that produced the
+                        # reported (min) wall time, so rows_per_sec and the
+                        # min-of-2 timing describe the SAME run (ADVICE r5)
+                        if best is None or elapsed < best:
+                            best, best_stats = elapsed, stats
+                    timings[name] = round(best, 3)
+                    # Throughput in the reference's own Prometheus metric
+                    # (numEvents / processing duration, BASELINE.md) from
+                    # StreamingQueryProgress — tracks engine processing
+                    # rate independently of harness wall-clock overhead.
+                    if best_stats["sec"] > 0:
+                        throughput[name] = {
+                            "rows": best_stats["rows"],
+                            "rows_per_sec": round(
+                                best_stats["rows"] / best_stats["sec"], 1
+                            ),
+                        }
+                except Exception as exc:  # noqa: BLE001
+                    print(f"bench: {name} FAILED: {exc!r}", file=sys.stderr)
+                    timings[name] = -1.0
+                    errors[name] = _err_summary(exc)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # ADVICE r3: restore the stream-only confs too, not just the
-        # shuffle partitioning, so a reused session isn't left with
-        # streaming state-store settings bleeding into batch work.
-        for k in stream_confs:
-            spark.conf.unset(k)
         shutil.rmtree(scratch, ignore_errors=True)
     return timings
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..fixtures import load
 from ..functions import whitespace_tokens, word_ngrams
 from ..registry import register
+from ..session import env_int
 from .text import _STOP_SQL
 
 # Normalized whitespace-token view of documents; texts are single-space
@@ -672,12 +673,9 @@ def _postings_persist_auto(sf_dir: str) -> bool:
             size = os.path.getsize(path)
     except OSError:
         return False
-    threshold = int(
-        os.environ.get(
-            "SPARK_GRAFT_POSTINGS_PERSIST_BYTES", POSTINGS_PERSIST_MIN_BYTES
-        )
+    return size >= env_int(
+        "SPARK_GRAFT_POSTINGS_PERSIST_BYTES", POSTINGS_PERSIST_MIN_BYTES
     )
-    return size >= threshold
 
 
 def _pruned_pair_counts(

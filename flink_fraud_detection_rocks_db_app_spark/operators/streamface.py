@@ -12,29 +12,112 @@ FraudDetectionJob.java:52-76); the suite's differential tests
 (tests/test_streaming.py) cover the same equality plus the
 out-of-order/late-drop variants that have no batch-SQL oracle.
 
-Mechanics: a finite replay under append mode withholds the windows
-containing the final events (their end never passes the closing
-watermark), so the replay appends a far-future SENTINEL row that
-pushes the watermark past every real window; the sentinel's own
-window never closes and is additionally filtered out.
+Every face runs through one of two harnesses, so a face holds only its
+own stream builder or foreachBatch sink plus its probe.
+
+`_replay_face` (the event-replay faces):
+- Scratch: a fresh per-call directory under the repo's `.scratch/`,
+  removed in `finally` whether or not the run succeeds.
+- Chunks: `ensure_replay_chunks` hardlinks the process-memoized replay
+  (6 chunks unless a face says otherwise) into that scratch.
+- Sentinels: a finite replay under append mode withholds the windows
+  holding its final events (their end never passes the closing
+  watermark), so each `(days, event_ids)` entry appends one far-future
+  chunk `days` past the last real event, in order. The second entry of
+  the left-join face is the later batch during which watermark-evicted
+  state is emitted. Faces whose folds emit without a closing watermark
+  pass no sentinels. A sentinel's own window never closes, and its rows
+  are also filtered out on the face's key column.
+- State: the stream runs under `streaming.replay_state_confs` (4 state
+  partitions, RocksDB tuning, changelog checkpointing), restored after.
+- Sink: `run_to_memory` into a per-call memory table. The harness reads
+  it with `spark.table` and drops the temp view before returning: the
+  frame is analysed eagerly and keeps the sink's plan, so it stays
+  usable while the session keeps nothing behind.
+- Floats: `round_cols` are rounded to 6 dp (`_round6`).
+
+`_ingest_face` (the corpus/vector/graph ingestion faces): the face's
+source frame is split into 3 arrival chunks with strictly ascending
+mtimes (`_arrival_writer`, memoized per process by
+`ensure_arrival_chunks`) and streamed one file per micro-batch through
+the face's foreachBatch sink with `availableNow`; empty batches are
+skipped. The face then probes what the sink built inside the same
+scratch and materializes the bounded result (`_collected`) before the
+scratch is removed.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import time
 import uuid
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..fixtures import load
 from ..registry import register
+from ..streaming import (
+    SENTINEL_ACCOUNT,
+    append_sentinel_chunk,
+    count_or_time_stream,
+    ensure_replay_chunks,
+    ewma_stream,
+    max_chunk_t_us,
+    paned_sliding_stream,
+    read_replay_stream,
+    record_buffer_bounded_tumbling_stream,
+    record_buffer_tumbling_stream,
+    replay_state_confs,
+    run_to_memory,
+    running_mean_alerts_stream,
+    running_sum_alerts_stream,
+    scd2_stream,
+    scd2_tombstoned_stream,
+    session_agg_stream,
+    temporal_join_stream,
+    ts_pattern_stream,
+    windowed_agg_stream,
+)
 from ..streaming.replay import ensure_arrival_chunks
+from ..streaming.rollup import (
+    read_rollup,
+    read_sketch_rollup,
+    run_continuous_rollup,
+    run_users_sketch_rollup,
+)
+from ..streaming.stateful import pattern_rising_stream
 from .asof import ASOF_ORACLE
+from .detectors import _RISING_ORACLE, type_threshold_rules
+from .graph import _ENTITY, _pagerank_iterate, _trade_pairs
 from .indexcache import ensure_index
-from .detectors import _RISING_ORACLE
-from .pipeline import PREP_ORACLE
+from .layout import ZORDER_BATCH_MOD, zorder_stream_sink
+from .pipeline import PREP_ORACLE, corpus_report, merge_prep_segments, prep_segment
+from .pq import (
+    PQ_KS,
+    _codebook_from_vectors,
+    _encoded_over,
+    _probe_ivfpq_index,
+    append_to_ivfpq_index,
+)
+from .similarity import _IVF_ORACLE as _STREAM_IVF_ORACLE
+from .similarity import (
+    IVF_CELLS,
+    _ivf_assigned,
+    _ivf_centroids,
+    _ivf_probes,
+    _ivf_rerank,
+    _semdedup_batch_mask,
+    _vectors,
+    _vectors_over,
+    append_to_ivf_index,
+    append_to_semdedup_index,
+    ivf_health_report,
+    semdedup_verdict_from_index,
+    write_semdedup_base,
+)
 from .stateful import EWMA_ORACLE, sql_count_or_time, sql_running_alerts
 from .temporal import (
     CDC_ORACLE,
@@ -42,8 +125,18 @@ from .temporal import (
     SCD2_TOMBSTONE_ORACLE,
     _TEMPORAL_JOIN_ORACLE,
 )
-from .similarity import _IVF_ORACLE as _STREAM_IVF_ORACLE
-from .text import _BM25_ORACLE
+from .text import (
+    _BM25_ORACLE,
+    MG_COUNTERS,
+    MG_TOP,
+    PSI_BATCH_MOD,
+    _probe_bm25_index,
+    _write_bm25_segment,
+    append_to_bm25_index,
+    mg_summary_over,
+    psi_from_counts,
+    quality_buckets_over,
+)
 from .timeseries import sql_znorm_alerts
 from .windows import MS, sql_session, sql_slide, sql_tumble
 
@@ -55,90 +148,23 @@ _SCRATCH_ROOT = os.path.join(
     ".scratch",
 )
 
+# (days past the last event, sentinel event_ids) per sentinel chunk: 7
+# days clears every 1h/50s window; 30 days clears every 6h-gap session
+# and daily window.
+_SENTINEL_7D = ((7, (-1,)),)
+_SENTINEL_30D = ((30, (-1,)),)
 
-# Replay-face state partitioning (deployment knob, r14): each shuffle
-# partition is a state-store instance paying open/commit per
-# micro-batch, so at replay density fewer instances amortize better —
-# bench.py measured 8 -> 4 cutting its tumbling stream ~25% and this
-# round's face A/B confirms it (see _bounded_state_partitions). On a
-# real cluster size it to executor count via the env knob.
-REPLAY_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_REPLAY_STATE_PARTITIONS", "4")
-)
+_ARRIVAL_CHUNKS = 3
 
 
 @contextmanager
-def _bounded_state_partitions(spark: SparkSession, n: int | None = None):
-    """Per-replay-face state-store configuration (r14 optimization
-    round: one context manager now carries ALL the per-face streaming
-    knobs, so every face gets the same treatment bench.py's stream
-    section measured):
-
-    - Cap shuffle partitions: streaming state partition count is fixed
-      by spark.sql.shuffle.partitions at query start, and every
-      partition is a state-store instance paying open/commit PER
-      MICRO-BATCH. The driver runs these faces on a vanilla session
-      (default 200): ~200 store commits x 7 micro-batches of pure
-      overhead — measured ~4x wall-time on the sliding/F5 faces vs 8
-      partitions, identical results (schedule invariance is a tested
-      property). Default is REPLAY_STATE_PARTITIONS (4, env-tunable):
-      the r14 A/B on three faces read 8 -> 4 as 6.37 -> 5.23 s,
-      8.37 -> 8.03 s, 10.42 -> 8.02 s (min-of-2 each) — bench.py sizes
-      the same knob to 4 for the same measured reason.
-    - RocksDB tuning + changelog checkpointing (r14): the same knobs
-      bench.py applies to its seven stream jobs — changelog
-      checkpointing ships the per-batch delta instead of a full
-      snapshot at commit (measured ~1 s/job there, and it is what a
-      real cluster runs for the same reason). Replay faces previously
-      ran without them, paying full-snapshot commits per micro-batch;
-      A/B on this box at 8 partitions: tumble-sum face 6.59 -> 6.37 s,
-      sketch-rollup 12.59 -> 8.37 s, recordbuffer-tumble
-      16.58 -> 10.42 s (min-of-2 each, OPTIMIZATION_r14.md).
-
-    Restores every previous value even on failure, so the surrounding
-    session is untouched."""
-    from ..session import rocksdb_tuning
-
-    if n is None:
-        n = REPLAY_STATE_PARTITIONS
-    changelog = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    confs: dict[str, str] = {
-        "spark.sql.shuffle.partitions": str(n),
-        changelog: "true",
-        **rocksdb_tuning(),
-    }
-    prev: dict[str, str | None] = {}
-    for k, v in confs.items():
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-        spark.conf.set(k, v)
+def _scratch():
+    path = os.path.join(_SCRATCH_ROOT, f"face_{uuid.uuid4().hex[:8]}")
+    os.makedirs(path, exist_ok=True)
     try:
-        yield
+        yield path
     finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-
-
-def _docs_pmod3_writer(docs: DataFrame):
-    """Canonical 3-way arrival split of the documents table — the
-    identical bytes the BM25 / corpus-prep / Misra-Gries ingest faces
-    all replay, so one ensure_arrival_chunks cache entry serves all
-    three (r14: was three scan+write jobs per face)."""
-
-    def build(canon: str) -> None:
-        for i in range(3):
-            docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == i).coalesce(
-                1
-            ).write.mode("append").parquet(canon)
-
-    return build
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _round6(df: DataFrame, *cols: str) -> DataFrame:
@@ -154,6 +180,112 @@ def _round6(df: DataFrame, *cols: str) -> DataFrame:
     return df
 
 
+def _replay_face(
+    spark: SparkSession,
+    sf_dir: str,
+    build,
+    *,
+    n_chunks: int = 6,
+    sentinels=_SENTINEL_7D,
+    round_cols: tuple[str, ...] = (),
+    key: str = "account_id",
+    output_mode: str = "append",
+    **chunk_kw,
+) -> DataFrame:
+    """Run `build(read, max_us)` over the replay and return its memory
+    table (module docstring). `read()` opens a new stream over the
+    face's chunks; `max_us` is the last real event time in microseconds
+    (None when the face has no sentinels). `chunk_kw` passes through to
+    ensure_replay_chunks."""
+    with _scratch() as scratch:
+        chunks = ensure_replay_chunks(
+            spark, sf_dir, scratch, n_chunks=n_chunks, **chunk_kw
+        )
+        max_us = max_chunk_t_us(chunks) if sentinels else None
+        for seq, (days, event_ids) in enumerate(sentinels):
+            append_sentinel_chunk(
+                chunks, max_us + days * MS["d"] * 1000, event_ids=event_ids, seq=seq
+            )
+        typed = chunk_kw.get("with_event_type", False)
+        sdf = build(
+            lambda: read_replay_stream(spark, chunks, with_event_type=typed), max_us
+        )
+        name = os.path.basename(scratch)
+        try:
+            with replay_state_confs(spark):
+                run_to_memory(sdf, name, output_mode=output_mode)
+            out = spark.table(name)
+        finally:
+            spark.catalog.dropTempView(name)
+    if sentinels:
+        out = out.where(F.col(key) != SENTINEL_ACCOUNT)
+    return _round6(out, *round_cols)
+
+
+def _arrival_writer(frame: DataFrame, chunk_col):
+    """ensure_arrival_chunks writer: one coalesced parquet file per
+    chunk id `chunk_col` takes (0, 1, 2), each pinned to a strictly
+    ascending mtime. FileStreamSource orders same-mtime files
+    arbitrarily, and the bootstrap faces need chunk 0 first."""
+
+    def build(canon: str) -> None:
+        base = time.time()
+        seen: set[str] = set()
+        for i in range(_ARRIVAL_CHUNKS):
+            frame.where(chunk_col == i).coalesce(1).write.mode("append").parquet(canon)
+            for f in os.listdir(canon):
+                p = os.path.join(canon, f)
+                if f.endswith(".parquet") and p not in seen:
+                    os.utime(p, (base + i, base + i))
+                    seen.add(p)
+
+    return build
+
+
+def _ingest_face(
+    spark: SparkSession,
+    scratch: str,
+    frame: DataFrame,
+    cache_key: str,
+    chunk_col,
+    sink,
+) -> None:
+    """Stream `frame`'s arrival split (module docstring) through the
+    foreachBatch `sink(batch, batch_id)` to completion, checkpointing
+    inside `scratch`."""
+
+    def nonempty(batch: DataFrame, bid: int) -> None:
+        if not batch.isEmpty():
+            sink(batch, bid)
+
+    src = ensure_arrival_chunks(scratch, cache_key, _arrival_writer(frame, chunk_col))
+    (
+        spark.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(nonempty)
+        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _ledger_sink(ledger: str, segment):
+    """foreachBatch sink writing `segment(batch)` to ledger/seg=<batch_id>:
+    a retried batch overwrites its own segment instead of
+    double-counting."""
+    return lambda b, bid: segment(b).write.mode("overwrite").parquet(
+        os.path.join(ledger, f"seg={bid}")
+    )
+
+
+def _collected(out: DataFrame) -> DataFrame:
+    """Materialize a bounded probe result on the driver, so it outlives
+    the scratch files it was read from."""
+    return out.sparkSession.createDataFrame(out.collect(), out.schema)
+
+
 @register(
     "stream_tumble_sum_1h_replay",
     oracle=sql_tumble(MS["h"], "round(SUM(value), 6) AS sum_amount"),
@@ -164,32 +296,11 @@ def _round6(df: DataFrame, *cols: str) -> DataFrame:
     tags=("streaming", "window", "parity"),
 )
 def stream_tumble_sum_1h_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        windowed_agg_stream,
-        ensure_replay_chunks,
-    )
-
-    name = f"streamface_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        max_us = max_chunk_t_us(chunks)
-        # 7 days past the last event: beyond every 1h window boundary.
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
-        agg = windowed_agg_stream(read_replay_stream(spark, chunks), MS["h"], watermark="0 seconds")
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "sum_amount",
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: windowed_agg_stream(read(), MS["h"], watermark="0 seconds"),
+        round_cols=("sum_amount",),
     )
 
 
@@ -213,36 +324,11 @@ def stream_tumble_sum_1h_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_recordbuffer_tumble_sum_1h_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        record_buffer_tumbling_stream,
-        run_to_memory,
-        ensure_replay_chunks,
-    )
-
-    name = f"streamrecbuf_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        max_us = max_chunk_t_us(chunks)
-        # sentinel pushes the closing watermark past every real 1h
-        # window; the final flush for keys with no rows in that batch
-        # rides the event-time timeout (no-data micro-batch)
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
-        agg = record_buffer_tumbling_stream(
-            read_replay_stream(spark, chunks), MS["h"]
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "sum_amount",
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: record_buffer_tumbling_stream(read(), MS["h"]),
+        round_cols=("sum_amount",),
     )
 
 
@@ -288,36 +374,14 @@ SELECT w_start, account_id, sum_amount FROM (
 def stream_recordbuffer_bounded_tumble_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        record_buffer_bounded_tumbling_stream,
-        run_to_memory,
-        ensure_replay_chunks,
-    )
-
-    name = f"streamwa4_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        max_us = max_chunk_t_us(chunks)
-        # terminal-flush gate: any watermark past the real events is
-        # the flush signal; the sentinel (7 days out) drives it there
-        flush_at_ms = max_us // 1000 + 1
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
-        agg = record_buffer_bounded_tumbling_stream(
-            read_replay_stream(spark, chunks), MS["h"], WA4_MAX_OPEN, flush_at_ms
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "sum_amount",
+    # terminal-flush gate: any watermark past the real events
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, max_us: record_buffer_bounded_tumbling_stream(
+            read(), MS["h"], WA4_MAX_OPEN, max_us // 1000 + 1
+        ),
+        round_cols=("sum_amount",),
     )
 
 
@@ -335,36 +399,16 @@ def stream_recordbuffer_bounded_tumble_replay(
     tags=("streaming", "dedup", "window", "parity"),
 )
 def stream_dedup_tumble_sum_1h_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        windowed_agg_stream,
-        ensure_replay_chunks,
-    )
-
-    name = f"streamdedup_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6, dup_every=7)
-        max_us = max_chunk_t_us(chunks)
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
+    def build(read, _):
         deduped = (
-            read_replay_stream(spark, chunks)
+            read()
             .withWatermark("event_time", "5 seconds")
             .dropDuplicatesWithinWatermark(["event_id"])
         )
-        agg = windowed_agg_stream(deduped, MS["h"], watermark=None)
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "sum_amount",
+        return windowed_agg_stream(deduped, MS["h"], watermark=None)
+
+    return _replay_face(
+        spark, sf_dir, build, round_cols=("sum_amount",), dup_every=7
     )
 
 
@@ -381,34 +425,60 @@ def stream_dedup_tumble_sum_1h_replay(spark: SparkSession, sf_dir: str) -> DataF
     tags=("streaming", "session", "parity"),
 )
 def stream_session_sum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        session_agg_stream,
-        ensure_replay_chunks,
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: session_agg_stream(
+            read(), 6 * MS["h"], watermark="0 seconds"
+        ),
+        sentinels=_SENTINEL_30D,
+        round_cols=("sum_amount",),
     )
 
-    name = f"streamsess_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        max_us = max_chunk_t_us(chunks)
-        # 30 days: past every possible 6h-gap session close.
-        append_sentinel_chunk(chunks, max_us + 30 * MS["d"] * 1000)
-        agg = session_agg_stream(
-            read_replay_stream(spark, chunks), 6 * MS["h"], watermark="0 seconds"
+
+def _click_purchase_join(read, click_ids, purchase_ids, how="inner") -> DataFrame:
+    """The 7-day click -> purchase stream-stream interval join over the
+    typed replay (event_type rides in the chunks; a per-batch broadcast
+    type join measured ~16% slower in bench.py). Sentinel rows carry no
+    event_type column, so they read as NULL and take the type of the
+    side whose sentinel ids they hold."""
+
+    def side(ids, etype):
+        s = read()
+        typ = F.coalesce("event_type", F.when(F.col("event_id").isin(*ids), etype))
+        return s.withColumn("etype", typ).where(F.col("etype") == etype)
+
+    c = (
+        side(click_ids, "click")
+        .select(
+            "account_id",
+            F.col("event_time").alias("c_time"),
+            F.col("event_id").alias("click_id"),
         )
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "sum_amount",
+        .withWatermark("c_time", "0 seconds")
+    )
+    p = (
+        side(purchase_ids, "purchase")
+        .select(
+            F.col("account_id").alias("p_user"),
+            F.col("event_time").alias("p_time"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("amount").alias("purchase_value"),
+        )
+        .withWatermark("p_time", "0 seconds")
+    )
+    return c.join(
+        p,
+        (F.col("account_id") == F.col("p_user"))
+        & (F.col("p_time") > F.col("c_time"))
+        & (F.col("p_time") <= F.col("c_time") + F.expr("INTERVAL 7 DAYS")),
+        how,
+    ).select(
+        "account_id",
+        "click_id",
+        "purchase_id",
+        (F.unix_millis("p_time") - F.unix_millis("c_time")).alias("lag_ms"),
+        "purchase_value",
     )
 
 
@@ -435,83 +505,13 @@ FROM events c JOIN events p
     tags=("streaming", "join", "interval", "parity"),
 )
 def stream_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        ensure_replay_chunks,
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: _click_purchase_join(read, (-1,), (-2,)),
+        sentinels=((30, (-1, -2)),),
+        with_event_type=True,
     )
-
-    name = f"streamivj_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        # r14 optimization round: event_type rides IN the replay payload
-        # (the same typed-chunk form bench.py's interval join measured
-        # ~16% faster) instead of a per-batch broadcast join of the full
-        # events projection — the static side of a stream-static join
-        # re-executes per micro-batch, so the join form paid an events
-        # scan + a ~100k-row broadcast build PER SIDE PER BATCH. The
-        # sentinel chunk carries no event_type column, so those rows
-        # read as NULL and take the coalesce branch exactly as the
-        # join form's unmatched -1/-2 ids did.
-        chunks = ensure_replay_chunks(
-            spark, sf_dir, scratch, n_chunks=6, with_event_type=True
-        )
-        max_us = max_chunk_t_us(chunks)
-        # one sentinel per join side: -1 plays 'click', -2 'purchase'
-        append_sentinel_chunk(chunks, max_us + 30 * 86_400_000_000, event_ids=(-1, -2))
-
-        def typed(side_sentinel: int, sentinel_type: str):
-            s = read_replay_stream(spark, chunks, with_event_type=True)
-            return s.withColumn(
-                "etype",
-                F.coalesce(
-                    "event_type",
-                    F.when(F.col("event_id") == side_sentinel, sentinel_type),
-                ),
-            )
-
-        c = (
-            typed(-1, "click")
-            .where(F.col("etype") == "click")
-            .select(
-                "account_id",
-                F.col("event_time").alias("c_time"),
-                F.col("event_id").alias("click_id"),
-            )
-            .withWatermark("c_time", "0 seconds")
-        )
-        p = (
-            typed(-2, "purchase")
-            .where(F.col("etype") == "purchase")
-            .select(
-                F.col("account_id").alias("p_user"),
-                F.col("event_time").alias("p_time"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("amount").alias("purchase_value"),
-            )
-            .withWatermark("p_time", "0 seconds")
-        )
-        joined = c.join(
-            p,
-            (F.col("account_id") == F.col("p_user"))
-            & (F.col("p_time") > F.col("c_time"))
-            & (F.col("p_time") <= F.col("c_time") + F.expr("INTERVAL 7 DAYS")),
-        ).select(
-            "account_id",
-            "click_id",
-            "purchase_id",
-            (F.unix_millis("p_time") - F.unix_millis("c_time")).alias("lag_ms"),
-            "purchase_value",
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(joined, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT)
 
 
 @register(
@@ -539,84 +539,14 @@ FROM c LEFT JOIN p
     tags=("streaming", "join", "interval", "outer", "parity"),
 )
 def stream_interval_join_left_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        ensure_replay_chunks,
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: _click_purchase_join(read, (-1, -3), (-2, -4), "left_outer"),
+        n_chunks=3,
+        sentinels=((30, (-1, -2)), (60, (-3, -4))),
+        with_event_type=True,
     )
-
-    name = f"streamlivj_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        # typed chunks instead of a per-batch broadcast type join —
-        # same rationale as stream_interval_join_replay (r14): sentinel
-        # rows carry no event_type column, read as NULL, and take the
-        # coalesce branch exactly as the join form's unmatched ids did.
-        chunks = ensure_replay_chunks(
-            spark, sf_dir, scratch, n_chunks=3, with_event_type=True
-        )
-        max_us = max_chunk_t_us(chunks)
-        # sentinel pair per batch, one id per join side (see docstring)
-        append_sentinel_chunk(
-            chunks, max_us + 30 * 86_400_000_000, event_ids=(-1, -2), seq=0
-        )
-        append_sentinel_chunk(
-            chunks, max_us + 60 * 86_400_000_000, event_ids=(-3, -4), seq=1
-        )
-
-        def typed(side_sentinels: tuple[int, int], sentinel_type: str):
-            s = read_replay_stream(spark, chunks, with_event_type=True)
-            return s.withColumn(
-                "etype",
-                F.coalesce(
-                    "event_type",
-                    F.when(F.col("event_id").isin(*side_sentinels), sentinel_type),
-                ),
-            )
-
-        c = (
-            typed((-1, -3), "click")
-            .where(F.col("etype") == "click")
-            .select(
-                "account_id",
-                F.col("event_time").alias("c_time"),
-                F.col("event_id").alias("click_id"),
-            )
-            .withWatermark("c_time", "0 seconds")
-        )
-        p = (
-            typed((-2, -4), "purchase")
-            .where(F.col("etype") == "purchase")
-            .select(
-                F.col("account_id").alias("p_user"),
-                F.col("event_time").alias("p_time"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("amount").alias("purchase_value"),
-            )
-            .withWatermark("p_time", "0 seconds")
-        )
-        joined = c.join(
-            p,
-            (F.col("account_id") == F.col("p_user"))
-            & (F.col("p_time") > F.col("c_time"))
-            & (F.col("p_time") <= F.col("c_time") + F.expr("INTERVAL 7 DAYS")),
-            "left_outer",
-        ).select(
-            "account_id",
-            "click_id",
-            "purchase_id",
-            (F.unix_millis("p_time") - F.unix_millis("c_time")).alias("lag_ms"),
-            "purchase_value",
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(joined, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT)
 
 
 @register(
@@ -633,34 +563,16 @@ def stream_interval_join_left_replay(spark: SparkSession, sf_dir: str) -> DataFr
     tags=("streaming", "window", "holistic", "parity"),
 )
 def stream_tumble_median_1h_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        windowed_agg_stream,
-        ensure_replay_chunks,
-    )
-
-    name = f"streammedian_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        max_us = max_chunk_t_us(chunks)
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
-        agg = windowed_agg_stream(
-            read_replay_stream(spark, chunks),
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: windowed_agg_stream(
+            read(),
             MS["h"],
             watermark="0 seconds",
             aggs=[F.expr("percentile(amount, 0.5)").alias("median_amount")],
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT)
+        ),
+    )
 
 
 @register(
@@ -682,35 +594,12 @@ def stream_tumble_median_1h_replay(spark: SparkSession, sf_dir: str) -> DataFram
     tags=("streaming", "window", "watermark", "parity"),
 )
 def stream_ooo_tumble_sum_1h_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        windowed_agg_stream,
-        ensure_replay_chunks,
-    )
-
-    name = f"streamooo_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(
-            spark, sf_dir, scratch, n_chunks=6, defer_tail_ms=6 * MS["h"]
-        )
-        max_us = max_chunk_t_us(chunks)
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
-        agg = windowed_agg_stream(
-            read_replay_stream(spark, chunks), MS["h"], watermark="6 hours"
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "sum_amount",
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: windowed_agg_stream(read(), MS["h"], watermark="6 hours"),
+        round_cols=("sum_amount",),
+        defer_tail_ms=6 * MS["h"],
     )
 
 
@@ -729,39 +618,18 @@ def stream_ooo_tumble_sum_1h_replay(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("streaming", "window", "sliding", "watermark", "parity"),
 )
 def stream_ooo_slide_mean_50s_10s_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        windowed_agg_stream,
-        ensure_replay_chunks,
-    )
-
-    name = f"streamooosl_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(
-            spark, sf_dir, scratch, n_chunks=6, defer_tail_ms=6 * MS["h"]
-        )
-        max_us = max_chunk_t_us(chunks)
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
-        agg = windowed_agg_stream(
-            read_replay_stream(spark, chunks),
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: windowed_agg_stream(
+            read(),
             50 * MS["s"],
             slide_ms=10 * MS["s"],
             watermark="6 hours",
             aggs=[F.avg("amount").alias("mean_amount")],
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "mean_amount",
+        ),
+        round_cols=("mean_amount",),
+        defer_tail_ms=6 * MS["h"],
     )
 
 
@@ -777,35 +645,13 @@ def stream_ooo_slide_mean_50s_10s_replay(spark: SparkSession, sf_dir: str) -> Da
     tags=("streaming", "session", "watermark", "parity"),
 )
 def stream_ooo_session_sum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        session_agg_stream,
-        ensure_replay_chunks,
-    )
-
-    name = f"streamoooss_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(
-            spark, sf_dir, scratch, n_chunks=6, defer_tail_ms=6 * MS["h"]
-        )
-        max_us = max_chunk_t_us(chunks)
-        append_sentinel_chunk(chunks, max_us + 30 * MS["d"] * 1000)
-        agg = session_agg_stream(
-            read_replay_stream(spark, chunks), 6 * MS["h"], watermark="6 hours"
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "sum_amount",
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: session_agg_stream(read(), 6 * MS["h"], watermark="6 hours"),
+        sentinels=_SENTINEL_30D,
+        round_cols=("sum_amount",),
+        defer_tail_ms=6 * MS["h"],
     )
 
 
@@ -824,37 +670,17 @@ def stream_ooo_session_sum_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("streaming", "window", "sliding", "parity"),
 )
 def stream_slide_mean_50s_10s_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        windowed_agg_stream,
-        ensure_replay_chunks,
-    )
-
-    name = f"streamslide_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        max_us = max_chunk_t_us(chunks)
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
-        agg = windowed_agg_stream(
-            read_replay_stream(spark, chunks),
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: windowed_agg_stream(
+            read(),
             50 * MS["s"],
             slide_ms=10 * MS["s"],
             watermark="0 seconds",
             aggs=[F.avg("amount").alias("mean_amount")],
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "mean_amount",
+        ),
+        round_cols=("mean_amount",),
     )
 
 
@@ -874,27 +700,12 @@ def stream_slide_mean_50s_10s_replay(spark: SparkSession, sf_dir: str) -> DataFr
     tags=("streaming", "detector", "stateful", "parity"),
 )
 def stream_running_sum_alerts_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        read_replay_stream,
-        run_to_memory,
-        running_sum_alerts_stream,
-        ensure_replay_chunks,
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: running_sum_alerts_stream(read(), 500.0),
+        sentinels=(),
     )
-
-    name = f"streamf5_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        # No sentinel: applyInPandasWithState with NoTimeout emits
-        # alerts in the micro-batch they occur — nothing waits on a
-        # closing watermark.
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        alerts = running_sum_alerts_stream(read_replay_stream(spark, chunks), 500.0)
-        with _bounded_state_partitions(spark):
-            run_to_memory(alerts, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name)
 
 
 @register(
@@ -912,21 +723,9 @@ def stream_running_sum_alerts_replay(spark: SparkSession, sf_dir: str) -> DataFr
     tags=("streaming", "detector", "pattern", "parity"),
 )
 def stream_pattern_rising_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import read_replay_stream, run_to_memory, ensure_replay_chunks
-    from ..streaming.stateful import pattern_rising_stream
-
-    name = f"streamcep_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        # No sentinel: NoTimeout, matches emit in the batch they complete.
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        out = pattern_rising_stream(read_replay_stream(spark, chunks))
-        with _bounded_state_partitions(spark):
-            run_to_memory(out, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name)
+    return _replay_face(
+        spark, sf_dir, lambda read, _: pattern_rising_stream(read()), sentinels=()
+    )
 
 
 @register(
@@ -949,16 +748,10 @@ FROM events GROUP BY 1, 2
     tags=("streaming", "rollup", "sink", "parity"),
 )
 def stream_continuous_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import read_replay_stream, ensure_replay_chunks
-    from ..streaming.rollup import read_rollup, run_continuous_rollup
-
-    name = f"streamrollup_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
+    with _scratch() as scratch:
         chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
         table_dir = os.path.join(scratch, "rollup")
-        with _bounded_state_partitions(spark):
+        with replay_state_confs(spark):
             run_continuous_rollup(
                 spark,
                 read_replay_stream(spark, chunks),
@@ -969,12 +762,9 @@ def stream_continuous_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFra
         # the bounded (days x accounts) result into executor block
         # storage, truncating lineage from the soon-removed files —
         # distributed materialization, no driver-side collect
-        # (VERDICT r7 residual nit #2)
         return _round6(
             read_rollup(spark, table_dir), "sum_amount"
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @register(
@@ -1002,17 +792,10 @@ FROM events GROUP BY 1
     tags=("streaming", "rollup", "sketch", "approx", "parity"),
 )
 def stream_users_sketch_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..fixtures import load
-    from ..streaming import read_replay_stream, ensure_replay_chunks
-    from ..streaming.rollup import read_sketch_rollup, run_users_sketch_rollup
-
-    name = f"streamsketch_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
+    with _scratch() as scratch:
         chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
         table_dir = os.path.join(scratch, "sketches")
-        with _bounded_state_partitions(spark):
+        with replay_state_confs(spark):
             run_users_sketch_rollup(
                 spark,
                 read_replay_stream(spark, chunks),
@@ -1041,8 +824,6 @@ def stream_users_sketch_rollup_replay(spark: SparkSession, sf_dir: str) -> DataF
         )
         # scratch table is deleted on return — materialize first
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @register(
@@ -1076,39 +857,17 @@ QUALIFY row_number() OVER (
     tags=("streaming", "union", "max_by", "parity"),
 )
 def stream_union_max_by_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        windowed_agg_stream,
-        ensure_replay_chunks,
-    )
-
-    name = f"streamunion_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        max_us = max_chunk_t_us(chunks)
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
+    def build(read, _):
         mean = [F.avg("amount").alias("mean_amount")]
         a = windowed_agg_stream(
-            read_replay_stream(spark, chunks), 5 * MS["m"], slide_ms=MS["m"],
-            watermark="0 seconds", aggs=mean,
+            read(), 5 * MS["m"], slide_ms=MS["m"], watermark="0 seconds", aggs=mean
         ).withColumn("src", F.lit("slide"))
         b = windowed_agg_stream(
-            read_replay_stream(spark, chunks), 5 * MS["m"],
-            watermark="0 seconds", aggs=mean,
+            read(), 5 * MS["m"], watermark="0 seconds", aggs=mean
         ).withColumn("src", F.lit("tumble"))
-        with _bounded_state_partitions(spark):
-            run_to_memory(a.unionByName(b), name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    u = spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT)
+        return a.unionByName(b)
+
+    u = _replay_face(spark, sf_dir, build)
     w = Window.partitionBy("account_id").orderBy(
         F.round("mean_amount", 6).desc(), F.col("w_start").asc(), F.col("src").asc()
     )
@@ -1137,33 +896,11 @@ def stream_union_max_by_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "sliding", "parity"),
 )
 def stream_paned_slide_sum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        paned_sliding_stream,
-        read_replay_stream,
-        run_to_memory,
-        ensure_replay_chunks,
-    )
-
-    name = f"streampaned_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        max_us = max_chunk_t_us(chunks)
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
-        agg = paned_sliding_stream(
-            read_replay_stream(spark, chunks), 50 * MS["s"], 10 * MS["s"]
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(agg, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "sum_amount",
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: paned_sliding_stream(read(), 50 * MS["s"], 10 * MS["s"]),
+        round_cols=("sum_amount",),
     )
 
 
@@ -1180,25 +917,12 @@ def stream_paned_slide_sum_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("streaming", "detector", "stateful", "parity"),
 )
 def stream_running_mean_alerts_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        read_replay_stream,
-        run_to_memory,
-        running_mean_alerts_stream,
-        ensure_replay_chunks,
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: running_mean_alerts_stream(read(), 90.0),
+        sentinels=(),
     )
-
-    name = f"streamf3_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        # No sentinel: NoTimeout, alerts emit in the batch they fire.
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        alerts = running_mean_alerts_stream(read_replay_stream(spark, chunks), 90.0)
-        with _bounded_state_partitions(spark):
-            run_to_memory(alerts, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name)
 
 
 @register(
@@ -1214,24 +938,9 @@ def stream_running_mean_alerts_replay(spark: SparkSession, sf_dir: str) -> DataF
     tags=("streaming", "detector", "stateful", "timeseries", "parity"),
 )
 def stream_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        ewma_stream,
-        read_replay_stream,
-        run_to_memory,
-        ensure_replay_chunks,
+    return _replay_face(
+        spark, sf_dir, lambda read, _: ewma_stream(read()), sentinels=()
     )
-
-    name = f"streamewma_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        out = ewma_stream(read_replay_stream(spark, chunks))
-        with _bounded_state_partitions(spark):
-            run_to_memory(out, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name)
 
 
 @register(
@@ -1251,35 +960,12 @@ def stream_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "trigger", "stateful", "parity"),
 )
 def stream_count_or_time_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        count_or_time_stream,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        ensure_replay_chunks,
-    )
-
-    name = f"streamt3_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        max_us = max_chunk_t_us(chunks)
-        # 30 days: past every real daily window, so the final segments
-        # of the last windows flush on the closing watermark
-        append_sentinel_chunk(chunks, max_us + 30 * MS["d"] * 1000)
-        segs = count_or_time_stream(
-            read_replay_stream(spark, chunks), 86_400_000, 3
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(segs, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return _round6(
-        spark.table(name).where(F.col("account_id") != SENTINEL_ACCOUNT),
-        "sum_amount",
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: count_or_time_stream(read(), 86_400_000, 3),
+        sentinels=_SENTINEL_30D,
+        round_cols=("sum_amount",),
     )
 
 
@@ -1307,44 +993,30 @@ WHERE e.value > r.threshold
     tags=("streaming", "detector", "join", "parity"),
 )
 def stream_dynamic_rules_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import read_replay_stream, run_to_memory, ensure_replay_chunks
-    from .detectors import type_threshold_rules
-
-    name = f"streamrules_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(
-            spark, sf_dir, scratch, n_chunks=6, with_event_type=True
-        )
-        # Materialize the rules frame once per run (r14): the static
-        # side of a stream-static join re-executes per micro-batch, so
-        # the un-materialized frame re-ran the full per-type p95
-        # aggregate over events SEVEN times per replay. The snapshot
-        # (built fresh from the parquet inputs each invocation, removed
-        # in finally) keeps the docstring's semantics — each batch
-        # still re-broadcasts the rules — while the rules themselves
-        # are computed once, as a real broadcast-state deployment would.
-        rules_path = os.path.join(scratch, "rules_snapshot")
+    with _scratch() as snap:
+        # The static side of a stream-static join re-executes per
+        # micro-batch, so the p95 rules are computed once per call into
+        # a snapshot; each batch still re-broadcasts them, as a real
+        # broadcast-state deployment would.
+        rules_path = os.path.join(snap, "rules_snapshot")
         type_threshold_rules(spark, sf_dir).write.parquet(rules_path)
         rules = spark.read.parquet(rules_path)
-        out = (
-            read_replay_stream(spark, chunks, with_event_type=True)
-            .join(F.broadcast(rules), "event_type")
-            .where(F.col("amount") > F.col("threshold"))
-            .select(
-                "account_id",
-                F.unix_millis("event_time").alias("t_ms"),
-                "event_type",
-                F.col("amount").cast("double").alias("amount"),
-                "threshold",
+
+        def build(read, _):
+            return (
+                read()
+                .join(F.broadcast(rules), "event_type")
+                .where(F.col("amount") > F.col("threshold"))
+                .select(
+                    "account_id",
+                    F.unix_millis("event_time").alias("t_ms"),
+                    "event_type",
+                    F.col("amount").cast("double").alias("amount"),
+                    "threshold",
+                )
             )
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(out, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name)
+
+        return _replay_face(spark, sf_dir, build, sentinels=(), with_event_type=True)
 
 
 @register(
@@ -1367,43 +1039,25 @@ def stream_dynamic_rules_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "text", "warehouse", "parity"),
 )
 def stream_bm25_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..fixtures import load
-    from .text import _probe_bm25_index, _write_bm25_segment, append_to_bm25_index
-
-    name = f"bm25ingest_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        docs = load(spark, sf_dir, "documents")
-        src = ensure_arrival_chunks(
-            scratch, f"documents-pmod3:{sf_dir}", _docs_pmod3_writer(docs)
-        )
-
+    docs = load(spark, sf_dir, "documents")
+    with _scratch() as scratch:
         idx = os.path.join(scratch, "idx")
 
         def sink(batch: DataFrame, _bid: int) -> None:
-            if batch.isEmpty():
-                return
             if os.path.isdir(os.path.join(idx, "postings")):
                 append_to_bm25_index(batch, idx)
             else:
                 _write_bm25_segment(batch, idx, "overwrite")
 
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        _ingest_face(
+            spark,
+            scratch,
+            docs,
+            f"documents-pmod3:{sf_dir}",
+            F.pmod(F.xxhash64("doc_id"), F.lit(3)),
+            sink,
         )
-        q.awaitTermination()
-        out = _probe_bm25_index(spark, idx)
-        rows = out.collect()  # bounded: BM25_TOP_K rows
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return _collected(_probe_bm25_index(spark, idx))  # bounded: BM25_TOP_K rows
 
 
 @register(
@@ -1432,70 +1086,57 @@ def stream_bm25_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "asof", "parity"),
 )
 def stream_asof_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..fixtures import load
-    from ..streaming import read_replay_stream, run_to_memory, ensure_replay_chunks
-
-    name = f"streamasof_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        per_user = (
-            load(spark, sf_dir, "orders")
-            .groupBy("o_custkey", "o_orderdate")
-            .agg(F.max("o_orderkey").alias("ok"))
-            .select(
-                F.col("o_custkey").alias("user_id"),
-                # unix_date: timezone-independent midnight epoch (the
-                # batch face's convention)
-                (
-                    F.unix_date(F.col("o_orderdate").cast("date")).cast("long")
-                    * F.lit(86_400_000).cast("long")
-                ).alias("o_ms"),
-                "ok",
-            )
-            .groupBy("user_id")
-            .agg(F.sort_array(F.collect_list(F.struct("o_ms", "ok"))).alias("arr"))
+    per_user = (
+        load(spark, sf_dir, "orders")
+        .groupBy("o_custkey", "o_orderdate")
+        .agg(F.max("o_orderkey").alias("ok"))
+        .select(
+            F.col("o_custkey").alias("user_id"),
+            # unix_date: timezone-independent midnight epoch (the
+            # batch face's convention)
+            (
+                F.unix_date(F.col("o_orderdate").cast("date")).cast("long")
+                * F.lit(86_400_000).cast("long")
+            ).alias("o_ms"),
+            "ok",
         )
-        # Materialize the dimension snapshot ONCE per face run (r14
-        # optimization round): the static side of a stream-static join
-        # re-executes per micro-batch, so the un-materialized frame
-        # paid the orders scan + both aggregations + the broadcast
-        # build SIX times per replay. Snapshotting it into the face's
-        # private scratch (computed fresh from the parquet inputs on
-        # every invocation, torn down in finally — nothing survives
-        # the run) leaves each micro-batch a tiny parquet read +
-        # broadcast, which is also what the docstring's "broadcast
-        # dimension snapshot" deployment actually does.
-        dim_path = os.path.join(scratch, "dim_snapshot")
+        .groupBy("user_id")
+        .agg(F.sort_array(F.collect_list(F.struct("o_ms", "ok"))).alias("arr"))
+    )
+    with _scratch() as snap:
+        # The static side of a stream-static join re-executes per
+        # micro-batch: snapshot the dimension once per call, leaving
+        # each batch a tiny parquet read + broadcast — what the
+        # docstring's "broadcast dimension snapshot" deployment does.
+        dim_path = os.path.join(snap, "dim_snapshot")
         per_user.write.parquet(dim_path)
-        per_user = spark.read.parquet(dim_path)
-        stream = read_replay_stream(spark, chunks).select(
-            "account_id",
-            "event_id",
-            (F.unix_micros("event_time") / 1000).cast("long").alias("t_ms"),
-        )
-        enriched = (
-            stream.join(
-                F.broadcast(per_user),
-                stream.account_id == per_user.user_id,
-                "left",
-            )
-            .withColumn("_hits", F.expr("filter(arr, x -> x.o_ms <= t_ms)"))
-            .select(
+        dim = spark.read.parquet(dim_path)
+
+        def build(read, _):
+            stream = read().select(
                 "account_id",
                 "event_id",
-                "t_ms",
-                F.expr(
-                    "CASE WHEN _hits IS NOT NULL AND size(_hits) > 0 "
-                    "THEN _hits[size(_hits) - 1].ok END"
-                ).alias("asof_orderkey"),
+                (F.unix_micros("event_time") / 1000).cast("long").alias("t_ms"),
             )
-        )
-        run_to_memory(enriched, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name)
+            return (
+                stream.join(
+                    F.broadcast(dim),
+                    stream.account_id == dim.user_id,
+                    "left",
+                )
+                .withColumn("_hits", F.expr("filter(arr, x -> x.o_ms <= t_ms)"))
+                .select(
+                    "account_id",
+                    "event_id",
+                    "t_ms",
+                    F.expr(
+                        "CASE WHEN _hits IS NOT NULL AND size(_hits) > 0 "
+                        "THEN _hits[size(_hits) - 1].ok END"
+                    ).alias("asof_orderkey"),
+                )
+            )
+
+        return _replay_face(spark, sf_dir, build, sentinels=())
 
 
 @register(
@@ -1519,45 +1160,21 @@ def stream_asof_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "pipeline", "dedup", "text", "parity"),
 )
 def stream_corpus_prep_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..fixtures import load
-    from .pipeline import corpus_report, merge_prep_segments, prep_segment
-
-    name = f"corpusingest_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        docs = load(spark, sf_dir, "documents")
-        src = ensure_arrival_chunks(
-            scratch, f"documents-pmod3:{sf_dir}", _docs_pmod3_writer(docs)
-        )
-
+    docs = load(spark, sf_dir, "documents")
+    with _scratch() as scratch:
         ledger = os.path.join(scratch, "ledger")
-
-        def sink(batch: DataFrame, bid: int) -> None:
-            if batch.isEmpty():
-                return
-            prep_segment(batch).write.mode("overwrite").parquet(
-                os.path.join(ledger, f"seg={bid}")
-            )
-
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        _ingest_face(
+            spark,
+            scratch,
+            docs,
+            f"documents-pmod3:{sf_dir}",
+            F.pmod(F.xxhash64("doc_id"), F.lit(3)),
+            _ledger_sink(ledger, prep_segment),
         )
-        q.awaitTermination()
         merged = merge_prep_segments(
             spark.read.parquet(ledger).drop("seg")
         ).select("n_copies", "attrs.lang", "attrs.n_tokens", "attrs.quality")
-        out = corpus_report(merged)
-        rows = out.collect()  # bounded: one row per language
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return _collected(corpus_report(merged))  # bounded: one row per language
 
 
 def _zorder_slice_oracle() -> str:
@@ -1592,55 +1209,24 @@ def _zorder_slice_oracle() -> str:
     tags=("streaming", "warehouse", "layout", "parity"),
 )
 def stream_zorder_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..fixtures import load
-    from .layout import ZORDER_BATCH_MOD, zorder_stream_sink
-
-    name = f"zingest_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        ev = load(spark, sf_dir, "events")
-        is_batch = (
-            F.pmod(F.col("event_id"), F.lit(ZORDER_BATCH_MOD))
-            == ZORDER_BATCH_MOD - 1
-        )
-        chunk = F.when(~is_batch, F.lit(0)).otherwise(
-            F.pmod(F.xxhash64("event_id"), F.lit(2)) + 1
-        )
-
-        def _zorder_writer(canon: str) -> None:
-            import time as _time
-
-            base_t = _time.time()
-            seen: set[str] = set()
-            for i in range(3):
-                ev.where(chunk == i).coalesce(1).write.mode("append").parquet(canon)
-                for f in os.listdir(canon):
-                    p = os.path.join(canon, f)
-                    if f.endswith(".parquet") and p not in seen:
-                        os.utime(p, (base_t + i, base_t + i))
-                        seen.add(p)
-
-        src = ensure_arrival_chunks(
-            scratch, f"zorder-events:{sf_dir}", _zorder_writer
-        )
-
+    ev = load(spark, sf_dir, "events")
+    is_batch = (
+        F.pmod(F.col("event_id"), F.lit(ZORDER_BATCH_MOD)) == ZORDER_BATCH_MOD - 1
+    )
+    chunk = F.when(~is_batch, F.lit(0)).otherwise(
+        F.pmod(F.xxhash64("event_id"), F.lit(2)) + 1
+    )
+    with _scratch() as scratch:
         asset = os.path.join(scratch, "ztable")
-        data = os.path.join(asset, "data")
-        sink = zorder_stream_sink(asset)
-
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        _ingest_face(
+            spark,
+            scratch,
+            ev,
+            f"zorder-events:{sf_dir}",
+            chunk,
+            zorder_stream_sink(asset),
         )
-        q.awaitTermination()
-
-        zed = spark.read.parquet(data)
+        zed = spark.read.parquet(os.path.join(asset, "data"))
         b = zed.agg(
             F.min("user_id").alias("u_min"),
             F.max("user_id").alias("u_max"),
@@ -1662,10 +1248,7 @@ def stream_zorder_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("value"), 6).alias("sum_value"),
             )
         )
-        rows = out.collect()  # bounded: one row per event_type
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return _collected(out)  # bounded: one row per event_type
 
 
 def _psi_oracle() -> str:
@@ -1695,120 +1278,51 @@ def _psi_oracle() -> str:
     tags=("streaming", "text", "eval", "parity"),
 )
 def stream_quality_psi_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..fixtures import load
-    from .text import (
-        PSI_BATCH_MOD,
-        psi_from_counts,
-        quality_buckets_over,
-    )
-
-    name = f"psiingest_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        docs = load(spark, sf_dir, "documents")
-        batch_docs = docs.where(
-            F.pmod(F.col("doc_id"), F.lit(PSI_BATCH_MOD)) == PSI_BATCH_MOD - 1
-        )
-
-        def _psi_writer(canon: str) -> None:
-            for i in range(3):
-                batch_docs.where(
-                    F.pmod(F.xxhash64("doc_id"), F.lit(3)) == i
-                ).coalesce(1).write.mode("append").parquet(canon)
-
-        src = ensure_arrival_chunks(
-            scratch, f"psi-batch-pmod3:{sf_dir}", _psi_writer
-        )
-
+    docs = load(spark, sf_dir, "documents")
+    in_batch = F.pmod(F.col("doc_id"), F.lit(PSI_BATCH_MOD)) == PSI_BATCH_MOD - 1
+    with _scratch() as scratch:
         ledger = os.path.join(scratch, "ledger")
-
-        def sink(b: DataFrame, bid: int) -> None:
-            if b.isEmpty():
-                return
-            (
-                quality_buckets_over(b)
+        _ingest_face(
+            spark,
+            scratch,
+            docs.where(in_batch),
+            f"psi-batch-pmod3:{sf_dir}",
+            F.pmod(F.xxhash64("doc_id"), F.lit(3)),
+            _ledger_sink(
+                ledger,
+                lambda b: quality_buckets_over(b)
                 .groupBy("bucket")
-                .agg(F.count("*").alias("n"))
-                .write.mode("overwrite")
-                .parquet(os.path.join(ledger, f"seg={bid}"))
-            )
-
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+                .agg(F.count("*").alias("n")),
+            ),
         )
-        q.awaitTermination()
-
         batch_counts = (
             spark.read.parquet(ledger)
             .groupBy("bucket")
             .agg(F.sum("n").alias("n_batch"))
         )
         base_counts = (
-            quality_buckets_over(
-                docs.where(
-                    F.pmod(F.col("doc_id"), F.lit(PSI_BATCH_MOD))
-                    != PSI_BATCH_MOD - 1
-                )
-            )
+            quality_buckets_over(docs.where(~in_batch))
             .groupBy("bucket")
             .agg(F.count("*").alias("n_base"))
         )
         counts = base_counts.join(batch_counts, "bucket", "full_outer")
-        out = psi_from_counts(counts)
-        rows = out.collect()  # bounded: PSI_BUCKETS rows
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return _collected(psi_from_counts(counts))  # bounded: PSI_BUCKETS rows
 
 
 def _stream_build_ivf(spark: SparkSession, sf_dir: str, scratch: str) -> str:
-    """Replay the embeddings as 3 arrival chunks through a file stream
-    whose foreachBatch bootstraps then appends the IVF index under the
-    frozen quantizer — the shared ingest plumbing of
-    stream_ivf_ingest_replay and stream_ivf_health_replay. Returns the
-    stream-built index path (centroids/ + lists/) inside `scratch`."""
-    import time as _time
-
-    from ..fixtures import load
-    from .similarity import (
-        IVF_CELLS,
-        _ivf_assigned,
-        _ivf_centroids,
-        _vectors_over,
-        append_to_ivf_index,
-    )
-
+    """Stream the embeddings' arrival split into an IVF index inside
+    `scratch`: the first batch trains the quantizer and writes the first
+    cell-partitioned lists segment, later batches append under the
+    frozen quantizer — the shared ingest of stream_ivf_ingest_replay and
+    stream_ivf_health_replay. Returns the index path."""
     emb = load(spark, sf_dir, "embeddings")
     chunk = F.when(F.col("vec_id") < IVF_CELLS, F.lit(0)).otherwise(
         F.pmod(F.xxhash64("vec_id"), F.lit(3))
     )
-
-    def _ivf_writer(canon: str) -> None:
-        base = _time.time()
-        seen: set[str] = set()
-        for i in range(3):
-            emb.where(chunk == i).coalesce(1).write.mode("append").parquet(canon)
-            for f in os.listdir(canon):
-                p = os.path.join(canon, f)
-                if f.endswith(".parquet") and p not in seen:
-                    os.utime(p, (base + i, base + i))
-                    seen.add(p)
-
-    src = ensure_arrival_chunks(scratch, f"ivf-emb:{sf_dir}", _ivf_writer)
-
     idx = os.path.join(scratch, "idx")
     cents_dir = os.path.join(idx, "centroids")
 
     def sink(batch: DataFrame, _bid: int) -> None:
-        if batch.isEmpty():
-            return
         vecs = _vectors_over(batch)
         if not os.path.isdir(cents_dir):
             cents = _ivf_centroids(vecs)
@@ -1819,16 +1333,7 @@ def _stream_build_ivf(spark: SparkSession, sf_dir: str, scratch: str) -> str:
         else:
             append_to_ivf_index(vecs, idx)
 
-    q = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _ingest_face(spark, scratch, emb, f"ivf-emb:{sf_dir}", chunk, sink)
     return idx
 
 
@@ -1852,17 +1357,10 @@ def _stream_build_ivf(spark: SparkSession, sf_dir: str, scratch: str) -> str:
     tags=("streaming", "similarity", "ann", "ivf", "warehouse", "parity"),
 )
 def stream_ivf_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _ivf_probes, _ivf_rerank, _vectors
-
-    name = f"ivfingest_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
+    with _scratch() as scratch:
         idx = _stream_build_ivf(spark, sf_dir, scratch)
-        cents_dir = os.path.join(idx, "centroids")
-
         e = _vectors(spark, sf_dir)
-        cents = spark.read.parquet(cents_dir)
+        cents = spark.read.parquet(os.path.join(idx, "centroids"))
         probes = _ivf_probes(e, cents)
         cells = sorted(
             {r["cell"] for r in probes.select("cell").distinct().collect()}
@@ -1870,11 +1368,7 @@ def stream_ivf_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         inv = spark.read.parquet(os.path.join(idx, "lists")).where(
             F.col("cell").isin(cells)
         )
-        out = _ivf_rerank(inv, probes)
-        rows = out.collect()  # bounded: N_QUERIES x TOP_K rows
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return _collected(_ivf_rerank(inv, probes))  # bounded: N_QUERIES x TOP_K
 
 
 def _ivf_health_oracle() -> str:
@@ -1905,22 +1399,13 @@ def _ivf_health_oracle() -> str:
     tags=("streaming", "similarity", "ann", "ivf", "eval", "parity"),
 )
 def stream_ivf_health_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import ivf_health_report
-
-    name = f"ivfhealth_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
+    with _scratch() as scratch:
         idx = _stream_build_ivf(spark, sf_dir, scratch)
         inv = spark.read.parquet(os.path.join(idx, "lists"))
         cents = spark.read.parquet(os.path.join(idx, "centroids")).select(
             "cell", "cv"
         )
-        out = ivf_health_report(inv, cents)
-        rows = out.collect()  # bounded: IVF_CELLS rows
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return _collected(ivf_health_report(inv, cents))  # bounded: IVF_CELLS rows
 
 
 def _stream_ivfpq_oracle() -> str:
@@ -1953,72 +1438,36 @@ def _stream_ivfpq_oracle() -> str:
     tags=("streaming", "similarity", "ann", "pq", "ivf", "warehouse", "parity"),
 )
 def stream_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from ..fixtures import load
-    from .pq import PQ_KS, _probe_ivfpq_index, append_to_ivfpq_index
-    from .similarity import (
-        IVF_CELLS,
-        _ivf_assigned,
-        _ivf_centroids,
-        _vectors_over,
+    emb = load(spark, sf_dir, "embeddings")
+    chunk = F.when(F.col("vec_id") < max(IVF_CELLS, PQ_KS), F.lit(0)).otherwise(
+        F.pmod(F.xxhash64("vec_id"), F.lit(3))
     )
-    from .pq import _codebook_from_vectors, _encoded_over
 
-    name = f"ivfpqingest_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        emb = load(spark, sf_dir, "embeddings")
-        train_n = max(IVF_CELLS, PQ_KS)
-        chunk = F.when(F.col("vec_id") < train_n, F.lit(0)).otherwise(
-            F.pmod(F.xxhash64("vec_id"), F.lit(3))
+    def build_base(tmp: str, vecs: DataFrame) -> None:
+        cb = _codebook_from_vectors(vecs)
+        cents = _ivf_centroids(vecs)
+        cents.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
+        rows = [
+            (m, c, cb[m][c])
+            for m in range(len(cb))
+            for c in range(len(cb[0]))
+        ]
+        spark.createDataFrame(
+            rows, "m INT, code INT, cv ARRAY<DOUBLE>"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(tmp, "codebook")
         )
+        assigned = _ivf_assigned(vecs, cents).select("vec_id", "cell")
+        _encoded_over(vecs, cb).join(assigned, "vec_id").write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(os.path.join(tmp, "codes"))
 
-        def _ivfpq_writer(canon: str) -> None:
-            base = _time.time()
-            seen: set[str] = set()
-            for i in range(3):
-                emb.where(chunk == i).coalesce(1).write.mode("append").parquet(
-                    canon
-                )
-                for f in os.listdir(canon):
-                    p = os.path.join(canon, f)
-                    if f.endswith(".parquet") and p not in seen:
-                        os.utime(p, (base + i, base + i))
-                        seen.add(p)
-
-        src = ensure_arrival_chunks(
-            scratch, f"ivfpq-emb:{sf_dir}", _ivfpq_writer
-        )
-
+    with _scratch() as scratch:
         idx = os.path.join(scratch, "idx")
-        cents_dir = os.path.join(idx, "centroids")
-
-        def build_base(tmp: str, vecs: DataFrame) -> None:
-            cb = _codebook_from_vectors(vecs)
-            cents = _ivf_centroids(vecs)
-            cents.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-            rows = [
-                (m, c, cb[m][c])
-                for m in range(len(cb))
-                for c in range(len(cb[0]))
-            ]
-            spark.createDataFrame(
-                rows, "m INT, code INT, cv ARRAY<DOUBLE>"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(tmp, "codebook")
-            )
-            assigned = _ivf_assigned(vecs, cents).select("vec_id", "cell")
-            _encoded_over(vecs, cb).join(assigned, "vec_id").write.mode(
-                "overwrite"
-            ).partitionBy("cell").parquet(os.path.join(tmp, "codes"))
 
         def sink(batch: DataFrame, _bid: int) -> None:
-            if batch.isEmpty():
-                return
             vecs = _vectors_over(batch)
-            if not os.path.isdir(cents_dir):
+            if not os.path.isdir(os.path.join(idx, "centroids")):
                 # Bootstrap: the chunk-0 base asset (quantizer training +
                 # first codes segment) is a deterministic function of the
                 # fixture, so it rides the content-keyed build-once
@@ -2039,22 +1488,9 @@ def stream_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             else:
                 append_to_ivfpq_index(vecs, idx)
 
-        q = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+        _ingest_face(spark, scratch, emb, f"ivfpq-emb:{sf_dir}", chunk, sink)
         out = _probe_ivfpq_index(spark, sf_dir, idx)
-        rows = out.collect()  # bounded: N_QUERIES x TOP_K rows
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return _collected(out)  # bounded: N_QUERIES x TOP_K rows
 
 
 def _stream_semdedup_oracle() -> str:
@@ -2103,57 +1539,19 @@ def _stream_semdedup_oracle() -> str:
     ),
 )
 def stream_semdedup_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..fixtures import load
-    from .similarity import (
-        _semdedup_batch_mask,
-        _vectors_over,
-        append_to_semdedup_index,
-        semdedup_verdict_from_index,
-        write_semdedup_base,
+    emb = load(spark, sf_dir, "embeddings")
+    # chunk 0 = the base split (the quantizer's training sample — a
+    # deployment trains before any appends exist); the batch-mask
+    # vectors split into two later arrival chunks
+    chunk = F.when(~_semdedup_batch_mask(), F.lit(0)).otherwise(
+        F.when(F.pmod(F.col("vec_id"), F.lit(16)) == 7, F.lit(1)).otherwise(F.lit(2))
     )
-
-    name = f"semdedupingest_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        emb = load(spark, sf_dir, "embeddings")
-
-        def _emb_writer(canon: str) -> None:
-            import time as _time
-
-            # chunk 0 = the base split (the quantizer's training
-            # sample — a deployment trains before any appends exist);
-            # the batch-mask vectors split into two later arrival
-            # chunks
-            chunk = F.when(~_semdedup_batch_mask(), F.lit(0)).otherwise(
-                F.when(
-                    F.pmod(F.col("vec_id"), F.lit(16)) == 7, F.lit(1)
-                ).otherwise(F.lit(2))
-            )
-            base = _time.time()
-            seen: set[str] = set()
-            for i in range(3):
-                emb.where(chunk == i).coalesce(1).write.mode("append").parquet(
-                    canon
-                )
-                for f in os.listdir(canon):
-                    p = os.path.join(canon, f)
-                    if f.endswith(".parquet") and p not in seen:
-                        os.utime(p, (base + i, base + i))
-                        seen.add(p)
-
-        src = ensure_arrival_chunks(
-            scratch, f"semdedup-ingest:{sf_dir}", _emb_writer
-        )
-
+    with _scratch() as scratch:
         idx = os.path.join(scratch, "idx")
-        cents_dir = os.path.join(idx, "centroids")
 
         def sink(batch: DataFrame, _bid: int) -> None:
-            if batch.isEmpty():
-                return
             vecs = _vectors_over(batch).select("vec_id", "v")
-            if not os.path.isdir(cents_dir):
+            if not os.path.isdir(os.path.join(idx, "centroids")):
                 # Bootstrap base asset via the content-keyed
                 # build-once lifecycle (VERDICT r10 #4; see the
                 # IVFPQ ingest twin) — the Lloyd train + base×base
@@ -2170,22 +1568,9 @@ def stream_semdedup_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame
             else:
                 append_to_semdedup_index(vecs, idx)
 
-        q = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+        _ingest_face(spark, scratch, emb, f"semdedup-ingest:{sf_dir}", chunk, sink)
         out = semdedup_verdict_from_index(spark, idx)
-        rows = out.collect()  # bounded: one row per corpus vector
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return _collected(out)  # bounded: one row per corpus vector
 
 
 TS_PATTERN_THRESHOLD = 1.5
@@ -2206,26 +1591,12 @@ TS_PATTERN_THRESHOLD = 1.5
     tags=("streaming", "timeseries", "similarity", "detector", "stateful", "parity"),
 )
 def stream_ts_pattern_alerts_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        read_replay_stream,
-        run_to_memory,
-        ts_pattern_stream,
-        ensure_replay_chunks,
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: ts_pattern_stream(read(), TS_PATTERN_THRESHOLD),
+        sentinels=(),
     )
-
-    name = f"streamtspat_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        out = ts_pattern_stream(
-            read_replay_stream(spark, chunks), TS_PATTERN_THRESHOLD
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(out, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name)
 
 
 @register(
@@ -2247,17 +1618,8 @@ def stream_ts_pattern_alerts_replay(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("streaming", "temporal", "cdc", "parity"),
 )
 def stream_cdc_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import read_replay_stream, run_to_memory, ensure_replay_chunks
-
-    name = f"streamcdc_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(
-            spark, sf_dir, scratch, n_chunks=6, with_event_type=True
-        )
-        src = read_replay_stream(spark, chunks, with_event_type=True)
-        ch = src.select(
+    def build(read, _):
+        ch = read().select(
             F.col("account_id").alias("user_id"),
             # rank on ms (the oracle's epoch_ms grain), not the raw
             # microsecond event_time: two changes inside the same ms
@@ -2269,26 +1631,27 @@ def stream_cdc_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("U"))
             .alias("op"),
         )
-        st = ch.groupBy("user_id").agg(
+        return ch.groupBy("user_id").agg(
             F.max_by(
                 F.struct("value", "op", "t_ms"),
                 F.struct("t_ms", "event_id"),
             ).alias("last"),
             F.count("*").cast("long").alias("n_changes"),
         )
-        with _bounded_state_partitions(spark):
-            run_to_memory(st, name, output_mode="complete")
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return (
-        spark.table(name)
-        .where(F.col("last.op") == "U")
-        .select(
-            "user_id",
-            F.col("last.value").alias("cur_value"),
-            F.col("last.t_ms").alias("updated_ms"),
-            "n_changes",
-        )
+
+    st = _replay_face(
+        spark,
+        sf_dir,
+        build,
+        sentinels=(),
+        output_mode="complete",
+        with_event_type=True,
+    )
+    return st.where(F.col("last.op") == "U").select(
+        "user_id",
+        F.col("last.value").alias("cur_value"),
+        F.col("last.t_ms").alias("updated_ms"),
+        "n_changes",
     )
 
 
@@ -2308,34 +1671,15 @@ def stream_cdc_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "temporal", "scd2", "stateful", "parity"),
 )
 def stream_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        scd2_stream,
-        ensure_replay_chunks,
+    # flush one day past the last real event; the sentinel sits a
+    # further 6 days out, so the closing watermark provably crosses
+    # the flush threshold and the open heads emit exactly once
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, max_us: scd2_stream(read(), max_us // 1000 + MS["d"]),
+        key="user_id",
     )
-    from .windows import MS
-
-    name = f"streamscd2_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
-        max_us = max_chunk_t_us(chunks)
-        # flush one day past the last real event; the sentinel sits a
-        # further 6 days out, so the closing watermark provably crosses
-        # the flush threshold and the open heads emit exactly once
-        flush_at_ms = max_us // 1000 + MS["d"]
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
-        out = scd2_stream(read_replay_stream(spark, chunks), flush_at_ms)
-        with _bounded_state_partitions(spark):
-            run_to_memory(out, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name).where(F.col("user_id") != SENTINEL_ACCOUNT)
 
 
 @register(
@@ -2354,28 +1698,13 @@ def stream_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "temporal", "join", "asof", "stateful", "parity"),
 )
 def stream_temporal_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        read_replay_stream,
-        run_to_memory,
-        temporal_join_stream,
-        ensure_replay_chunks,
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, _: temporal_join_stream(read()),
+        sentinels=(),
+        with_event_type=True,
     )
-
-    name = f"streamtpj_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(
-            spark, sf_dir, scratch, n_chunks=6, with_event_type=True
-        )
-        out = temporal_join_stream(
-            read_replay_stream(spark, chunks, with_event_type=True)
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(out, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name)
 
 
 @register(
@@ -2393,35 +1722,13 @@ def stream_temporal_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "temporal", "scd2", "cdc", "stateful", "parity"),
 )
 def stream_scd2_tombstoned_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import (
-        SENTINEL_ACCOUNT,
-        append_sentinel_chunk,
-        max_chunk_t_us,
-        read_replay_stream,
-        run_to_memory,
-        scd2_tombstoned_stream,
-        ensure_replay_chunks,
+    return _replay_face(
+        spark,
+        sf_dir,
+        lambda read, max_us: scd2_tombstoned_stream(read(), max_us // 1000 + MS["d"]),
+        key="user_id",
+        with_event_type=True,
     )
-    from .windows import MS
-
-    name = f"streamscd2t_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        chunks = ensure_replay_chunks(
-            spark, sf_dir, scratch, n_chunks=6, with_event_type=True
-        )
-        max_us = max_chunk_t_us(chunks)
-        flush_at_ms = max_us // 1000 + MS["d"]
-        append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
-        out = scd2_tombstoned_stream(
-            read_replay_stream(spark, chunks, with_event_type=True), flush_at_ms
-        )
-        with _bounded_state_partitions(spark):
-            run_to_memory(out, name)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return spark.table(name).where(F.col("user_id") != SENTINEL_ACCOUNT)
 
 
 @register(
@@ -2451,39 +1758,17 @@ FROM c ORDER BY n DESC, tok ASC LIMIT 20
     tags=("streaming", "text", "sketch", "approx", "parity"),
 )
 def stream_mg_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..fixtures import load
-    from .text import MG_COUNTERS, MG_TOP, mg_summary_over
-    from pyspark.sql import Window
-
-    name = f"mgingest_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        docs = load(spark, sf_dir, "documents")
-        src = ensure_arrival_chunks(
-            scratch, f"documents-pmod3:{sf_dir}", _docs_pmod3_writer(docs)
-        )
-
+    docs = load(spark, sf_dir, "documents")
+    with _scratch() as scratch:
         ledger = os.path.join(scratch, "ledger")
-
-        def sink(b: DataFrame, bid: int) -> None:
-            if b.isEmpty():
-                return
-            mg_summary_over(b).write.mode("overwrite").parquet(
-                os.path.join(ledger, f"seg={bid}")
-            )
-
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        _ingest_face(
+            spark,
+            scratch,
+            docs,
+            f"documents-pmod3:{sf_dir}",
+            F.pmod(F.xxhash64("doc_id"), F.lit(3)),
+            _ledger_sink(ledger, mg_summary_over),
         )
-        q.awaitTermination()
-
         est = (
             spark.read.parquet(ledger)
             .groupBy("tok")
@@ -2512,10 +1797,7 @@ def stream_mg_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "est_within_bound"
             ),
         )
-        rows = out.collect()  # bounded: MG_TOP rows; scratch dies below
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return _collected(out)  # bounded: MG_TOP rows
 
 
 # ---------------------------------------------------- graph edge ingestion
@@ -2553,56 +1835,17 @@ def _graph_oracle() -> str:
     tags=("streaming", "graph", "iterative", "parity"),
 )
 def stream_pagerank_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .graph import _ENTITY, _pagerank_iterate, _trade_pairs
-
-    name = f"pringest_{uuid.uuid4().hex[:8]}"
-    scratch = os.path.join(_SCRATCH_ROOT, name)
-    os.makedirs(scratch, exist_ok=True)
-    try:
-        pairs = _trade_pairs(spark, sf_dir)
-
-        def _pairs_writer(canon: str) -> None:
-            import time as _time
-
-            base_t = _time.time()
-            seen: set[str] = set()
-            # strictly ascending mtimes per chunk (the
-            # ensure_replay_chunks rule): FileStreamSource orders
-            # same-mtime files arbitrarily
-            for i in range(3):
-                pairs.where(
-                    F.pmod(F.xxhash64("a", "b"), F.lit(3)) == i
-                ).coalesce(1).write.mode("append").parquet(canon)
-                for f in os.listdir(canon):
-                    p = os.path.join(canon, f)
-                    if f.endswith(".parquet") and p not in seen:
-                        os.utime(p, (base_t + i, base_t + i))
-                        seen.add(p)
-
-        src = ensure_arrival_chunks(
-            scratch, f"pagerank-pairs:{sf_dir}", _pairs_writer
-        )
-
+    pairs = _trade_pairs(spark, sf_dir)
+    with _scratch() as scratch:
         edges_dir = os.path.join(scratch, "edges")
-
-        def sink(batch: DataFrame, bid: int) -> None:
-            if batch.isEmpty():
-                return
-            batch.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(edges_dir, f"seg={bid}")
-            )
-
-        q = (
-            spark.readStream.schema(pairs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        _ingest_face(
+            spark,
+            scratch,
+            pairs,
+            f"pagerank-pairs:{sf_dir}",
+            F.pmod(F.xxhash64("a", "b"), F.lit(3)),
+            _ledger_sink(edges_dir, lambda b: b.coalesce(1)),
         )
-        q.awaitTermination()
-
         ingested = spark.read.parquet(edges_dir).select("a", "b")
         _, ranks = _pagerank_iterate(ingested)
         out = ranks.select(
@@ -2611,7 +1854,4 @@ def stream_pagerank_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame
             (F.col("node_id") / F.lit(2)).cast("long").alias("entity_key"),
             F.round("pr", 6).alias("pagerank"),
         )
-        rows = out.collect()  # bounded: O(nodes) rank rows; scratch dies below
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        return _collected(out)  # bounded: O(nodes) rank rows

@@ -18,6 +18,7 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -27,8 +28,25 @@ ROCKSDB_PROVIDER = (
 )
 
 
+def env_int(name: str, default: int) -> int:
+    """Integer environment knob that fails soft: an unset variable gives
+    `default`, and a malformed one logs a warning and gives `default`
+    instead of raising (several knobs are read at import time, where a
+    raise would take the whole query registry down)."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        logging.getLogger(__name__).warning(
+            "ignoring malformed %s=%r; using %d", name, raw, default
+        )
+        return default
+
+
 def default_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return env_int("SPARK_GRAFT_CPUS", 32)
 
 
 def rocksdb_tuning() -> dict[str, str]:

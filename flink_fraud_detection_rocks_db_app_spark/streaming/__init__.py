@@ -21,12 +21,14 @@ from .rollup import (  # noqa: F401
     run_continuous_rollup,
 )
 from .replay import (  # noqa: F401
+    REPLAY_STATE_PARTITIONS,
     SENTINEL_ACCOUNT,
     append_sentinel_chunk,
     ensure_replay_chunks,
     max_chunk_t_us,
     read_replay_batch,
     read_replay_stream,
+    replay_state_confs,
     run_to_memory,
     write_replay_chunks,
 )

@@ -21,12 +21,14 @@ from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..fixtures import load
+from ..session import env_int, rocksdb_tuning
 
 # Chunks carry the event time as a raw microsecond long (t_us): parquet
 # timestamp logical types round-trip inconsistently between pandas and
@@ -545,6 +547,52 @@ def read_replay_batch(spark: SparkSession, chunks_dir: str) -> DataFrame:
         "amount",
         "event_id",
     )
+
+
+# Each shuffle partition of a stateful stream is a state-store instance
+# paying open/commit per micro-batch, so at replay density few
+# instances amortize best: 8 -> 4 cut bench.py's tumbling stream ~25%
+# and three replay faces 6.37 -> 5.23 s, 8.37 -> 8.03 s and
+# 10.42 -> 8.02 s (OPTIMIZATION_r14.md). On a cluster, size it to the
+# executor count through the environment.
+REPLAY_STATE_PARTITIONS = env_int("SPARK_GRAFT_REPLAY_STATE_PARTITIONS", 4)
+
+
+@contextmanager
+def replay_state_confs(spark: SparkSession):
+    """Session confs every replay stream runs under, restored to their
+    previous values (or unset) on exit, even on failure.
+
+    - `spark.sql.shuffle.partitions` = REPLAY_STATE_PARTITIONS: the
+      state partition count is fixed at query start, and a vanilla
+      session's 200 partitions cost ~4x wall time on the sliding and
+      F5 replays for identical results.
+    - `rocksdb_tuning()` plus changelog checkpointing: commit ships the
+      per-batch delta instead of a full snapshot (tumble-sum face
+      6.59 -> 6.37 s, sketch rollup 12.59 -> 8.37 s, record-buffer
+      tumble 16.58 -> 10.42 s, OPTIMIZATION_r14.md)."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(REPLAY_STATE_PARTITIONS),
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
+            "true"
+        ),
+        **rocksdb_tuning(),
+    }
+    prev: dict[str, str | None] = {}
+    for k, v in confs.items():
+        try:
+            prev[k] = spark.conf.get(k)
+        except Exception:
+            prev[k] = None
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, old in prev.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
 
 
 def run_to_memory(sdf: DataFrame, name: str, output_mode: str = "append") -> dict:

@@ -22,7 +22,6 @@ a missed vectorization.
 from __future__ import annotations
 
 import json
-import os
 from typing import Iterator
 
 import numpy as np
@@ -30,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import env_int
 
 ALERT_SCHEMA = T.StructType(
     [
@@ -121,7 +122,7 @@ def _sorted_arrays(pdf_iter: Iterator[pd.DataFrame]):
 # check — so a checkpoint resumed under a different
 # SPARK_GRAFT_FOLD_BUCKETS fails loudly instead of silently serving
 # re-homed (wrong) fold state.
-N_FOLD_BUCKETS = int(os.environ.get("SPARK_GRAFT_FOLD_BUCKETS", "64"))
+N_FOLD_BUCKETS = env_int("SPARK_GRAFT_FOLD_BUCKETS", 64)
 
 # record_buffer_tumbling_stream state-format version: bump whenever the
 # grouping key or serialized state shape changes, so a checkpoint
@@ -676,73 +677,6 @@ def dedup_stream(stream: DataFrame, watermark: str = "5 seconds") -> DataFrame:
     """
     return stream.withWatermark("event_time", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
-    )
-
-
-# ------------------------------------------- transformWithState (Spark 4)
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf for its state
-    protocol; absent in this container (same gating pattern as the
-    Kafka connector)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_sum_alerts_tws(stream: DataFrame, threshold: float) -> DataFrame:
-    """F5 on the NEW Spark 4 stateful API (transformWithStateInPandas /
-    StatefulProcessor): typed ValueState per key instead of a state
-    tuple — the forward-looking replacement for applyInPandasWithState,
-    and the closest structural match to the reference's Flink
-    ValueState detector
-    (reference: workspace/frauddetection/src/main/java/spendreport/FraudDetector.java:29-46).
-    Semantics identical to running_sum_alerts_stream.
-
-    Raises RuntimeError when protobuf is unavailable (this container);
-    the applyInPandasWithState form is the supported path here.
-    """
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires the google.protobuf package; "
-            "install protobuf or use running_sum_alerts_stream instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningSumProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._sum = handle.getValueState(
-                "running_sum", T.StructType([T.StructField("s", T.DoubleType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            s = self._sum.get()[0] if self._sum.exists() else 0.0
-            out = []
-            t_ms, amounts = _sorted_arrays(rows)
-            for t, a in zip(t_ms, amounts):
-                s += a
-                if s > threshold:
-                    out.append((key[0], int(t), s))
-                    s = 0.0
-            self._sum.update((s,))
-            if out:
-                yield pd.DataFrame(out, columns=["account_id", "t_ms", "agg_value"])
-
-        def close(self) -> None:
-            pass
-
-    return _with_epoch(stream).groupBy("account_id").transformWithStateInPandas(
-        RunningSumProcessor(),
-        outputStructType=ALERT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
     )
 
 

@@ -60,13 +60,11 @@ def _run_scd2(
     spark, sf_dir: str, scratch: str, k: int, fresh_keys: bool, skew: float = 0.0
 ) -> dict:
     from flink_fraud_detection_rocks_db_app_spark.fixtures import transactions
-    from flink_fraud_detection_rocks_db_app_spark.operators.streamface import (
-        _bounded_state_partitions,
-    )
     from flink_fraud_detection_rocks_db_app_spark.operators.windows import MS
     from flink_fraud_detection_rocks_db_app_spark.streaming import (
         append_sentinel_chunk,
         read_replay_stream,
+        replay_state_confs,
         run_to_memory,
         scd2_stream,
         write_replay_chunks,
@@ -90,7 +88,7 @@ def _run_scd2(
     append_sentinel_chunk(chunks, max_us + 7 * MS["d"] * 1000)
     out = scd2_stream(read_replay_stream(spark, chunks), flush_at_ms)
     name = f"probe_scd2_{uuid.uuid4().hex[:8]}"
-    with _bounded_state_partitions(spark):
+    with replay_state_confs(spark):
         stats = run_to_memory(out, name)
     stats["out_rows"] = spark.table(name).count()
     spark.catalog.dropTempView(name)
@@ -100,11 +98,9 @@ def _run_scd2(
 def _run_temporal_join(
     spark, sf_dir: str, scratch: str, k: int, fresh_keys: bool, skew: float = 0.0
 ) -> dict:
-    from flink_fraud_detection_rocks_db_app_spark.operators.streamface import (
-        _bounded_state_partitions,
-    )
     from flink_fraud_detection_rocks_db_app_spark.streaming import (
         read_replay_stream,
+        replay_state_confs,
         run_to_memory,
         temporal_join_stream,
         write_replay_chunks,
@@ -124,7 +120,7 @@ def _run_temporal_join(
         read_replay_stream(spark, chunks, with_event_type=True)
     )
     name = f"probe_tpj_{uuid.uuid4().hex[:8]}"
-    with _bounded_state_partitions(spark):
+    with replay_state_confs(spark):
         stats = run_to_memory(out, name)
     stats["out_rows"] = spark.table(name).count()
     spark.catalog.dropTempView(name)

@@ -126,6 +126,46 @@ def test_session_timezone_is_utc(spark):
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
+def test_env_int_fails_soft(monkeypatch, caplog):
+    """Integer env knobs: valid values parse as before, a malformed one
+    logs a warning and yields the default instead of raising — the
+    replay state-partition knob is read at import time, where a raise
+    took the whole registry down."""
+    import os
+    import subprocess
+    import sys
+
+    from flink_fraud_detection_rocks_db_app_spark.session import env_int
+
+    knob = "SPARK_GRAFT_TEST_KNOB"
+    monkeypatch.delenv(knob, raising=False)
+    assert env_int(knob, 4) == 4
+    monkeypatch.setenv(knob, "12")
+    assert env_int(knob, 4) == 12
+    monkeypatch.setenv(knob, "four")
+    with caplog.at_level("WARNING"):
+        assert env_int(knob, 4) == 4
+    assert knob in caplog.text
+
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_STATE_PARTITIONS", "4x")
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from flink_fraud_detection_rocks_db_app_spark.registry import "
+            "all_queries; "
+            "from flink_fraud_detection_rocks_db_app_spark.streaming import "
+            "REPLAY_STATE_PARTITIONS as n; "
+            "print(len(all_queries()), n)",
+        ],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.split()[-1] == "4"
+
+
 def test_ts_normalization_matches_duckdb_epoch_us(spark, duck):
     got = {
         r.event_id: r.ts

@@ -257,40 +257,6 @@ def test_streaming_dedup_drops_replayed_rows(spark, scratch):
     assert got == want, (len(got), len(want))
 
 
-def test_transform_with_state_equals_apply_in_pandas(spark, scratch):
-    """The Spark 4 StatefulProcessor port of F5 must produce exactly
-    the same alerts as the applyInPandasWithState form and the batch
-    fold (three implementations, one semantics). Skips (with the gate
-    asserted) when google.protobuf is absent — this container."""
-    import pytest
-
-    from flink_fraud_detection_rocks_db_app_spark.streaming import (
-        running_sum_alerts_batch,
-    )
-    from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import (
-        running_sum_alerts_tws,
-        tws_available,
-    )
-
-    chunks = write_replay_chunks(spark, SF_SMALL, scratch, n_chunks=4)
-    if not tws_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            running_sum_alerts_tws(read_replay_stream(spark, chunks), 500.0)
-        pytest.skip("google.protobuf not available in this environment")
-    alerts = running_sum_alerts_tws(read_replay_stream(spark, chunks), 500.0)
-    run_to_memory(alerts, "t_tws")
-    got = sorted(tuple(r) for r in spark.table("t_tws").collect())
-    want = sorted(
-        tuple(r)
-        for r in running_sum_alerts_batch(
-            transactions_with_id(spark, SF_SMALL), 500.0
-        ).collect()
-    )
-    assert len(got) > 0
-    assert [g[:2] for g in got] == [w[:2] for w in want]
-    assert all(abs(g[2] - w[2]) < 1e-9 for g, w in zip(got, want))
-
-
 def test_stream_stream_interval_join_left_outer(spark, scratch):
     """LEFT OUTER stream-stream interval join: matched pairs must agree
     with the batch interval join; clicks with no purchase inside the
@@ -626,3 +592,37 @@ def test_ingest_replay_faces_leave_no_cross_run_result_assets(spark):
     sem = all_queries()["stream_semdedup_ingest_replay"].fn(spark, SF_SMALL)
     assert sem.count() > 0
     assert persistent_dirs() == before == set()
+
+
+def test_replay_faces_leave_session_clean(spark):
+    """Replay faces release everything they create: the memory-sink view
+    is dropped before the face returns (the returned frame keeps its
+    analysed plan and stays usable), no streaming query stays active,
+    and the per-call scratch directory is gone. Three harness shapes:
+    sentinel + rounding, no sentinel, complete output mode."""
+    import os
+
+    from flink_fraud_detection_rocks_db_app_spark.operators.streamface import (
+        _SCRATCH_ROOT,
+    )
+    from flink_fraud_detection_rocks_db_app_spark.registry import all_queries
+
+    # the process-scoped replay-chunk cache is meant to outlive a face
+    chunk_cache = f"replay-cache-{os.getpid()}"
+
+    def scratch_entries():
+        if not os.path.isdir(_SCRATCH_ROOT):
+            return set()
+        return set(os.listdir(_SCRATCH_ROOT)) - {chunk_cache}
+
+    tables = {t.name for t in spark.catalog.listTables()}
+    before = scratch_entries()
+    for name in (
+        "stream_tumble_sum_1h_replay",
+        "stream_running_sum_alerts_replay",
+        "stream_cdc_upsert_replay",
+    ):
+        assert all_queries()[name].fn(spark, SF_SMALL).count() > 0, name
+    assert {t.name for t in spark.catalog.listTables()} == tables
+    assert spark.streams.active == []
+    assert scratch_entries() == before
