@@ -16,12 +16,22 @@ cover the same semantics independently.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..fixtures import transactions_with_id
 from ..registry import register
-from ..streaming.stateful import running_mean_alerts_batch, running_sum_alerts_batch
+from ..streaming.stateful import (
+    EWMA_SCHEMA,
+    capped_session_rows,
+    ewma_rows,
+    running_mean_alerts_batch,
+    running_sum_alerts_batch,
+    sorted_account_fold,
+)
 
 
 def count_or_time_segments(
@@ -195,23 +205,9 @@ def ewma_batch(df: DataFrame, alpha: float) -> DataFrame:
     """Per-key exponentially weighted moving average, seeded with the
     key's first value: ewma_1 = x_1; ewma_i = a*x_i + (1-a)*ewma_{i-1}.
     The classic adaptive-baseline smoother for fraud amounts — one
-    float of state per key forever. Same bucketed fold as F3/F5;
+    float of state per key forever. Same sorted-account fold as F3/F5;
     identical IEEE op order per key makes the oracle bit-exact."""
-    from ..streaming.stateful import _bucketed_fold
-
-    def fold_rows(keys, t_ms, amounts):
-        rows, cur, prev = [], None, 0.0
-        for k, t, a in zip(keys, t_ms, amounts):
-            if k != cur:
-                cur, prev = k, float(a)
-            else:
-                prev = alpha * float(a) + (1 - alpha) * prev
-            rows.append((int(k), int(t), prev))
-        return rows
-
-    return _bucketed_fold(df, fold_rows).select(
-        "account_id", "t_ms", F.col("agg_value").alias("ewma")
-    )
+    return sorted_account_fold(df, partial(ewma_rows, alpha=alpha), EWMA_SCHEMA)
 
 
 # Recursive-CTE oracle for the EWMA recursion — shared by the batch
@@ -256,6 +252,31 @@ def ewma_amount_per_account(spark: SparkSession, sf_dir: str) -> DataFrame:
 SESSION_CAP_GAP_MS = 2 * 86_400_000  # restart after a 2-day silence
 SESSION_CAP_MAX_MS = 5 * 86_400_000  # AND force-restart past a 5-day span
 
+_CAPPED_SESSION_SCHEMA = T.StructType(
+    [
+        T.StructField(name, T.LongType())
+        for name in (
+            "user_id",
+            "session_no",
+            "start_ms",
+            "end_ms",
+            "n_events",
+            "span_ms",
+        )
+    ]
+)
+
+
+def capped_sessions(df: DataFrame) -> DataFrame:
+    """One row per (account, session) under the gap + max-duration
+    rule: the sequential fold `capped_session_rows`."""
+    return sorted_account_fold(
+        df,
+        partial(capped_session_rows, gap_ms=SESSION_CAP_GAP_MS, max_ms=SESSION_CAP_MAX_MS),
+        _CAPPED_SESSION_SCHEMA,
+    )
+
+
 _CAPPED_SESSION_ORACLE = f"""
 WITH RECURSIVE e AS (
   SELECT user_id, epoch_ms(ts) AS t_ms,
@@ -294,58 +315,11 @@ FROM f GROUP BY 1, 2
     "makes the assignment a TRUE sequential fold (a restart point "
     "depends on every earlier restart), which plain gaps-and-islands "
     "cannot express; pure gap sessions stay declarative "
-    "(session_sum_user_6h). Spark side is the bucketed Arrow fold "
+    "(session_sum_user_6h). Spark side is the sorted-account Arrow fold "
     "(O(1) state per key, the F5 machinery); the oracle replays the "
     "identical per-key recursion as a recursive CTE — all-integer "
     "state, so the match is exact by construction.",
     tags=("session", "stateful", "window"),
 )
 def session_capped_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from ..streaming.stateful import N_FOLD_BUCKETS, _with_epoch
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["account_id", "t_us", "event_id"], kind="mergesort")
-        out = {}
-        last_t = {}
-        cur = {}
-        for a, t_us in zip(pdf["account_id"].to_numpy(), pdf["t_us"].to_numpy()):
-            a = int(a)
-            t = int(t_us) // 1000
-            st = cur.get(a)
-            if (
-                st is None
-                or t - last_t[a] > SESSION_CAP_GAP_MS
-                or t - st[1] > SESSION_CAP_MAX_MS
-            ):
-                sess_no = st[0] + 1 if st else 1
-                cur[a] = [sess_no, t]
-                out[(a, sess_no)] = [t, t, 0]
-            rec = out[(a, cur[a][0])]
-            rec[1] = t
-            rec[2] += 1
-            last_t[a] = t
-        rows = [
-            (a, sn, v[0], v[1], v[2], v[1] - v[0])
-            for (a, sn), v in sorted(out.items())
-        ]
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "user_id",
-                "session_no",
-                "start_ms",
-                "end_ms",
-                "n_events",
-                "span_ms",
-            ],
-        )
-
-    ev = _with_epoch(transactions_with_id(spark, sf_dir))
-    bucket = F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS))
-    return ev.groupBy(bucket.alias("_bucket")).applyInPandas(
-        fold,
-        "user_id long, session_no long, start_ms long, end_ms long, "
-        "n_events long, span_ms long",
-    )
+    return capped_sessions(transactions_with_id(spark, sf_dir))

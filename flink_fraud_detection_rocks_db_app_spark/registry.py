@@ -551,7 +551,7 @@ DRIVER_WINDOW: tuple[str, ...] = (
     # full-suite verified under the identical oracle (r11 queue)
     "stream_zorder_ingest_replay",
     # r7: running_mean_alerts_gt_90 (F3 batch) — its machinery is the
-    # shared `_bucketed_fold` (driver-gated below via
+    # shared `sorted_account_fold` (driver-gated below via
     # ewma_amount_per_account, which calls the identical helper) plus
     # the reset-on-alert threshold logic (driver-gated above via
     # stream_running_sum_alerts_replay's bit-exact recursive-CTE

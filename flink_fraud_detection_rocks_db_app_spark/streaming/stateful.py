@@ -10,6 +10,13 @@ Each has two implementations:
   (event_time, event_id)) used for goldens and by the driver's
   correctness gate.
 
+The streaming forms group by a hash bucket of the account
+(N_FOLD_BUCKETS) so Arrow transfer and state commits are paid per
+bucket, not per account. The batch forms run through
+`sorted_account_fold`: the JVM hash-partitions on the account and
+sorts within partitions, and one `mapInArrow` pass per partition folds
+the accounts in key order — Flink's key groups processed in key order.
+
 Scale: state is per-key and O(1) (F3/F5) or O(open windows) (F1/T3);
 keys hash-partition across executors exactly like the reference's
 keyBy, with no global locks (the anti-pattern at
@@ -22,6 +29,7 @@ a missed vectorization.
 from __future__ import annotations
 
 import json
+from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -100,20 +108,13 @@ def _sorted_arrays(pdf_iter: Iterator[pd.DataFrame]):
 # ----------------------------------------------------------------- F5 / F3
 
 
-# Batch folds group by a HASH BUCKET of the key, not the key itself:
-# per-group Arrow/pandas overhead is paid ~N_FOLD_BUCKETS times instead
-# of once per account, while the fold inside walks the bucket sorted by
-# (account_id, event_time, event_id) and resets at key changes — the
-# exact same per-key semantics. At cluster scale the bucket count IS
-# the fold family's parallelism ceiling (at most N_FOLD_BUCKETS
-# concurrent tasks regardless of cluster size — the SCALE.md r13
-# throughput table multiplies the per-core fold rate by exactly this
-# number), so it is a deployment knob: SPARK_GRAFT_FOLD_BUCKETS
-# overrides the default. Results are bucket-count-INVARIANT by
-# construction (buckets only group accounts; every fold sorts by
-# (account_id, t_us, event_id) and resets at key changes —
-# test_fold_output_invariant_under_bucket_count pins it), and stays
-# skew-free for hashed keys. One rule: a STREAMING checkpoint binds
+# The STREAMING folds group by a HASH BUCKET of the key, not the key
+# itself: per-group Arrow/pandas transfer and state-store commits are
+# paid ~N_FOLD_BUCKETS times per micro-batch instead of once per
+# account, while the fold inside walks the bucket sorted by
+# (account_id, event_time, event_id) and carries each account
+# independently — the exact same per-key semantics. The bucket is the
+# applyInPandasWithState grouping key, so a streaming checkpoint binds
 # the bucket count it was written under — resuming with a different
 # value would re-home accounts to other buckets' state. That rule is
 # ENFORCED, not just documented (ADVICE r13): the versioned state
@@ -121,7 +122,9 @@ def _sorted_arrays(pdf_iter: Iterator[pd.DataFrame]):
 # restore path raises on mismatch, exactly like the format-version
 # check — so a checkpoint resumed under a different
 # SPARK_GRAFT_FOLD_BUCKETS fails loudly instead of silently serving
-# re-homed (wrong) fold state.
+# re-homed (wrong) fold state. The BATCH folds do not use it: they run
+# through `sorted_account_fold`, whose parallelism is the shuffle
+# partition count (AQE-coalesced) like every other operator's.
 N_FOLD_BUCKETS = env_int("SPARK_GRAFT_FOLD_BUCKETS", 64)
 
 # record_buffer_tumbling_stream state-format version: bump whenever the
@@ -174,66 +177,148 @@ def _check_state_nb(blob_nb, op_name: str) -> None:
         )
 
 
-def _bucketed_fold(df: DataFrame, fold_rows) -> DataFrame:
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["account_id", "t_us", "event_id"], kind="mergesort")
-        keys = pdf["account_id"].to_numpy()
-        t_ms = (pdf["t_us"] // 1000).to_numpy()
-        amounts = pdf["amount"].to_numpy()
-        return pd.DataFrame(
-            fold_rows(keys, t_ms, amounts),
-            columns=["account_id", "t_ms", "agg_value"],
-        )
+def sorted_account_fold(
+    df: DataFrame, fold_rows, schema: T.StructType = ALERT_SCHEMA
+) -> DataFrame:
+    """Batch driver for the order-sensitive per-account folds.
 
-    bucket = F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS))
-    return _with_epoch(df).groupBy(bucket.alias("_bucket")).applyInPandas(
-        fold, ALERT_SCHEMA
+    `fold_rows(keys, t_ms, amounts)` walks three equal-length lists
+    sorted by (account_id, event_time, event_id), resets at key
+    changes, and returns row tuples in `schema`'s column order. The JVM
+    does all the ordering (hash-partition on the account, sort within
+    partitions); Python makes one `mapInArrow` pass per partition. An
+    account's rows may span Arrow batches (at most
+    spark.sql.execution.arrow.maxRecordsPerBatch rows each), so at each
+    batch boundary the trailing account's rows are held back and folded
+    together with their continuation: memory is one Arrow batch plus
+    one account's run. Output is invariant under the partition count
+    and the Arrow batch size (test_fold_output_invariant_under_partitioning)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def whole_accounts(batches):
+        held = []  # the trailing account's rows, possibly not yet complete
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            cols = [c.to_numpy(zero_copy_only=False) for c in batch.columns]
+            keys = cols[0]
+            cut = int(np.searchsorted(keys, keys[-1], "left"))
+            if cut == 0 and held and held[0][0][0] == keys[0]:
+                held.append(cols)  # the whole batch continues the held run
+                continue
+            yield held + [[c[:cut] for c in cols]]
+            held = [[c[cut:] for c in cols]]
+        if held:
+            yield held
+
+    def fold(batches):
+        for parts in whole_accounts(batches):
+            # Python lists, not numpy arrays: the per-row loop then steps
+            # over native ints and floats (same IEEE values, faster)
+            rows = fold_rows(*(np.concatenate(c).tolist() for c in zip(*parts)))
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)],
+                    schema=arrow_schema,
+                )
+
+    return (
+        df.repartition("account_id")
+        .sortWithinPartitions("account_id", "event_time", "event_id")
+        .select(
+            "account_id",
+            F.unix_millis("event_time").alias("t_ms"),  # floors, like // 1000
+            "amount",
+        )
+        .mapInArrow(fold, schema)
     )
+
+
+def running_sum_rows(keys, t_ms, amounts, threshold: float) -> list[tuple]:
+    """F5 fold body: per-key running sum; alert + reset when the sum
+    exceeds `threshold`."""
+    rows, cur, s = [], None, 0.0
+    for k, t, a in zip(keys, t_ms, amounts):
+        if k != cur:
+            cur, s = k, 0.0
+        s += a
+        if s > threshold:
+            rows.append((int(k), int(t), s))
+            s = 0.0
+    return rows
+
+
+def running_mean_rows(keys, t_ms, amounts, threshold: float) -> list[tuple]:
+    """F3 fold body: per-key running (sum, count); alert + reset when
+    the mean exceeds `threshold`."""
+    rows, cur, s, c = [], None, 0.0, 0
+    for k, t, a in zip(keys, t_ms, amounts):
+        if k != cur:
+            cur, s, c = k, 0.0, 0
+        s += a
+        c += 1
+        if s / c > threshold:
+            rows.append((int(k), int(t), s / c))
+            s, c = 0.0, 0
+    return rows
+
+
+def ewma_rows(keys, t_ms, amounts, alpha: float) -> list[tuple]:
+    """EWMA fold body, seeded with each key's first value:
+    ewma_1 = x_1; ewma_i = a*x_i + (1-a)*ewma_{i-1}. One row per event."""
+    rows, cur, prev = [], None, 0.0
+    for k, t, a in zip(keys, t_ms, amounts):
+        if k != cur:
+            cur, prev = k, float(a)
+        else:
+            prev = alpha * float(a) + (1 - alpha) * prev
+        rows.append((int(k), int(t), prev))
+    return rows
+
+
+def capped_session_rows(keys, t_ms, _amounts, gap_ms: int, max_ms: int) -> list[tuple]:
+    """Gap + max-duration session fold body: a key's session restarts
+    after a silence longer than `gap_ms` OR once its span would exceed
+    `max_ms`. One (key, session_no, start_ms, end_ms, n_events,
+    span_ms) row per session."""
+    rows, cur = [], None
+    for k, t in zip(keys, t_ms):
+        t = int(t)
+        if k != cur:
+            if cur is not None:
+                rows.append((int(cur), sess, start, last, n, last - start))
+            cur, sess, start, n = k, 1, t, 0
+        elif t - last > gap_ms or t - start > max_ms:
+            rows.append((int(cur), sess, start, last, n, last - start))
+            sess, start, n = sess + 1, t, 0
+        last = t
+        n += 1
+    if cur is not None:
+        rows.append((int(cur), sess, start, last, n, last - start))
+    return rows
 
 
 def running_sum_alerts_batch(df: DataFrame, threshold: float) -> DataFrame:
     """F5: per-key running sum; alert + reset state when sum > threshold
     (reference: workspace/frauddetection/src/main/java/spendreport/FraudDetector.java:29-46).
     Batch fold over (event_time, event_id) order."""
-
-    def fold_rows(keys, t_ms, amounts):
-        rows, cur, s = [], None, 0.0
-        for k, t, a in zip(keys, t_ms, amounts):
-            if k != cur:
-                cur, s = k, 0.0
-            s += a
-            if s > threshold:
-                rows.append((int(k), int(t), s))
-                s = 0.0
-        return rows
-
-    return _bucketed_fold(df, fold_rows)
+    return sorted_account_fold(df, partial(running_sum_rows, threshold=threshold))
 
 
 def running_mean_alerts_batch(df: DataFrame, threshold: float) -> DataFrame:
     """F3: per-key running (sum, count); alert + reset when mean > threshold
     (reference: TumblingWindowWithTest/src/main/java/spendreport/FraudDetectorSliding.java:33-71)."""
-
-    def fold_rows(keys, t_ms, amounts):
-        rows, cur, s, c = [], None, 0.0, 0
-        for k, t, a in zip(keys, t_ms, amounts):
-            if k != cur:
-                cur, s, c = k, 0.0, 0
-            s += a
-            c += 1
-            if s / c > threshold:
-                rows.append((int(k), int(t), s / c))
-                s, c = 0.0, 0
-        return rows
-
-    return _bucketed_fold(df, fold_rows)
+    return sorted_account_fold(df, partial(running_mean_rows, threshold=threshold))
 
 
 def running_sum_alerts_stream(stream: DataFrame, threshold: float) -> DataFrame:
     """Streaming F5 via applyInPandasWithState: running sum per account,
     emit + reset on threshold crossing.
 
-    Like the batch fold, the GROUP key is a hash bucket of the account,
+    The GROUP key is a hash bucket of the account,
     not the account itself: Arrow/pandas transfer and state-store
     commits are paid per (group, micro-batch), so thousands of accounts
     would pay thousands of Python roundtrips per batch while
@@ -851,8 +936,8 @@ def ewma_stream(stream: DataFrame, alpha: float = 0.2) -> DataFrame:
     """Streaming twin of operators/stateful.ewma_batch: per-account
     EWMA carried across micro-batches as one float of state per key —
     the smallest possible adaptive-baseline detector state. Bucketed
-    grouping and (account_id, t_us, event_id) fold order exactly as
-    the batch form, so stream==batch is a direct row compare
+    grouping; (account_id, t_us, event_id) fold order exactly as the
+    batch form, so stream==batch is a direct row compare
     (differential-tested)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

@@ -3,21 +3,19 @@ the pure-Python rows/s of the four order-sensitive fold BODIES — the
 only operators left whose hot path runs the Python interpreter per
 row — so the 100 TB story for them is quantified, not asserted.
 
-What is measured: the fold body exactly as production runs it inside
-`applyInPandas` — numpy arrays already sorted by (account, t_us,
-event_id), the per-row Python loop, the output frame construction
-excluded (it is O(alerts), not O(rows)). Single core, min-of-N
-repeats; the engine runs N_FOLD_BUCKETS=64 of these in parallel
-across executors, so cluster throughput = this number x cores until
-the scan outruns it.
+What is measured: the production fold bodies (imported from
+streaming/stateful.py) exactly as `sorted_account_fold` runs them —
+Python lists already sorted by (account, t_us, event_id), the per-row
+loop; the Arrow transfer and the output batch build are excluded (the
+latter is O(alerts), not O(rows)). Single core, min-of-N repeats; the
+engine runs one fold per shuffle partition in parallel across
+executors, so cluster throughput = this number x cores until the scan
+outruns it.
 
-The bodies are verbatim copies of the production closures (they are
-closures over thresholds and not importable):
-  F5 running sum   streaming/stateful.py  running_sum_alerts_batch
-  F3 running mean  streaming/stateful.py  running_mean_alerts_batch
-  EWMA             operators/stateful.py  ewma_batch
-  session cap      operators/stateful.py  session_capped_user
-Keep in sync when those change.
+  F5 running sum   running_sum_rows      (registry threshold 500)
+  F3 running mean  running_mean_rows     (registry threshold 90)
+  EWMA             ewma_rows             (operators/stateful.EWMA_ALPHA)
+  session cap      capped_session_rows   (operators/stateful gap + cap)
 
 Usage: python scripts/fold_throughput_probe.py [sf_dir] [repeats]
 Prints one JSON line: rows/s per fold + the input row count.
@@ -26,80 +24,28 @@ Prints one JSON line: rows/s per fold + the input row count.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import duckdb
 
-SESSION_CAP_GAP_MS = 2 * 86_400_000
-SESSION_CAP_MAX_MS = 5 * 86_400_000
-EWMA_ALPHA = 0.2
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def f5_running_sum(keys, t_ms, amounts, threshold=500.0):
-    rows, cur, s = [], None, 0.0
-    for k, t, a in zip(keys, t_ms, amounts):
-        if k != cur:
-            cur, s = k, 0.0
-        s += a
-        if s > threshold:
-            rows.append((int(k), int(t), s))
-            s = 0.0
-    return rows
-
-
-def f3_running_mean(keys, t_ms, amounts, threshold=90.0):
-    rows, cur, s, c = [], None, 0.0, 0
-    for k, t, a in zip(keys, t_ms, amounts):
-        if k != cur:
-            cur, s, c = k, 0.0, 0
-        s += a
-        c += 1
-        if s / c > threshold:
-            rows.append((int(k), int(t), s / c))
-            s, c = 0.0, 0
-    return rows
-
-
-def ewma(keys, t_ms, amounts, alpha=EWMA_ALPHA):
-    rows, cur, prev = [], None, 0.0
-    for k, t, a in zip(keys, t_ms, amounts):
-        if k != cur:
-            cur, prev = k, float(a)
-        else:
-            prev = alpha * float(a) + (1 - alpha) * prev
-        rows.append((int(k), int(t), prev))
-    return rows
-
-
-def session_cap(keys, t_us, amounts):
-    out = {}
-    last_t = {}
-    cur = {}
-    for a, t_usv in zip(keys, t_us):
-        a = int(a)
-        t = int(t_usv) // 1000
-        st = cur.get(a)
-        if (
-            st is None
-            or t - last_t[a] > SESSION_CAP_GAP_MS
-            or t - st[1] > SESSION_CAP_MAX_MS
-        ):
-            sess_no = st[0] + 1 if st else 1
-            cur[a] = [sess_no, t]
-            out[(a, sess_no)] = [t, t, 0]
-        rec = out[(a, cur[a][0])]
-        rec[1] = t
-        rec[2] += 1
-        last_t[a] = t
-    return [
-        (a, sn, v[0], v[1], v[2], v[1] - v[0]) for (a, sn), v in sorted(out.items())
-    ]
+from flink_fraud_detection_rocks_db_app_spark.operators.stateful import (  # noqa: E402
+    EWMA_ALPHA,
+    SESSION_CAP_GAP_MS,
+    SESSION_CAP_MAX_MS,
+)
+from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import (  # noqa: E402
+    capped_session_rows,
+    ewma_rows,
+    running_mean_rows,
+    running_sum_rows,
+)
 
 
 def main() -> None:
-    import os
-
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     repeats = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     src = f"{sf_dir}/events.parquet"
@@ -114,16 +60,17 @@ def main() -> None:
         """
     ).df()
     n = len(pdf)
-    keys = pdf["account_id"].to_numpy()
-    t_us = pdf["t_us"].to_numpy()
-    t_ms = t_us // 1000
-    amounts = pdf["amount"].to_numpy()
+    keys = pdf["account_id"].tolist()
+    t_ms = (pdf["t_us"] // 1000).tolist()
+    amounts = pdf["amount"].tolist()
 
     folds = {
-        "f5_running_sum": lambda: f5_running_sum(keys, t_ms, amounts),
-        "f3_running_mean": lambda: f3_running_mean(keys, t_ms, amounts),
-        "ewma": lambda: ewma(keys, t_ms, amounts),
-        "session_cap": lambda: session_cap(keys, t_us, amounts),
+        "f5_running_sum": lambda: running_sum_rows(keys, t_ms, amounts, 500.0),
+        "f3_running_mean": lambda: running_mean_rows(keys, t_ms, amounts, 90.0),
+        "ewma": lambda: ewma_rows(keys, t_ms, amounts, EWMA_ALPHA),
+        "session_cap": lambda: capped_session_rows(
+            keys, t_ms, amounts, SESSION_CAP_GAP_MS, SESSION_CAP_MAX_MS
+        ),
     }
     report = {"sf_dir": sf_dir, "rows": n, "repeats": repeats, "rows_per_sec": {}}
     for name, run in folds.items():

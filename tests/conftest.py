@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -12,6 +13,7 @@ from flink_fraud_detection_rocks_db_app_spark.session import get_spark  # noqa: 
 from flink_fraud_detection_rocks_db_app_spark.testing import duck_con  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"
+TINY_ARROW_BATCH = 8
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
 
@@ -36,3 +38,26 @@ def scratch(request):
         shutil.rmtree(d)
     os.makedirs(d)
     return d
+
+
+@contextmanager
+def session_confs(spark, confs: dict):
+    """Set SQL confs for the block; restore the previous values after."""
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+@pytest.fixture()
+def tiny_arrow_batches(spark):
+    """Shrink maxRecordsPerBatch so every non-trivial group spans many
+    Arrow chunks per micro-batch; restore the session default after."""
+    with session_confs(
+        spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": TINY_ARROW_BATCH}
+    ):
+        yield

@@ -30,7 +30,6 @@ import os
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,20 +48,7 @@ from flink_fraud_detection_rocks_db_app_spark.streaming import (
     write_replay_chunks,
 )
 
-from .conftest import SF_SMALL
-
-TINY_ARROW_BATCH = 8
-
-
-@pytest.fixture()
-def tiny_arrow_batches(spark):
-    """Shrink maxRecordsPerBatch so every non-trivial group spans many
-    Arrow chunks per micro-batch; restore the session default after."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(TINY_ARROW_BATCH))
-    yield
-    spark.conf.set(key, prev)
+from .conftest import SF_SMALL, TINY_ARROW_BATCH
 
 
 def _scramble_within_chunks(chunks_dir: str) -> None:

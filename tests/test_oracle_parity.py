@@ -28,8 +28,15 @@ _FULL = os.environ.get("SPARK_GRAFT_FULL_PARITY", "") == "1"
 # Deterministic stride sample: alphabetical order clusters names by
 # family prefix, so every 6th name touches each operator family. The
 # pinned faces add the replay-harness shapes the stride misses (no
-# sentinel; complete output mode).
-_PINNED = ["stream_cdc_upsert_replay", "stream_running_sum_alerts_replay"]
+# sentinel; complete output mode) and every batch sorted-account fold.
+_PINNED = [
+    "stream_cdc_upsert_replay",
+    "stream_running_sum_alerts_replay",
+    "running_sum_alerts_gt_500",
+    "running_mean_alerts_gt_90",
+    "ewma_amount_per_account",
+    "session_capped_user",
+]
 QUERIES = _ALL if _FULL else sorted(set(_ALL[::6] + _PINNED))
 
 

@@ -243,7 +243,7 @@ PYTHON_OK = {
     "running_sum_alerts_gt_10000",
     "running_mean_alerts_gt_90",
     # r5: per-key EWMA recursion — sequential by semantics like the
-    # F3/F5 folds above, same bucketed applyInPandas machinery
+    # F3/F5 folds above, same sorted-account mapInArrow fold
     "ewma_amount_per_account",
     "multimodal_features",
     "multimodal_feature_agg",
@@ -251,8 +251,8 @@ PYTHON_OK = {
     "multimodal_resize",
     "ann_cosine_topk_blas",
     # r12: the gap+cap session fold — sequential by semantics (a
-    # restart depends on every earlier restart), same bucketed
-    # applyInPandas machinery as the F3/F5/EWMA folds
+    # restart depends on every earlier restart), same sorted-account
+    # mapInArrow fold as the F3/F5/EWMA folds
     "session_capped_user",
     # r12: Misra-Gries partials — per-partition counter state across
     # Arrow batches is imperative by design; the merge and the exact
@@ -290,7 +290,8 @@ def test_plan_hygiene_sweep(spark):
             bad.append((name, "BroadcastNestedLoopJoin"))
         if "BatchEvalPython" in plan:  # row-at-a-time Python UDF
             bad.append((name, "BatchEvalPython"))
-        if ("InPandas" in plan or "ArrowEvalPython" in plan) and name not in PYTHON_OK:
+        python_stage = any(n in plan for n in ("InPandas", "InArrow", "ArrowEvalPython"))
+        if python_stage and name not in PYTHON_OK:
             bad.append((name, "unexpected Python stage"))
     assert not bad, bad
 

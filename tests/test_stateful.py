@@ -4,6 +4,7 @@ a 20-line Python fold over the fixture (FIXTURES.md §3) is the oracle."""
 from __future__ import annotations
 
 import duckdb
+import numpy as np
 
 from flink_fraud_detection_rocks_db_app_spark.fixtures import transactions_with_id
 from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import (
@@ -11,7 +12,7 @@ from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import (
     running_sum_alerts_batch,
 )
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, session_confs
 
 
 def _events_sorted():
@@ -22,9 +23,9 @@ def _events_sorted():
     ).fetchall()
 
 
-def _golden_running_sum(threshold):
+def _golden_running_sum(threshold, events=None):
     alerts, state = [], {}
-    for uid, t_ms, v, _eid in _events_sorted():
+    for uid, t_ms, v, _eid in events or _events_sorted():
         s = state.get(uid, 0.0) + v
         if s > threshold:
             alerts.append((uid, t_ms, s))
@@ -33,9 +34,9 @@ def _golden_running_sum(threshold):
     return sorted(alerts)
 
 
-def _golden_running_mean(threshold):
+def _golden_running_mean(threshold, events=None):
     alerts, state = [], {}
-    for uid, t_ms, v, _eid in _events_sorted():
+    for uid, t_ms, v, _eid in events or _events_sorted():
         s, c = state.get(uid, (0.0, 0))
         s, c = s + v, c + 1
         if s / c > threshold:
@@ -43,6 +44,15 @@ def _golden_running_mean(threshold):
             s, c = 0.0, 0
         state[uid] = (s, c)
     return sorted(alerts)
+
+
+def _golden_ewma(alpha, events):
+    out, state = [], {}
+    for uid, t_ms, v, _eid in events:
+        prev = state.get(uid)
+        state[uid] = v if prev is None else alpha * v + (1 - alpha) * prev
+        out.append((uid, t_ms, state[uid]))
+    return sorted(out)
 
 
 def _close(a, b):
@@ -106,34 +116,87 @@ def test_count_or_time_segments_golden(spark):
     assert got == want
 
 
-def test_fold_output_invariant_under_bucket_count(spark, monkeypatch):
-    """N_FOLD_BUCKETS is the fold family's parallelism ceiling (at most
-    that many concurrent tasks) and, since r13, a deployment knob
-    (SPARK_GRAFT_FOLD_BUCKETS). The knob must be SEMANTICS-FREE:
-    buckets only group accounts, every fold sorts by (account, t_us,
-    event_id) and resets at key changes, so the emitted rows — values
-    included, bit for bit — cannot depend on the bucket count. Pinned
-    across a degenerate (4), the default (64) and a larger prime (257)
-    count for the F5 fold, the EWMA fold and the capped-session fold."""
-    import flink_fraud_detection_rocks_db_app_spark.streaming.stateful as ss
+def _batch_fold_snapshots(df):
+    """F5, F3, EWMA and capped-session outputs, each sorted, as tuples."""
     from flink_fraud_detection_rocks_db_app_spark.operators.stateful import (
-        ewma_amount_per_account,
-        session_capped_user,
+        capped_sessions,
+        ewma_batch,
     )
 
-    def snapshots():
-        return (
-            sorted(
-                map(tuple, running_sum_alerts_batch(
-                    transactions_with_id(spark, SF_SMALL), 500.0
-                ).collect())
-            ),
-            sorted(map(tuple, ewma_amount_per_account(spark, SF_SMALL).collect())),
-            sorted(map(tuple, session_capped_user(spark, SF_SMALL).collect())),
+    return tuple(
+        sorted(map(tuple, out.collect()))
+        for out in (
+            running_sum_alerts_batch(df, 500.0),
+            running_mean_alerts_batch(df, 90.0),
+            ewma_batch(df, 0.2),
+            capped_sessions(df),
         )
+    )
 
+
+def test_fold_output_invariant_under_partitioning(spark):
+    """The batch folds hash-partition on the account, sort within
+    partitions and fold each partition in one Arrow pass, holding an
+    account's rows back across Arrow batch boundaries. The emitted
+    rows — values included, bit for bit — must not depend on how many
+    partitions the accounts land in or where the Arrow batches cut
+    them. Pinned at 1, 4 and 7 shuffle partitions (AQE coalescing off,
+    so the counts are real) x the default and a 7-row Arrow batch, for
+    F5, F3, EWMA and the capped-session fold."""
+    df = transactions_with_id(spark, SF_SMALL)
     results = {}
-    for n in (4, 64, 257):
-        monkeypatch.setattr(ss, "N_FOLD_BUCKETS", n)
-        results[n] = snapshots()
-    assert results[4] == results[64] == results[257]
+    for parts in (1, 4, 7):
+        for batch in (None, 7):
+            confs = {
+                "spark.sql.shuffle.partitions": parts,
+                "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            }
+            if batch is not None:
+                confs["spark.sql.execution.arrow.maxRecordsPerBatch"] = batch
+            with session_confs(spark, confs):
+                results[(parts, batch)] = _batch_fold_snapshots(df)
+    first = results[(1, None)]
+    assert all(first), "every fold should emit rows on the fixture"
+    assert all(r == first for r in results.values()), [
+        k for k, r in results.items() if r != first
+    ]
+
+
+def test_fold_account_spanning_many_arrow_batches(spark, tiny_arrow_batches):
+    """One account with hundreds of events (ties in event time
+    included) between two small neighbours, all in one partition, so
+    it spans ~60 Arrow batches: the fold must carry its running state
+    across every batch boundary and match the pure-Python goldens."""
+    import datetime as dt
+
+    rng = np.random.default_rng(11)
+    n_hot = 480
+    accounts = [3] * 4 + [5] * n_hot + [9] * 3
+    n = len(accounts)
+    t_us = np.sort(rng.integers(0, 40 * 24, n)) * 3_600_000_000  # hourly: many ties
+    amounts = (rng.integers(1, 1200, n) * 0.25).tolist()
+    event_ids = rng.permutation(n).tolist()
+    epoch = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    rows = [
+        (a, epoch + dt.timedelta(microseconds=int(t)), v, e)
+        for a, t, v, e in zip(accounts, t_us, amounts, event_ids)
+    ]
+    df = spark.createDataFrame(
+        rows, "account_id long, event_time timestamp, amount double, event_id long"
+    )
+    epoch_us = int(epoch.timestamp()) * 1_000_000
+    events = [
+        (a, (epoch_us + int(t)) // 1000, v, e)
+        for a, t, v, e in sorted(
+            zip(accounts, t_us, amounts, event_ids), key=lambda r: (r[0], r[1], r[3])
+        )
+    ]
+    assert len(set(t_us)) < n, "the fixture should hold event-time ties"
+
+    with session_confs(spark, {"spark.sql.shuffle.partitions": 1}):
+        f5, f3, ewma, _ = _batch_fold_snapshots(df)
+    want_f5 = _golden_running_sum(500.0, events)
+    assert len([r for r in want_f5 if r[0] == 5]) > 10
+    assert f5 == want_f5
+    assert f3 == _golden_running_mean(90.0, events)
+    assert ewma == _golden_ewma(0.2, events)

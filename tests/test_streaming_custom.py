@@ -405,7 +405,7 @@ def test_zscore_stream_matches_batch_window(spark, scratch):
 
 
 def test_ewma_stream_equals_batch_fold(spark, scratch):
-    """Streaming EWMA vs the batch bucketed fold: one float of state
+    """Streaming EWMA vs the batch sorted-account fold: one float of state
     per key carried across micro-batches must reproduce the batch
     recursion bit-for-bit (same multiply-add order per key — the F3/F5
     exactness convention, no tolerance)."""
