@@ -1,21 +1,30 @@
 """Stateful detectors — the reference capabilities Spark has no
 built-in for (SURVEY §7 "Custom"): reset-on-alert running aggregates
-(F3/F5), the count-or-time early-fire trigger (T3), and the
-record-buffer window with event-time timer (F1).
+(F3/F5), the count-or-time early-fire trigger (T3), the record-buffer
+window with event-time timer (F1), and the sequence and temporal folds
+built the same way.
 
-Each has two implementations:
-- a *streaming* one on `applyInPandasWithState` (per-key state in the
-  RocksDB state store, event-time timeouts for timers), and
-- a *batch* fold with identical semantics (deterministic order:
-  (event_time, event_id)) used for goldens and by the driver's
-  correctness gate.
+The batch forms run through `sorted_account_fold`: the JVM
+hash-partitions on the account and sorts within partitions, and one
+`mapInArrow` pass per partition folds the accounts in key order —
+Flink's key groups processed in key order. They are the reference the
+streaming forms are differential-tested against.
 
-The streaming forms group by a hash bucket of the account
-(N_FOLD_BUCKETS) so Arrow transfer and state commits are paid per
-bucket, not per account. The batch forms run through
-`sorted_account_fold`: the JVM hash-partitions on the account and
-sorts within partitions, and one `mapInArrow` pass per partition folds
-the accounts in key order — Flink's key groups processed in key order.
+The 13 streaming forms run through one keyed-state runner,
+`_keyed_fold`, the way every Flink operator sits on one keyed-state
+backend with key groups. Each fold supplies only its per-row `step`;
+the runner owns everything else:
+- one grouping key for all folds, a hash bucket of the account
+  (N_FOLD_BUCKETS), so Arrow transfer and state commits are paid per
+  bucket, not per account;
+- the group's Arrow chunks concatenated and sorted by
+  (account_id, *order) before the step sees them, with the empty-
+  iterator timeout flush;
+- one versioned JSON state envelope {"v", "nb", "st"} per bucket,
+  st = {account: fold state}, whose restore rejects an older format
+  and a different bucket count;
+- the optional 0 s watermark, event-time timeouts, and removal of
+  empty state.
 
 Scale: state is per-key and O(1) (F3/F5) or O(open windows) (F1/T3);
 keys hash-partition across executors exactly like the reference's
@@ -30,7 +39,6 @@ from __future__ import annotations
 
 import json
 from functools import partial
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -57,124 +65,138 @@ WINDOW_SUM_SCHEMA = T.StructType(
 )
 
 
-def _with_epoch(df: DataFrame) -> DataFrame:
-    """JVM-side epoch column for the pandas folds. Arrow hands Spark
-    timestamps to pandas as session-LOCAL naive datetimes, so int64
-    arithmetic on them is an epoch only when the session timezone is
-    UTC — in any other timezone it is off by the UTC offset (caught by
-    the non-UTC parity probe). `unix_micros` is timezone-free."""
-    return df.withColumn("t_us", F.unix_micros("event_time"))
-
-
-def _group_frame(
-    pdf_iter: Iterator[pd.DataFrame], by: list[str] | None = None
-) -> pd.DataFrame:
-    """One globally-sorted frame for the whole (group, micro-batch).
-
-    Arrow hands applyInPandasWithState the group's rows as an iterator
-    of chunks bounded by spark.sql.execution.arrow.maxRecordsPerBatch
-    (default 10k). Sorting each chunk independently is only correct
-    while the group fits one chunk — past that, rows out of order
-    ACROSS chunk boundaries would fold in the wrong order and silently
-    break the bit-exact stream==batch differentials (ADVICE r5). Concat
-    first, sort once: memory is O(group rows in this micro-batch) —
-    the same asymptotic bound micro-batch sizing already imposes, and
-    with hash-bucketed grouping ~1/N_FOLD_BUCKETS of the batch.
-
-    Returns None when the iterator yields no rows: under
-    GroupStateTimeout.EventTimeTimeout Spark invokes the fold with an
-    EMPTY iterator on a pure timeout flush (state.hasTimedOut), and
-    pd.concat([]) raises — the timeout callers must still run their
-    watermark-flush logic with zero input rows (ADVICE r6)."""
-    chunks = [c for c in pdf_iter if len(c)]
-    if not chunks:
-        return None
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    return pdf.sort_values(by, kind="mergesort") if by else pdf
-
-
-_EMPTY_T_MS = np.array([], dtype=np.int64)
-_EMPTY_AMOUNTS = np.array([], dtype=np.float64)
-
-
-def _sorted_arrays(pdf_iter: Iterator[pd.DataFrame]):
-    pdf = _group_frame(pdf_iter, ["t_us", "event_id"])
-    if pdf is None:
-        return _EMPTY_T_MS, _EMPTY_AMOUNTS
-    t_ms = (pdf["t_us"] // 1000).to_numpy()
-    return t_ms, pdf["amount"].to_numpy()
-
-
-# ----------------------------------------------------------------- F5 / F3
-
-
-# The STREAMING folds group by a HASH BUCKET of the key, not the key
-# itself: per-group Arrow/pandas transfer and state-store commits are
-# paid ~N_FOLD_BUCKETS times per micro-batch instead of once per
-# account, while the fold inside walks the bucket sorted by
-# (account_id, event_time, event_id) and carries each account
-# independently — the exact same per-key semantics. The bucket is the
-# applyInPandasWithState grouping key, so a streaming checkpoint binds
-# the bucket count it was written under — resuming with a different
-# value would re-home accounts to other buckets' state. That rule is
-# ENFORCED, not just documented (ADVICE r13): the versioned state
-# blobs embed the bucket count they were written under ("nb") and the
-# restore path raises on mismatch, exactly like the format-version
-# check — so a checkpoint resumed under a different
-# SPARK_GRAFT_FOLD_BUCKETS fails loudly instead of silently serving
-# re-homed (wrong) fold state. The BATCH folds do not use it: they run
-# through `sorted_account_fold`, whose parallelism is the shuffle
-# partition count (AQE-coalesced) like every other operator's.
+# The streaming folds group by pmod(xxhash64(account_id), N_FOLD_BUCKETS),
+# so a streaming checkpoint binds the bucket count it was written under:
+# resuming under another SPARK_GRAFT_FOLD_BUCKETS would re-home accounts
+# onto other buckets' state. Every fold's state envelope records the
+# count ("nb") and the restore raises on a mismatch, for all 13 folds.
+# The batch folds do not use it: `sorted_account_fold`'s parallelism is
+# the shuffle partition count (AQE-coalesced) like every other
+# operator's.
 N_FOLD_BUCKETS = env_int("SPARK_GRAFT_FOLD_BUCKETS", 64)
 
-# record_buffer_tumbling_stream state-format version: bump whenever the
-# grouping key or serialized state shape changes, so a checkpoint
-# written under the old format is rejected on restore instead of being
-# silently reinterpreted (the on-disk analogue of indexcache's
-# index-format version). v3 = v2 + embedded bucket count "nb" (the
-# grouping-key binding above); v2 was bucket-keyed nested {account:
-# {window: sum}} (the r7 shape); v1 was the account-keyed flat
-# {window: sum}.
-RECORD_BUFFER_STATE_V = 3
+# Fold-state envelope version: bump it whenever the grouping key or a
+# fold's state shape changes, so a checkpoint written under the old
+# format is rejected on restore instead of being silently
+# reinterpreted. It starts above every per-fold blob version the folds
+# wrote before the shared envelope (up to v3), so none of those loads.
+STATE_V = 4
 
 
-def _record_buffer_state_decode(raw) -> dict[int, dict[int, float]]:
-    """Restore one bucket's record-buffer state row, rejecting (a) a
-    blob whose format version predates a state-shape change and (b) a
-    checkpoint written under a different fold-bucket count — both must
-    fail LOUDLY instead of being silently reinterpreted. Module-level
-    (not a closure) so the rejection contract is directly unit-testable
-    (test_record_buffer_state_decode_rejections)."""
+def _int_keys(o):
+    """JSON object keys come back as strings; every key a fold's state
+    uses is an int (account id, window start)."""
+    return {int(k): _int_keys(v) for k, v in o.items()} if isinstance(o, dict) else o
+
+
+def _state_encode(st: dict, nb: int) -> str:
+    return json.dumps({"v": STATE_V, "nb": nb, "st": st})
+
+
+def _state_decode(raw: str, nb: int) -> dict:
+    """Restore one bucket's state, raising on (a) an envelope from before
+    a state-shape change and (b) a checkpoint written under a different
+    bucket count: both must fail loudly, not be reinterpreted."""
     blob = json.loads(raw)
-    if not isinstance(blob, dict) or blob.get("v") != RECORD_BUFFER_STATE_V:
+    v = blob.get("v") if isinstance(blob, dict) else None
+    if v != STATE_V:
         raise ValueError(
-            "record_buffer_tumbling_stream: checkpoint state format "
-            f"{blob.get('v') if isinstance(blob, dict) else '?'!r} != "
-            f"expected v{RECORD_BUFFER_STATE_V} — the checkpoint "
-            "predates a state-shape change; start from a fresh "
-            "checkpoint dir"
+            f"streaming fold: checkpoint state format {v!r} != expected "
+            f"v{STATE_V} — the checkpoint predates a state-shape change; "
+            "start from a fresh checkpoint dir"
         )
-    _check_state_nb(blob.get("nb"), "record_buffer_tumbling_stream")
-    return {
-        int(a): {int(w): v for w, v in d.items()}
-        for a, d in blob["wins"].items()
-    }
+    if blob.get("nb") != nb:
+        raise ValueError(
+            f"streaming fold: checkpoint state was written under "
+            f"{blob.get('nb')!r} fold buckets but SPARK_GRAFT_FOLD_BUCKETS "
+            f"is now {nb} — the bucket count is part of the stateful "
+            "grouping key; resuming would re-home accounts to other "
+            "buckets' state. Start from a fresh checkpoint dir (or "
+            "restore the original bucket count)"
+        )
+    return _int_keys(blob["st"])
 
 
-def _check_state_nb(blob_nb, op_name: str) -> None:
-    """Reject a checkpoint written under a different fold-bucket count:
-    the bucket is the stateful GROUPING KEY (hash(account) % nb), so a
-    different nb re-homes accounts to other buckets' state — wrong
-    output, silently, unless caught here (ADVICE r13)."""
-    if blob_nb != N_FOLD_BUCKETS:
-        raise ValueError(
-            f"{op_name}: checkpoint state was written under "
-            f"{blob_nb!r} fold buckets but SPARK_GRAFT_FOLD_BUCKETS "
-            f"is now {N_FOLD_BUCKETS} — the bucket count is part of "
-            "the stateful grouping key; resuming would re-home "
-            "accounts to other buckets' state. Start from a fresh "
-            "checkpoint dir (or restore the original bucket count)"
+def _keyed_fold(
+    stream: DataFrame,
+    step,
+    schema: T.StructType,
+    cols: tuple[str, ...],
+    order: tuple[str, ...] = ("t_us", "event_id"),
+    watermark: bool = False,
+) -> DataFrame:
+    """Streaming runner for the per-account folds.
+
+    `step(st, rows, wm)` folds `rows` into the bucket's state `st`
+    ({account: state}, mutated in place) and returns (output tuples in
+    `schema`'s column order, event-time timeout in ms or None). `rows`
+    are tuples of `cols` as native Python values, sorted by
+    (account_id, *order); `t_us` and `t_ms` are epoch columns computed
+    JVM-side (`unix_millis` floors, as `// 1000` does). With `watermark`
+    the stream gets a 0 s watermark, the step sees it as `wm` (else
+    None), and a returned timeout is registered; a step that leaves
+    `st` empty removes the bucket's state."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    nb = N_FOLD_BUCKETS
+    by = ["account_id", *order]
+
+    def fn(_key, pdf_iter, state):
+        st = _state_decode(state.get[0], nb) if state.exists else {}
+        # Arrow hands the group over in chunks of at most
+        # spark.sql.execution.arrow.maxRecordsPerBatch rows; sorting each
+        # chunk alone would fold rows out of order across chunk
+        # boundaries, so concat first and sort once. A pure timeout
+        # flush (EventTimeTimeout with no new rows) brings no chunks.
+        chunks = [c for c in pdf_iter if len(c)]
+        rows = ()
+        if chunks:
+            pdf = pd.concat(chunks, ignore_index=True).sort_values(by, kind="mergesort")
+            rows = zip(*(pdf[c].tolist() for c in cols))
+        out, timeout = step(st, rows, state.getCurrentWatermarkMs() if watermark else None)
+        if st:
+            state.update((_state_encode(st, nb),))
+            if timeout is not None:
+                state.setTimeoutTimestamp(timeout)
+        else:
+            state.remove()
+        if out:  # yielding empty untyped frames trips pandas concat warnings
+            yield pd.DataFrame(out, columns=schema.fieldNames())
+
+    if watermark:
+        # the stateful late-event filter reads event_time, so it stays
+        stream = stream.withWatermark("event_time", "0 seconds")
+    keep = dict.fromkeys([*by, *cols, *(["event_time"] if watermark else [])])
+    return (
+        stream.withColumns(
+            {"t_us": F.unix_micros("event_time"), "t_ms": F.unix_millis("event_time")}
         )
+        # applyInPandasWithState resolves the grouping key against the
+        # child's output, so the bucket must be a real column
+        .select(F.pmod(F.xxhash64("account_id"), F.lit(nb)).alias("_bucket"), *keep)
+        .groupBy("_bucket")
+        .applyInPandasWithState(
+            fn,
+            schema,
+            T.StructType([T.StructField("state_json", T.StringType())]),
+            "append",
+            GroupStateTimeout.EventTimeTimeout if watermark else GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
+def _close_windows(st: dict, wm: int, size_ms: int):
+    """Pop the windows the watermark has closed from {account: {w_start:
+    value}} state. Returns the (account, w_start, value) triples in key
+    order and the next timeout, the earliest open window's end (None
+    once no window is open)."""
+    closed = []
+    for a in sorted(st):
+        d = st[a]
+        closed += [(a, w, d.pop(w)) for w in sorted(w for w in d if w + size_ms <= wm)]
+        if not d:
+            del st[a]
+    return closed, min(min(d) for d in st.values()) + size_ms if st else None
 
 
 def sorted_account_fold(
@@ -315,94 +337,42 @@ def running_mean_alerts_batch(df: DataFrame, threshold: float) -> DataFrame:
 
 
 def running_sum_alerts_stream(stream: DataFrame, threshold: float) -> DataFrame:
-    """Streaming F5 via applyInPandasWithState: running sum per account,
-    emit + reset on threshold crossing.
+    """Streaming F5: running sum per account, emit + reset on threshold
+    crossing, exactly like the reference's per-key ValueState
+    (reference: workspace/frauddetection/src/main/java/spendreport/FraudDetector.java:29-46).
+    State: {account: running_sum}."""
 
-    The GROUP key is a hash bucket of the account,
-    not the account itself: Arrow/pandas transfer and state-store
-    commits are paid per (group, micro-batch), so thousands of accounts
-    would pay thousands of Python roundtrips per batch while
-    N_FOLD_BUCKETS buckets pay a fixed number (measured ~1.7x end to
-    end on the bench stream even at 150 accounts). State per bucket is
-    the {account: running_sum} dict (JSON — the same shape
-    count_or_time_stream keeps per window); per-account semantics are
-    unchanged because the fold walks each bucket sorted by
-    (account_id, event_time, event_id) and carries each account's sum
-    independently, exactly like the reference's per-key ValueState."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        sums: dict[int, float] = (
-            {int(k): v for k, v in json.loads(state.get[0]).items()}
-            if state.exists
-            else {}
-        )
-        rows = []
-        pdf = _group_frame(pdf_iter, ["account_id", "t_us", "event_id"])
-        if pdf is None:
-            pdf = pd.DataFrame(columns=["account_id", "t_us", "amount"])
-        for k, t_us, a in zip(
-            pdf["account_id"].to_numpy(),
-            pdf["t_us"].to_numpy(),
-            pdf["amount"].to_numpy(),
-        ):
-            s = sums.get(int(k), 0.0) + a
+    def step(sums, rows, _wm):
+        out = []
+        for k, t, a in rows:
+            s = sums.get(k, 0.0) + a
             if s > threshold:
-                rows.append((int(k), int(t_us) // 1000, s))
+                out.append((k, t, s))
                 s = 0.0
-            sums[int(k)] = s
-        state.update((json.dumps(sums),))
-        if rows:  # yielding empty untyped frames trips pandas concat warnings
-            yield pd.DataFrame(rows, columns=["account_id", "t_ms", "agg_value"])
+            sums[k] = s
+        return out, None
 
-    return (
-        _with_epoch(stream)
-        # applyInPandasWithState resolves the grouping key against the
-        # child's output, so the bucket must be a real column
-        .withColumn("_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS)))
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            ALERT_SCHEMA,
-            T.StructType([T.StructField("sums_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_fold(stream, step, ALERT_SCHEMA, ("account_id", "t_ms", "amount"))
 
 
 def running_mean_alerts_stream(stream: DataFrame, threshold: float) -> DataFrame:
     """Streaming F3: per-key (sum, count) state, alert + reset when the
     running mean crosses the threshold
     (reference: TumblingWindowWithTest/src/main/java/spendreport/FraudDetectorSliding.java:33-71)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        s, c = state.get if state.exists else (0.0, 0)
-        rows = []
-        t_ms, amounts = _sorted_arrays(pdf_iter)
-        for t, a in zip(t_ms, amounts):
+    def step(st, rows, _wm):
+        out = []
+        for k, t, a in rows:
+            s, c = st.get(k, (0.0, 0))
             s += a
             c += 1
             if s / c > threshold:
-                rows.append((key[0], int(t), s / c))
+                out.append((k, t, s / c))
                 s, c = 0.0, 0
-        state.update((s, c))
-        if rows:
-            yield pd.DataFrame(rows, columns=["account_id", "t_ms", "agg_value"])
+            st[k] = [s, c]
+        return out, None
 
-    return _with_epoch(stream).groupBy("account_id").applyInPandasWithState(
-        fn,
-        ALERT_SCHEMA,
-        T.StructType(
-            [
-                T.StructField("running_sum", T.DoubleType()),
-                T.StructField("running_count", T.LongType()),
-            ]
-        ),
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_fold(stream, step, ALERT_SCHEMA, ("account_id", "t_ms", "amount"))
 
 
 # ---------------------------------------------------------------------- T3
@@ -426,57 +396,31 @@ def count_or_time_stream(stream: DataFrame, size_ms: int, max_count: int) -> Dat
     watermark passes the window end
     (reference: master/src/main/java/InorderTumblingWindow/CustomTrigger.java:34-78).
 
-    State per key: {w_start: [next_seg, cur_sum, cur_count]}. Early
+    State: {account: {w_start: [next_seg, cur_sum, cur_count]}}. Early
     segments stream out immediately; final segments flush on timeout.
     Output matches `operators.stateful.count_or_time_segments` on the
     same (ordered) input for closed windows.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        wins: dict[int, list] = (
-            {int(k): v for k, v in json.loads(state.get[0]).items()}
-            if state.exists
-            else {}
-        )
-        rows = []
-        t_ms, amounts = _sorted_arrays(pdf_iter)
-        for t, a in zip(t_ms, amounts):
-            w = int(t) - int(t) % size_ms
-            seg, s, c = wins.get(w, [0, 0.0, 0])
-            s += float(a)
+    def step(st, rows, wm):
+        out = []
+        for k, t, a in rows:
+            w = t - t % size_ms
+            wins = st.setdefault(k, {})
+            seg, s, c = wins.get(w, (0, 0.0, 0))
+            s += a
             c += 1
             if c >= max_count:
-                rows.append((w, key[0], seg, s, c, "early"))
+                out.append((w, k, seg, s, c, "early"))
                 wins[w] = [seg + 1, 0.0, 0]
             else:
                 wins[w] = [seg, s, c]
-        wm = state.getCurrentWatermarkMs()
-        for w in sorted(w for w in wins if w + size_ms <= wm):
-            seg, s, c = wins.pop(w)
-            if c > 0:
-                rows.append((w, key[0], seg, s, c, "final"))
-        if wins:
-            state.update((json.dumps(wins),))
-            state.setTimeoutTimestamp(min(wins) + size_ms)
-        else:
-            state.remove()
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=["w_start", "account_id", "seg", "sum_amount", "n_events", "emit"],
-            )
+        closed, timeout = _close_windows(st, wm, size_ms)
+        out += [(w, k, seg, s, c, "final") for k, w, (seg, s, c) in closed if c > 0]
+        return out, timeout
 
-    return (
-        _with_epoch(stream).withWatermark("event_time", "0 seconds")
-        .groupBy("account_id")
-        .applyInPandasWithState(
-            fn,
-            SEGMENT_SCHEMA,
-            T.StructType([T.StructField("wins_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_fold(
+        stream, step, SEGMENT_SCHEMA, ("account_id", "t_ms", "amount"), watermark=True
     )
 
 
@@ -494,151 +438,25 @@ def record_buffer_tumbling_stream(stream: DataFrame, size_ms: int) -> DataFrame:
     a raw buffer — same result, O(open windows) instead of O(rows)).
     Emits a window exactly when the event-time watermark passes its
     end; must equal the declarative tumbling aggregate (EP3's
-    differential-test idea).
-
-    Same bucketed-key design as running_sum_alerts_stream: the group
-    key is a hash bucket of the account, so Arrow transfer + state
-    commits are paid N_FOLD_BUCKETS times per micro-batch instead of
-    once per account (measured ~4x end to end on the sf0.1 bench
-    replay at 1500 accounts). The registered timeout is the earliest
+    differential-test idea). The registered timeout is the earliest
     open window end across the bucket; per-(account, window) emission
-    semantics are unchanged because windowed sums are commutative.
-
-    The serialized state carries an explicit format version (the
-    index-format-version pattern from indexcache.index_path): this
-    operator changed both its grouping key and its state shape in one
-    step once already, and a checkpoint written under the old shape
-    must fail LOUDLY on restore, not be silently reinterpreted.
+    is unchanged because windowed sums are commutative.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            wins = _record_buffer_state_decode(state.get[0])
-        else:
-            wins = {}
-        pdf = _group_frame(pdf_iter, ["account_id", "t_us", "event_id"])
-        if pdf is not None:
-            for a, t_us, amt in zip(
-                pdf["account_id"].to_numpy(),
-                pdf["t_us"].to_numpy(),
-                pdf["amount"].to_numpy(),
-            ):
-                t = int(t_us) // 1000
-                w = t - t % size_ms
-                d = wins.setdefault(int(a), {})
-                d[w] = d.get(w, 0.0) + float(amt)
-        wm = state.getCurrentWatermarkMs()
-        rows = []
-        for a in sorted(wins):
-            d = wins[a]
-            for w in sorted(w for w in d if w + size_ms <= wm):
-                rows.append((w, a, d.pop(w)))
-            if not d:
-                del wins[a]
-        if wins:
-            state.update(
-                (
-                    json.dumps(
-                        {
-                            "v": RECORD_BUFFER_STATE_V,
-                            "nb": N_FOLD_BUCKETS,
-                            "wins": wins,
-                        }
-                    ),
-                )
-            )
-            state.setTimeoutTimestamp(
-                min(min(d) for d in wins.values()) + size_ms
-            )
-        else:
-            state.remove()
-        if rows:
-            yield pd.DataFrame(rows, columns=["w_start", "account_id", "sum_amount"])
+    def step(st, rows, wm):
+        for a, t, amt in rows:
+            d = st.setdefault(a, {})
+            w = t - t % size_ms
+            d[w] = d.get(w, 0.0) + amt
+        closed, timeout = _close_windows(st, wm, size_ms)
+        return [(w, a, s) for a, w, s in closed], timeout
 
-    return (
-        _with_epoch(stream).withWatermark("event_time", "0 seconds")
-        .withColumn("_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS)))
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            WINDOW_SUM_SCHEMA,
-            T.StructType([T.StructField("wins_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_fold(
+        stream, step, WINDOW_SUM_SCHEMA, ("account_id", "t_ms", "amount"), watermark=True
     )
 
 
 # ------------------------------------------------------------------- WA4
-
-# bounded-buffer state format version (see RECORD_BUFFER_STATE_V).
-# v2 = v1 + embedded fold-bucket count "nb" (grouping-key binding)
-BOUNDED_BUFFER_STATE_V = 2
-
-
-def _bounded_state_encode(wins: dict, codec: str) -> tuple:
-    """One row of per-bucket state. `json` is the default (versioned
-    text blob — the format the checkpoint pin test fixes); `pickle` is
-    the binary A/B arm (SCALE.md r10 WA4 state-floor probe): same
-    nested dict, protocol-5 bytes, same version + bucket-count
-    guard."""
-    if codec == "json":
-        return (
-            json.dumps(
-                {
-                    "v": BOUNDED_BUFFER_STATE_V,
-                    "nb": N_FOLD_BUCKETS,
-                    "wins": wins,
-                }
-            ),
-        )
-    import pickle
-
-    return (
-        pickle.dumps(
-            (BOUNDED_BUFFER_STATE_V, N_FOLD_BUCKETS, wins), protocol=5
-        ),
-    )
-
-
-def _bounded_state_decode(raw, codec: str) -> dict[int, dict[int, float]]:
-    if codec == "json":
-        blob = json.loads(raw)
-        ver = blob.get("v") if isinstance(blob, dict) else None
-        nb = blob.get("nb") if isinstance(blob, dict) else None
-        wins = blob["wins"] if isinstance(blob, dict) and "wins" in blob else {}
-    else:
-        import pickle
-
-        # A truncated/corrupt state row must surface the same versioned
-        # "fresh checkpoint dir" message the JSON arm gives, not an
-        # opaque UnpicklingError (ADVICE r10). The decoded object is
-        # validated as a (version, wins-dict) 2-tuple before unpacking.
-        try:
-            decoded = pickle.loads(bytes(raw))
-        except Exception as e:
-            raise ValueError(
-                "record_buffer_bounded_tumbling_stream: checkpoint state "
-                f"bytes undecodable ({e.__class__.__name__}) — expected "
-                f"v{BOUNDED_BUFFER_STATE_V} pickle state; start from a "
-                "fresh checkpoint dir"
-            ) from e
-        if not (isinstance(decoded, tuple) and len(decoded) == 3):
-            raise ValueError(
-                "record_buffer_bounded_tumbling_stream: checkpoint state "
-                f"shape {type(decoded).__name__!r} != (version, nb, wins) "
-                "— start from a fresh checkpoint dir"
-            )
-        ver, nb, wins = decoded
-    if ver != BOUNDED_BUFFER_STATE_V:
-        raise ValueError(
-            "record_buffer_bounded_tumbling_stream: checkpoint state "
-            f"format {ver!r} != expected v{BOUNDED_BUFFER_STATE_V} — "
-            "start from a fresh checkpoint dir"
-        )
-    _check_state_nb(nb, "record_buffer_bounded_tumbling_stream")
-    return {int(a): {int(w): float(v) for w, v in d.items()} for a, d in wins.items()}
 
 
 def record_buffer_bounded_tumbling_stream(
@@ -646,7 +464,6 @@ def record_buffer_bounded_tumbling_stream(
     size_ms: int,
     max_open: int,
     flush_at_ms: int,
-    state_codec: str = "json",
 ) -> DataFrame:
     """WA4: the reference's BOUNDED record-buffer tumbling window —
     a capacity cap on simultaneously-open window buffers with
@@ -680,64 +497,26 @@ def record_buffer_bounded_tumbling_stream(
     — callers replay with jitter 0 (documented, like the reference's
     in-order assigner variants).
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            wins: dict[int, dict[int, float]] = _bounded_state_decode(
-                state.get[0], state_codec
-            )
-        else:
-            wins = {}
-        pdf = _group_frame(pdf_iter, ["account_id", "t_us", "event_id"])
-        if pdf is not None:
-            for a, t_us, amt in zip(
-                pdf["account_id"].to_numpy(),
-                pdf["t_us"].to_numpy(),
-                pdf["amount"].to_numpy(),
-            ):
-                t = int(t_us) // 1000
-                w = t - t % size_ms
-                d = wins.setdefault(int(a), {})
-                if w not in d:
-                    # the reference polls the earliest-ending window and
-                    # clears its buffer BEFORE offering the new one
-                    if len(d) >= max_open:
-                        d.pop(min(d))
-                    d[w] = 0.0
-                d[w] += float(amt)
-        wm = state.getCurrentWatermarkMs()
-        if wm >= flush_at_ms:
-            rows = [
-                (w, a, wins[a][w]) for a in sorted(wins) for w in sorted(wins[a])
-            ]
-            state.remove()
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["w_start", "account_id", "sum_amount"]
-                )
-        elif wins:
-            state.update(_bounded_state_encode(wins, state_codec))
-            state.setTimeoutTimestamp(flush_at_ms)
-        else:
-            state.remove()
+    def step(st, rows, wm):
+        for a, t, amt in rows:
+            d = st.setdefault(a, {})
+            w = t - t % size_ms
+            if w not in d:
+                # the reference polls the earliest-ending window and
+                # clears its buffer BEFORE offering the new one
+                if len(d) >= max_open:
+                    d.pop(min(d))
+                d[w] = 0.0
+            d[w] += amt
+        if wm < flush_at_ms:
+            return [], flush_at_ms
+        out = [(w, a, st[a][w]) for a in sorted(st) for w in sorted(st[a])]
+        st.clear()
+        return out, None
 
-    state_schema = (
-        T.StructType([T.StructField("wins_json", T.StringType())])
-        if state_codec == "json"
-        else T.StructType([T.StructField("wins_bin", T.BinaryType())])
-    )
-    return (
-        _with_epoch(stream).withWatermark("event_time", "0 seconds")
-        .withColumn("_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS)))
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            WINDOW_SUM_SCHEMA,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_fold(
+        stream, step, WINDOW_SUM_SCHEMA, ("account_id", "t_ms", "amount"), watermark=True
     )
 
 
@@ -784,64 +563,33 @@ def funnel_stream(stream: DataFrame) -> DataFrame:
     equals the batch operator on the same prefix (differential-tested
     on the in-order replay).
 
-    Same bucketed-key design as running_sum_alerts_stream: the group
-    key is a hash bucket, state is the per-bucket {user: [v, c, p]}
-    dict, and each batch walks its rows in (user, time, id) order —
-    per-user semantics identical to keying by user, Arrow/state-commit
-    costs paid per bucket."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    Fold order is the batch twin's: it sorts
+    sort_array(struct(t_ms, event_type)) at millisecond resolution, so
+    events tie-break on event_type within a millisecond — sorting on
+    raw t_us would order µs-distinct but ms-equal events differently."""
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        st: dict[int, list] = (
-            {int(k): v for k, v in json.loads(state.get[0]).items()}
-            if state.exists
-            else {}
-        )
-        rows = []
-        # Fold in the SAME order the batch twin folds: it sorts
-        # sort_array(struct(t_ms, event_type)) at millisecond
-        # resolution, so derive t_ms first and tiebreak on
-        # event_type — sorting on raw t_us would order µs-distinct
-        # but ms-equal events differently and silently break the
-        # stream==batch differential.
-        pdf = _group_frame(pdf_iter)
-        if pdf is None:
-            pdf = pd.DataFrame(columns=["account_id", "t_us", "event_type"])
-        pdf = pdf.assign(_t_ms=pdf["t_us"] // 1000).sort_values(
-            ["account_id", "_t_ms", "event_type"], kind="mergesort"
-        )
-        for u, t, typ in zip(
-            pdf["account_id"].to_numpy(),
-            pdf["_t_ms"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-        ):
-            u, t = int(u), int(t)
+    def step(st, rows, _wm):
+        out = []
+        for u, t, typ in rows:
             v, c, p = st.get(u, (None, None, None))
             if v is None and typ == "view":
                 v = t
-                rows.append((u, "view", t))
+                out.append((u, "view", t))
             elif c is None and v is not None and typ == "click" and t > v:
                 c = t
-                rows.append((u, "click", t))
+                out.append((u, "click", t))
             elif p is None and c is not None and typ == "purchase" and t > c:
                 p = t
-                rows.append((u, "purchase", t))
+                out.append((u, "purchase", t))
             st[u] = [v, c, p]
-        state.update((json.dumps(st),))
-        if rows:
-            yield pd.DataFrame(rows, columns=["user_id", "stage", "t_ms"])
+        return out, None
 
-    return (
-        _with_epoch(stream)
-        .withColumn("_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS)))
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            FUNNEL_SCHEMA,
-            T.StructType([T.StructField("state_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        stream,
+        step,
+        FUNNEL_SCHEMA,
+        ("account_id", "t_ms", "event_type"),
+        order=("t_ms", "event_type"),
     )
 
 
@@ -862,64 +610,33 @@ def zscore_alerts_stream(
     state (n, mean, M2) — O(1) per key forever, numerically stable —
     flags an event against the PRIOR history before folding it in,
     exactly like the batch window's 'UNBOUNDED PRECEDING AND 1
-    PRECEDING' frame. Bucketed grouping as in the other folds; the
+    PRECEDING' frame, in that window's (t_ms, event_id) order. The
     flag gate compares 6dp-rounded values so Welford-vs-window ulp
     drift can't flip a decision the batch form wouldn't."""
     import math
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        st: dict[int, list] = (
-            {int(kk): v for kk, v in json.loads(state.get[0]).items()}
-            if state.exists
-            else {}
-        )
-        rows = []
-        # Match the batch window frame's ORDER BY (t_ms, event_id)
-        # exactly: derive t_ms before sorting so µs-distinct but
-        # ms-equal events fold in the batch order (raw-t_us sorting
-        # would diverge whenever the ms tiebreak matters).
-        pdf = _group_frame(pdf_iter)
-        if pdf is None:
-            pdf = pd.DataFrame(columns=["account_id", "t_us", "amount", "event_id"])
-        pdf = pdf.assign(_t_ms=pdf["t_us"] // 1000).sort_values(
-            ["account_id", "_t_ms", "event_id"], kind="mergesort"
-        )
-        for u, t_ms_v, a in zip(
-            pdf["account_id"].to_numpy(),
-            pdf["_t_ms"].to_numpy(),
-            pdf["amount"].to_numpy(),
-        ):
-            u, a = int(u), float(a)
+    def step(st, rows, _wm):
+        out = []
+        for u, t, a in rows:
             n, mean, m2 = st.get(u, (0, 0.0, 0.0))
             if n >= min_prior:
                 var = m2 / (n - 1)
                 sigma = math.sqrt(var) if var > 0 else 0.0
                 if sigma > 0 and round(abs(a - mean) - k * sigma, 6) > 0:
-                    rows.append(
-                        (u, int(t_ms_v), a, round((a - mean) / sigma, 6))
-                    )
+                    out.append((u, t, a, round((a - mean) / sigma, 6)))
             n += 1
             d = a - mean
             mean += d / n
             m2 += d * (a - mean)
             st[u] = [n, mean, m2]
-        state.update((json.dumps(st),))
-        if rows:
-            yield pd.DataFrame(rows, columns=["account_id", "t_ms", "amount", "z"])
+        return out, None
 
-    return (
-        _with_epoch(stream)
-        .withColumn("_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS)))
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            ZSCORE_SCHEMA,
-            T.StructType([T.StructField("state_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        stream,
+        step,
+        ZSCORE_SCHEMA,
+        ("account_id", "t_ms", "amount"),
+        order=("t_ms", "event_id"),
     )
 
 
@@ -935,48 +652,20 @@ EWMA_SCHEMA = T.StructType(
 def ewma_stream(stream: DataFrame, alpha: float = 0.2) -> DataFrame:
     """Streaming twin of operators/stateful.ewma_batch: per-account
     EWMA carried across micro-batches as one float of state per key —
-    the smallest possible adaptive-baseline detector state. Bucketed
-    grouping; (account_id, t_us, event_id) fold order exactly as the
-    batch form, so stream==batch is a direct row compare
-    (differential-tested)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    the smallest possible adaptive-baseline detector state. Same
+    (account_id, t_us, event_id) fold order as the batch form, so
+    stream==batch is a direct row compare (differential-tested)."""
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        st: dict[int, float] = (
-            {int(k): v for k, v in json.loads(state.get[0]).items()}
-            if state.exists
-            else {}
-        )
-        rows = []
-        pdf = _group_frame(pdf_iter, ["account_id", "t_us", "event_id"])
-        if pdf is None:
-            pdf = pd.DataFrame(columns=["account_id", "t_us", "amount"])
-        for k, t_us, a in zip(
-            pdf["account_id"].to_numpy(),
-            pdf["t_us"].to_numpy(),
-            pdf["amount"].to_numpy(),
-        ):
-            k = int(k)
+    def step(st, rows, _wm):
+        out = []
+        for k, t, a in rows:
             prev = st.get(k)
-            prev = float(a) if prev is None else alpha * float(a) + (1 - alpha) * prev
+            prev = a if prev is None else alpha * a + (1 - alpha) * prev
             st[k] = prev
-            rows.append((k, int(t_us) // 1000, prev))
-        state.update((json.dumps(st),))
-        if rows:
-            yield pd.DataFrame(rows, columns=["account_id", "t_ms", "ewma"])
+            out.append((k, t, prev))
+        return out, None
 
-    return (
-        _with_epoch(stream)
-        .withColumn("_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS)))
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            EWMA_SCHEMA,
-            T.StructType([T.StructField("state_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_fold(stream, step, EWMA_SCHEMA, ("account_id", "t_ms", "amount"))
 
 
 RISING_SCHEMA = T.StructType(
@@ -996,47 +685,18 @@ def pattern_rising_stream(stream: DataFrame) -> DataFrame:
     carried across micro-batches; a match emits at the third event
     with the full triple — identical rows to the batch lag-window form
     (pattern_rising_3) on the in-order replay, bit-exact because the
-    comparisons are raw fixture doubles with no arithmetic. Bucketed
-    grouping and (account, t_us, event_id) fold order as in the other
-    folds."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    comparisons are raw fixture doubles with no arithmetic."""
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        st: dict[int, list] = (
-            {int(k): v for k, v in json.loads(state.get[0]).items()}
-            if state.exists
-            else {}
-        )
-        rows = []
-        pdf = _group_frame(pdf_iter, ["account_id", "t_us", "event_id"])
-        if pdf is None:
-            pdf = pd.DataFrame(columns=["account_id", "t_us", "amount"])
-        for k, t_us, a in zip(
-            pdf["account_id"].to_numpy(),
-            pdf["t_us"].to_numpy(),
-            pdf["amount"].to_numpy(),
-        ):
-            k, a = int(k), float(a)
+    def step(st, rows, _wm):
+        out = []
+        for k, t, a in rows:
             prev = st.get(k, [])
             if len(prev) == 2 and prev[0] < prev[1] < a:
-                rows.append((k, int(t_us) // 1000, prev[0], prev[1], a))
+                out.append((k, t, prev[0], prev[1], a))
             st[k] = (prev + [a])[-2:]
-        state.update((json.dumps(st),))
-        if rows:
-            yield pd.DataFrame(rows, columns=["account_id", "t_ms", "a1", "a2", "a3"])
+        return out, None
 
-    return (
-        _with_epoch(stream)
-        .withColumn("_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS)))
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            RISING_SCHEMA,
-            T.StructType([T.StructField("state_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_fold(stream, step, RISING_SCHEMA, ("account_id", "t_ms", "amount"))
 
 
 TS_PATTERN_SCHEMA = T.StructType(
@@ -1066,11 +726,8 @@ def ts_pattern_stream(stream: DataFrame, threshold: float) -> DataFrame:
     spike pattern is computed from the SAME rounded-scalar rewrite the
     batch SQL uses (left-fold sums over the buffer in frame order, one
     dot product against the pattern, HALF_UP 6dp rounding), and
-    windows beating the threshold emit. Bucketed grouping and
-    (account, t_us, event_id) fold order as in the other folds."""
+    windows beating the threshold emit."""
     import math
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from ..operators.timeseries import _Q, _SQ1, _SQ2, TS_SIM_K
 
@@ -1097,52 +754,24 @@ def ts_pattern_stream(stream: DataFrame, threshold: float) -> DataFrame:
         )
         return _round6_half_up(math.sqrt(d2 if d2 > 0.0 else 0.0))
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        st: dict[int, list[float]] = (
-            {int(k): v for k, v in json.loads(state.get[0]).items()}
-            if state.exists
-            else {}
-        )
-        rows = []
-        pdf = _group_frame(pdf_iter, ["account_id", "t_us", "event_id"])
-        if pdf is None:
-            pdf = pd.DataFrame(columns=["account_id", "t_us", "event_id", "amount"])
-        for k, eid, a in zip(
-            pdf["account_id"].to_numpy(),
-            pdf["event_id"].to_numpy(),
-            pdf["amount"].to_numpy(),
-        ):
-            k = int(k)
-            buf = st.get(k, [])
-            buf.append(float(a))
+    def step(st, rows, _wm):
+        out = []
+        for k, eid, a in rows:
+            buf = st.setdefault(k, [])
+            buf.append(a)
             if len(buf) == TS_SIM_K:
                 d = dist_of(buf)
                 if d is not None and d < threshold:
-                    rows.append((k, int(eid), d))
+                    out.append((k, eid, d))
                 buf.pop(0)
-            st[k] = buf
-        state.update((json.dumps(st),))
-        if rows:
-            yield pd.DataFrame(rows, columns=["account_id", "event_id", "dist"])
+        return out, None
 
-    return (
-        _with_epoch(stream)
-        .withColumn("_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS)))
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            TS_PATTERN_SCHEMA,
-            T.StructType([T.StructField("state_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        stream, step, TS_PATTERN_SCHEMA, ("account_id", "event_id", "amount")
     )
 
 
 # ------------------------------------------------------------------ SCD2
-
-# scd2_stream state format version (see RECORD_BUFFER_STATE_V)
-SCD2_STATE_V = 1
 
 SCD2_SCHEMA = T.StructType(
     [
@@ -1175,78 +804,33 @@ def scd2_stream(stream: DataFrame, flush_at_ms: int) -> DataFrame:
     build — version numbers, validity bounds, event counts and the
     is_current flags all survive micro-batch boundaries.
 
-    State per bucket: {account: [tier, version, valid_from_ms,
-    n_events]} — O(open versions) = O(accounts), the SCD2 analogue of
-    the reference's per-key ValueState. Same bucketed-key design and
-    versioned-JSON state guard as record_buffer_tumbling_stream."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    State: {account: [tier, version, valid_from_ms, n_events]} —
+    O(open versions) = O(accounts), the SCD2 analogue of the
+    reference's per-key ValueState."""
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob = json.loads(state.get[0])
-            if not isinstance(blob, dict) or blob.get("v") != SCD2_STATE_V:
-                raise ValueError(
-                    "scd2_stream: checkpoint state format "
-                    f"{blob.get('v') if isinstance(blob, dict) else '?'!r} "
-                    f"!= expected v{SCD2_STATE_V} — start from a fresh "
-                    "checkpoint dir"
-                )
-            open_v: dict[int, list] = {
-                int(a): s for a, s in blob["open"].items()
-            }
-        else:
-            open_v = {}
-        rows = []
-        pdf = _group_frame(pdf_iter, ["account_id", "t_us", "event_id"])
-        if pdf is not None:
-            for a, t_us, amt in zip(
-                pdf["account_id"].to_numpy(),
-                pdf["t_us"].to_numpy(),
-                pdf["amount"].to_numpy(),
-            ):
-                a = int(a)
-                t = int(t_us) // 1000
-                tier = _tier_of(float(amt))
-                cur = open_v.get(a)
-                if cur is None:
-                    open_v[a] = [tier, 1, t, 1]
-                elif cur[0] == tier:
-                    cur[3] += 1
-                else:
-                    rows.append(
-                        (a, cur[1], cur[0], cur[2], t, cur[3], False)
-                    )
-                    open_v[a] = [tier, cur[1] + 1, t, 1]
-        wm = state.getCurrentWatermarkMs()
-        if wm >= flush_at_ms:
-            for a in sorted(open_v):
-                tier, ver, vfrom, n = open_v[a]
-                rows.append((a, ver, tier, vfrom, None, n, True))
-            state.remove()
-        else:
-            state.update(
-                (json.dumps({"v": SCD2_STATE_V, "open": open_v}),)
-            )
-            state.setTimeoutTimestamp(max(flush_at_ms, wm + 1))
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SCD2_SCHEMA.fields]
-            )
+    def step(st, rows, wm):
+        out = []
+        for a, t, amt in rows:
+            tier = _tier_of(amt)
+            cur = st.get(a)
+            if cur is None:
+                st[a] = [tier, 1, t, 1]
+            elif cur[0] == tier:
+                cur[3] += 1
+            else:
+                out.append((a, cur[1], cur[0], cur[2], t, cur[3], False))
+                st[a] = [tier, cur[1] + 1, t, 1]
+        if wm < flush_at_ms:
+            return out, max(flush_at_ms, wm + 1)
+        out += [
+            (a, ver, tier, vfrom, None, n, True)
+            for a, (tier, ver, vfrom, n) in sorted(st.items())
+        ]
+        st.clear()
+        return out, None
 
-    return (
-        _with_epoch(stream)
-        .withWatermark("event_time", "0 seconds")
-        .withColumn(
-            "_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS))
-        )
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            SCD2_SCHEMA,
-            T.StructType([T.StructField("open_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_fold(
+        stream, step, SCD2_SCHEMA, ("account_id", "t_ms", "amount"), watermark=True
     )
 
 
@@ -1274,64 +858,30 @@ def temporal_join_stream(stream: DataFrame) -> DataFrame:
     Other event types pass through the fold untouched (neither
     dimension nor fact).
 
-    State per bucket: {account: [since_ms, version, tier]} — the
-    latest dimension version per key, the same O(keys) invariant as
-    the CDC compaction state. No timers: facts never wait (the
-    dimension side needs no watermark hold because visibility is
-    strictly historical), so enrichment latency is one micro-batch."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    State: {account: [since_ms, version, tier]} — the latest dimension
+    version per key, the same O(keys) invariant as the CDC compaction
+    state. No timers: facts never wait (the dimension side needs no
+    watermark hold because visibility is strictly historical), so
+    enrichment latency is one micro-batch."""
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        cur: dict[int, list] = (
-            {int(a): s for a, s in json.loads(state.get[0]).items()}
-            if state.exists
-            else {}
-        )
-        rows = []
-        pdf = _group_frame(pdf_iter, ["account_id", "t_us", "event_id"])
-        if pdf is not None:
-            for a, t_us, amt, et, eid in zip(
-                pdf["account_id"].to_numpy(),
-                pdf["t_us"].to_numpy(),
-                pdf["amount"].to_numpy(),
-                pdf["event_type"].to_numpy(),
-                pdf["event_id"].to_numpy(),
-            ):
-                a = int(a)
-                t = int(t_us) // 1000
-                if et in ("signup", "error"):
-                    prev = cur.get(a)
-                    cur[a] = [t, (prev[1] + 1) if prev else 1, _tier_of(float(amt))]
-                elif et == "purchase":
-                    st = cur.get(a)
-                    rows.append(
-                        (int(eid), a, t, float(amt))
-                        + ((st[2], st[1], st[0]) if st else (None, None, None))
-                    )
-        state.update((json.dumps(cur),))
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TEMPORAL_JOIN_SCHEMA.fields]
-            )
+    def step(st, rows, _wm):
+        out = []
+        for a, t, amt, et, eid in rows:
+            cur = st.get(a)
+            if et in ("signup", "error"):
+                st[a] = [t, (cur[1] + 1) if cur else 1, _tier_of(amt)]
+            elif et == "purchase":
+                status = (cur[2], cur[1], cur[0]) if cur else (None, None, None)
+                out.append((eid, a, t, amt) + status)
+        return out, None
 
-    return (
-        _with_epoch(stream)
-        .withColumn(
-            "_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS))
-        )
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            TEMPORAL_JOIN_SCHEMA,
-            T.StructType([T.StructField("cur_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        stream,
+        step,
+        TEMPORAL_JOIN_SCHEMA,
+        ("account_id", "t_ms", "amount", "event_type", "event_id"),
     )
 
-
-# scd2_tombstoned_stream state format version
-SCD2_TS_STATE_V = 1
 
 SCD2_TS_SCHEMA = T.StructType(
     SCD2_SCHEMA.fields[:6]
@@ -1350,81 +900,39 @@ def scd2_tombstoned_stream(stream: DataFrame, flush_at_ms: int) -> DataFrame:
     The per-account version counter survives deactivated gaps, so it
     lives in state NEXT TO the open version — {account: [open_tier,
     last_version, valid_from, n_events]} with open_tier None while
-    deactivated. Same bucketing, versioned-JSON guard and
-    sentinel-driven timeout flush as scd2_stream."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    deactivated. Same sentinel-driven timeout flush as scd2_stream."""
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob = json.loads(state.get[0])
-            if not isinstance(blob, dict) or blob.get("v") != SCD2_TS_STATE_V:
-                raise ValueError(
-                    "scd2_tombstoned_stream: checkpoint state format "
-                    f"{blob.get('v') if isinstance(blob, dict) else '?'!r} "
-                    f"!= expected v{SCD2_TS_STATE_V} — start from a fresh "
-                    "checkpoint dir"
-                )
-            st: dict[int, list] = {int(a): s for a, s in blob["st"].items()}
-        else:
-            st = {}
-        rows = []
-        pdf = _group_frame(pdf_iter, ["account_id", "t_us", "event_id"])
-        if pdf is not None:
-            for a, t_us, amt, et in zip(
-                pdf["account_id"].to_numpy(),
-                pdf["t_us"].to_numpy(),
-                pdf["amount"].to_numpy(),
-                pdf["event_type"].to_numpy(),
-            ):
-                a = int(a)
-                t = int(t_us) // 1000
-                cur = st.get(a)
-                if et == "error":
-                    if cur is not None and cur[0] is not None:
-                        rows.append(
-                            (a, cur[1], cur[0], cur[2], t, cur[3],
-                             "tombstone", False)
-                        )
-                        st[a] = [None, cur[1], 0, 0]
-                    continue
-                tier = _tier_of(float(amt))
-                if cur is None or cur[0] is None:
-                    last_ver = cur[1] if cur is not None else 0
-                    st[a] = [tier, last_ver + 1, t, 1]
-                elif cur[0] == tier:
-                    cur[3] += 1
-                else:
-                    rows.append(
-                        (a, cur[1], cur[0], cur[2], t, cur[3], "change", False)
-                    )
-                    st[a] = [tier, cur[1] + 1, t, 1]
-        wm = state.getCurrentWatermarkMs()
-        if wm >= flush_at_ms:
-            for a in sorted(st):
-                tier, ver, vfrom, n = st[a]
-                if tier is not None:
-                    rows.append((a, ver, tier, vfrom, None, n, None, True))
-            state.remove()
-        else:
-            state.update((json.dumps({"v": SCD2_TS_STATE_V, "st": st}),))
-            state.setTimeoutTimestamp(max(flush_at_ms, wm + 1))
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SCD2_TS_SCHEMA.fields]
-            )
+    def step(st, rows, wm):
+        out = []
+        for a, t, amt, et in rows:
+            cur = st.get(a)
+            if et == "error":
+                if cur is not None and cur[0] is not None:
+                    out.append((a, cur[1], cur[0], cur[2], t, cur[3], "tombstone", False))
+                    st[a] = [None, cur[1], 0, 0]
+                continue
+            tier = _tier_of(amt)
+            if cur is None or cur[0] is None:
+                st[a] = [tier, (cur[1] if cur is not None else 0) + 1, t, 1]
+            elif cur[0] == tier:
+                cur[3] += 1
+            else:
+                out.append((a, cur[1], cur[0], cur[2], t, cur[3], "change", False))
+                st[a] = [tier, cur[1] + 1, t, 1]
+        if wm < flush_at_ms:
+            return out, max(flush_at_ms, wm + 1)
+        out += [
+            (a, ver, tier, vfrom, None, n, None, True)
+            for a, (tier, ver, vfrom, n) in sorted(st.items())
+            if tier is not None
+        ]
+        st.clear()
+        return out, None
 
-    return (
-        _with_epoch(stream)
-        .withWatermark("event_time", "0 seconds")
-        .withColumn(
-            "_bucket", F.pmod(F.xxhash64("account_id"), F.lit(N_FOLD_BUCKETS))
-        )
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            fn,
-            SCD2_TS_SCHEMA,
-            T.StructType([T.StructField("st_json", T.StringType())]),
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_fold(
+        stream,
+        step,
+        SCD2_TS_SCHEMA,
+        ("account_id", "t_ms", "amount", "event_type"),
+        watermark=True,
     )

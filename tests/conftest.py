@@ -61,3 +61,22 @@ def tiny_arrow_batches(spark):
         spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": TINY_ARROW_BATCH}
     ):
         yield
+
+
+def assert_zscore_matches_batch_window(spark, streamed) -> None:
+    """Streaming Welford z-score alerts vs the batch prefix-window form
+    (zscore_alerts_3sigma): the flagged (account, t_ms) sets must agree
+    and every z must match to 1e-6 (Welford and sum/n mean differ only
+    in ulps; both gates round at 6dp)."""
+    from flink_fraud_detection_rocks_db_app_spark.registry import all_queries
+
+    got = {(r.account_id, r.t_ms): r.z for r in streamed.collect()}
+    want = {
+        (r.account_id, r.t_ms): r.z
+        for r in all_queries()["zscore_alerts_3sigma"].fn(spark, SF_SMALL).collect()
+    }
+    assert got, "no streamed z-score alerts"
+    assert set(got) == set(want), (
+        sorted(set(got) ^ set(want))[:5], len(got), len(want))
+    for kk, z in got.items():
+        assert abs(z - want[kk]) <= 1e-6, (kk, z, want[kk])

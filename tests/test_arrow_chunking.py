@@ -4,15 +4,17 @@ folds (VERDICT r6 #1 + ADVICE r6 high):
 1. Groups spanning MANY Arrow chunks per micro-batch. Arrow hands
    applyInPandasWithState each group as an iterator of chunks bounded
    by spark.sql.execution.arrow.maxRecordsPerBatch (default 10k); the
-   r6 fix (`_group_frame`) concats all chunks BEFORE sorting because
-   per-chunk sorting silently folds rows in the wrong order once a
-   group's batch exceeds one chunk. These tests pin that: they shrink
-   maxRecordsPerBatch to 8, scramble row order WITHIN each replay
-   chunk file (chunk membership — hence watermark/batch semantics —
-   unchanged), prove via a chunk-counting probe that groups really do
-   span >1 chunk, and assert bit-exact stream==batch for the
-   order-sensitive folds (F5 running sum, EWMA, count-or-time,
-   funnel). Reverting `_group_frame` to per-chunk sorting fails them.
+   streaming fold runner (`streaming/stateful._keyed_fold`) concats all
+   chunks BEFORE sorting because per-chunk sorting silently folds rows
+   in the wrong order once a group's batch exceeds one chunk. These
+   tests pin that: they shrink maxRecordsPerBatch to 8, scramble row
+   order WITHIN each replay chunk file (chunk membership — hence
+   watermark/batch semantics — unchanged), prove via a chunk-counting
+   probe that groups really do span >1 chunk, and assert stream==batch
+   for order-sensitive folds under each of the runner's three fold
+   orders: (t_us, event_id) (F5 running sum, EWMA, count-or-time,
+   ts-pattern), (t_ms, event_type) (funnel) and (t_ms, event_id)
+   (z-score). Sorting per chunk in the runner fails them.
 
 2. The EventTimeTimeout empty-iterator flush. When a key's timeout
    fires in a micro-batch that brought it NO rows, Spark invokes the
@@ -48,7 +50,7 @@ from flink_fraud_detection_rocks_db_app_spark.streaming import (
     write_replay_chunks,
 )
 
-from .conftest import SF_SMALL, TINY_ARROW_BATCH
+from .conftest import SF_SMALL, TINY_ARROW_BATCH, assert_zscore_matches_batch_window
 
 
 def _scramble_within_chunks(chunks_dir: str) -> None:
@@ -222,6 +224,20 @@ def test_funnel_stream_multichunk_matches_batch(spark, scratch, tiny_arrow_batch
             assert u not in latest, u
         else:
             assert latest.get(u) == (stage, t), (u, batch[u], latest.get(u))
+
+
+def test_zscore_stream_multichunk_matches_batch_window(
+    spark, scratch, tiny_arrow_batches
+):
+    """z-score under forced multi-chunk groups: the (t_ms, event_id)
+    fold order. Each event is flagged against its prior history, so a
+    mis-ordered fold moves the flagged set."""
+    from flink_fraud_detection_rocks_db_app_spark.streaming import zscore_alerts_stream
+
+    chunks = _multichunk_replay(spark, scratch)
+    out = zscore_alerts_stream(read_replay_stream(spark, chunks))
+    run_to_memory(out, "t_zscore_chunked")
+    assert_zscore_matches_batch_window(spark, spark.table("t_zscore_chunked"))
 
 
 # ------------------------------------------- EventTimeTimeout flush

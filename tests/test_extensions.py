@@ -1270,67 +1270,6 @@ def test_bucketed_asof_enrich_raises_past_horizon(spark):
         enrich_events_asof_bucketed(ok, empty, bucket_ms)
 
 
-def test_bounded_state_decode_pickle_corrupt_raises_versioned(spark):
-    """The pickle A/B arm of the WA4 state codec must surface truncated
-    or wrong-shape checkpoint bytes as the SAME versioned 'fresh
-    checkpoint dir' ValueError the JSON arm gives (ADVICE r10), never a
-    raw UnpicklingError."""
-    import pickle
-
-    import pytest
-
-    from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import (
-        BOUNDED_BUFFER_STATE_V,
-        _bounded_state_decode,
-        _bounded_state_encode,
-    )
-
-    from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import N_FOLD_BUCKETS
-
-    wins = {1: {0: 2.5, 3_600_000: 4.0}}
-    # round-trip still works
-    (blob,) = _bounded_state_encode(wins, "pickle")
-    assert _bounded_state_decode(blob, "pickle") == wins
-    # truncated bytes -> versioned ValueError, not UnpicklingError
-    with pytest.raises(ValueError, match="fresh checkpoint dir"):
-        _bounded_state_decode(blob[: len(blob) // 2], "pickle")
-    # wrong shape (not the (version, nb, wins) 3-tuple; a 2-tuple is
-    # the retired v1 layout) -> versioned ValueError
-    with pytest.raises(ValueError, match="fresh checkpoint dir"):
-        _bounded_state_decode(pickle.dumps({"not": "a tuple"}), "pickle")
-    with pytest.raises(ValueError, match="fresh checkpoint dir"):
-        _bounded_state_decode(
-            pickle.dumps((1, wins), protocol=5), "pickle"
-        )
-    # wrong version -> the existing versioned message
-    with pytest.raises(ValueError, match=f"v{BOUNDED_BUFFER_STATE_V}"):
-        _bounded_state_decode(
-            pickle.dumps(
-                (BOUNDED_BUFFER_STATE_V + 1, N_FOLD_BUCKETS, wins), protocol=5
-            ),
-            "pickle",
-        )
-    # bucket-count mismatch -> the grouping-key-binding rejection
-    # (ADVICE r13): the bucket count is part of the stateful grouping
-    # key, so a checkpoint written under a different
-    # SPARK_GRAFT_FOLD_BUCKETS must fail loudly on restore, both arms
-    with pytest.raises(ValueError, match="fold buckets"):
-        _bounded_state_decode(
-            pickle.dumps(
-                (BOUNDED_BUFFER_STATE_V, N_FOLD_BUCKETS * 2, wins), protocol=5
-            ),
-            "pickle",
-        )
-    import json as _json
-
-    (jblob,) = _bounded_state_encode(wins, "json")
-    parsed = _json.loads(jblob)
-    assert parsed["nb"] == N_FOLD_BUCKETS
-    parsed["nb"] = N_FOLD_BUCKETS * 2
-    with pytest.raises(ValueError, match="fold buckets"):
-        _bounded_state_decode(_json.dumps(parsed), "json")
-
-
 def test_export_shard_manifest_dense_and_subset_stable(spark):
     """The two properties a training export must hold: (a) positions
     within every shard are dense 0..n-1 (a dataloader can seek by
@@ -2073,40 +2012,39 @@ def test_mg_sketch_bound_and_exactness(spark):
     assert all(r.est_within_bound for r in rows)
 
 
-def test_record_buffer_state_decode_rejections(spark):
-    """The WA5 record-buffer restore contract (ADVICE r13): the
-    versioned JSON blob round-trips; a pre-bump version and a
-    fold-bucket-count mismatch both raise the loud versioned errors
-    instead of silently re-homing state."""
+def test_fold_state_codec_round_trip_and_rejections():
+    """The one state envelope every streaming fold restores through: the
+    round trip keeps int keys at every depth, nested window dicts, None
+    and floats exactly; an envelope from an older format version (or a
+    bare pre-envelope dict) and one written under a different fold-bucket
+    count both raise instead of silently re-homing state."""
     import json
 
     import pytest
 
     from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import (
-        N_FOLD_BUCKETS,
-        RECORD_BUFFER_STATE_V,
-        _record_buffer_state_decode,
+        STATE_V,
+        _state_decode,
+        _state_encode,
     )
 
-    wins = {7: {0: 1.5, 3_600_000: 2.0}}
-    blob = json.dumps(
-        {"v": RECORD_BUFFER_STATE_V, "nb": N_FOLD_BUCKETS, "wins": wins}
-    )
-    assert _record_buffer_state_decode(blob) == wins
-    with pytest.raises(ValueError, match=f"v{RECORD_BUFFER_STATE_V}"):
-        _record_buffer_state_decode(
-            json.dumps({"v": RECORD_BUFFER_STATE_V - 1, "wins": wins})
-        )
+    nb = 64
+    st = {
+        7: {0: 1.5, 3_600_000: 0.1 + 0.2},
+        -1: [None, 2, 1e-300],
+        12: 1 / 3,
+    }
+    blob = _state_encode(st, nb)
+    assert json.loads(blob)["nb"] == nb
+    assert _state_decode(blob, nb) == st
+    for old in (
+        json.dumps({"v": STATE_V - 1, "nb": nb, "st": {}}),
+        json.dumps({"7": 1.5}),
+    ):
+        with pytest.raises(ValueError, match=f"v{STATE_V}"):
+            _state_decode(old, nb)
     with pytest.raises(ValueError, match="fold buckets"):
-        _record_buffer_state_decode(
-            json.dumps(
-                {
-                    "v": RECORD_BUFFER_STATE_V,
-                    "nb": N_FOLD_BUCKETS + 1,
-                    "wins": wins,
-                }
-            )
-        )
+        _state_decode(blob, nb * 2)
 
 
 def test_pq_refresh_reduces_quantization_error(spark):

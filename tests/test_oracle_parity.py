@@ -28,10 +28,14 @@ _FULL = os.environ.get("SPARK_GRAFT_FULL_PARITY", "") == "1"
 # Deterministic stride sample: alphabetical order clusters names by
 # family prefix, so every 6th name touches each operator family. The
 # pinned faces add the replay-harness shapes the stride misses (no
-# sentinel; complete output mode) and every batch sorted-account fold.
+# sentinel; complete output mode), the two streaming folds no other
+# default test runs (rising pattern, temporal join) and every batch
+# sorted-account fold.
 _PINNED = [
     "stream_cdc_upsert_replay",
     "stream_running_sum_alerts_replay",
+    "stream_pattern_rising_replay",
+    "stream_temporal_join_replay",
     "running_sum_alerts_gt_500",
     "running_mean_alerts_gt_90",
     "ewma_amount_per_account",

@@ -205,6 +205,46 @@ def test_stateful_detector_checkpoint_restart(spark, scratch):
     assert all(abs(g[2] - w[2]) < 1e-9 for g, w in zip(got, want))
 
 
+def test_fold_checkpoint_rejects_changed_bucket_count(spark, scratch, monkeypatch):
+    """A streaming fold's checkpoint binds the bucket count it was
+    written under, because the bucket is the grouping key: restarting
+    F5 under a different N_FOLD_BUCKETS must fail loudly instead of
+    resuming accounts on other buckets' state."""
+    import pytest
+
+    from flink_fraud_detection_rocks_db_app_spark.streaming import stateful
+
+    chunks = write_replay_chunks(spark, SF_SMALL, scratch, n_chunks=6)
+    files = sorted(glob.glob(os.path.join(chunks, "*.parquet")))
+    live = os.path.join(scratch, "live")
+    out = os.path.join(scratch, "out")
+    ckpt = os.path.join(scratch, "ckpt")
+    os.makedirs(live)
+
+    def run_once():
+        q = (
+            stateful.running_sum_alerts_stream(read_replay_stream(spark, live), 500.0)
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    for f in files[:3]:
+        shutil.copy2(f, live)
+    run_once()
+    for f in files[3:]:
+        shutil.copy2(f, live)
+    monkeypatch.setattr(stateful, "N_FOLD_BUCKETS", stateful.N_FOLD_BUCKETS * 2)
+    with pytest.raises(Exception, match="fold buckets"):
+        run_once()
+
+
 def test_foreach_batch_idempotent_sink(spark, scratch):
     """foreachBatch exactly-once contract: (a) double delivery of the
     same batchId leaves exactly one copy (idempotent overwrite);

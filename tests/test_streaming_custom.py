@@ -23,7 +23,7 @@ from flink_fraud_detection_rocks_db_app_spark.streaming import (
     write_replay_chunks,
 )
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, assert_zscore_matches_batch_window
 
 
 def test_count_or_time_stream_matches_batch_segments(spark, scratch):
@@ -380,28 +380,14 @@ def test_funnel_stream_matches_batch_funnel(spark, scratch):
 
 
 def test_zscore_stream_matches_batch_window(spark, scratch):
-    """Streaming Welford z-score vs the batch prefix-window form: the
-    flagged (account, t_ms) sets must agree and every z must match to
-    1e-6 (Welford and sum/n mean differ only in ulps; both gates round
-    at 6dp)."""
-    from flink_fraud_detection_rocks_db_app_spark.registry import all_queries
+    """Streaming Welford z-score vs the batch prefix-window form, over
+    the 6-chunk replay."""
     from flink_fraud_detection_rocks_db_app_spark.streaming import zscore_alerts_stream
 
     chunks = write_replay_chunks(spark, SF_SMALL, scratch, n_chunks=6)
     out = zscore_alerts_stream(read_replay_stream(spark, chunks))
     run_to_memory(out, "t_zscore")
-    got = {
-        (r.account_id, r.t_ms): r.z for r in spark.table("t_zscore").collect()
-    }
-    want = {
-        (r.account_id, r.t_ms): r.z
-        for r in all_queries()["zscore_alerts_3sigma"].fn(spark, SF_SMALL).collect()
-    }
-    assert got, "no streamed z-score alerts"
-    assert set(got) == set(want), (
-        sorted(set(got) ^ set(want))[:5], len(got), len(want))
-    for kk, z in got.items():
-        assert abs(z - want[kk]) <= 1e-6, (kk, z, want[kk])
+    assert_zscore_matches_batch_window(spark, spark.table("t_zscore"))
 
 
 def test_ewma_stream_equals_batch_fold(spark, scratch):
@@ -521,43 +507,6 @@ def test_bounded_record_buffer_cap_and_eviction_free_path(spark, scratch):
             assert any(len(ws) > cap for ws in keep.values()), "cap never bit"
         for k, v in got.items():
             assert abs(v - want[k]) < 1e-9, k
-
-
-def test_bounded_record_buffer_state_codec_differential(spark, scratch):
-    """WA4 state-encoding A/B arm (SCALE.md r10 state-floor probe): the
-    binary/pickle state codec must be OUTPUT-IDENTICAL to the default
-    versioned-json codec over the same tight-cap replay — the codec
-    only changes the bytes at rest, never the fold."""
-    from flink_fraud_detection_rocks_db_app_spark.streaming import (
-        append_sentinel_chunk,
-        record_buffer_bounded_tumbling_stream,
-    )
-
-    size_ms = MS["d"]
-    chunks = write_replay_chunks(spark, SF_SMALL, scratch, n_chunks=3)
-    batch_src = read_replay_batch(spark, chunks)
-    max_us = batch_src.agg(F.max(F.unix_micros("event_time"))).collect()[0][0]
-    flush_at_ms = max_us // 1000 + 1
-    append_sentinel_chunk(chunks, max_us + 40 * MS["d"] * 1000)
-
-    outs = {}
-    for codec in ("json", "pickle"):
-        name = f"t_wa4_codec_{codec}"
-        agg = record_buffer_bounded_tumbling_stream(
-            read_replay_stream(spark, chunks),
-            size_ms,
-            5,
-            flush_at_ms,
-            state_codec=codec,
-        )
-        run_to_memory(agg, name)
-        outs[codec] = {
-            (r.w_start, r.account_id): r.sum_amount
-            for r in spark.table(name).collect()
-            if r.account_id != -1
-        }
-    assert outs["json"], "empty output"
-    assert outs["pickle"] == outs["json"]
 
 
 def test_ingest_replay_faces_leave_no_cross_run_result_assets(spark):
