@@ -96,8 +96,13 @@ def _state_encode(st: dict, nb: int) -> str:
 def _state_decode(raw: str, nb: int) -> dict:
     """Restore one bucket's state, raising on (a) an envelope from before
     a state-shape change and (b) a checkpoint written under a different
-    bucket count: both must fail loudly, not be reinterpreted."""
-    blob = json.loads(raw)
+    bucket count: both must fail loudly, not be reinterpreted. Bytes
+    that are not a JSON envelope at all (truncated, or a blob of the
+    retired pickle arm) get the same versioned error as (a)."""
+    try:
+        blob = json.loads(raw)
+    except ValueError:
+        blob = None
     v = blob.get("v") if isinstance(blob, dict) else None
     if v != STATE_V:
         raise ValueError(

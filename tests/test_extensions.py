@@ -2012,18 +2012,13 @@ def test_mg_sketch_bound_and_exactness(spark):
     assert all(r.est_within_bound for r in rows)
 
 
-def test_fold_state_codec_round_trip_and_rejections():
+def test_fold_state_codec_round_trip():
     """The one state envelope every streaming fold restores through: the
     round trip keeps int keys at every depth, nested window dicts, None
-    and floats exactly; an envelope from an older format version (or a
-    bare pre-envelope dict) and one written under a different fold-bucket
-    count both raise instead of silently re-homing state."""
+    and floats exactly."""
     import json
 
-    import pytest
-
     from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import (
-        STATE_V,
         _state_decode,
         _state_encode,
     )
@@ -2037,14 +2032,65 @@ def test_fold_state_codec_round_trip_and_rejections():
     blob = _state_encode(st, nb)
     assert json.loads(blob)["nb"] == nb
     assert _state_decode(blob, nb) == st
+
+
+def test_record_buffer_state_decode_rejections():
+    """The record-buffer restore contract, now held by the one fold-state
+    codec: its window state round-trips; an envelope from an older
+    format version (or a bare pre-envelope dict) and one written under a
+    different fold-bucket count both raise instead of silently re-homing
+    state."""
+    import json
+
+    import pytest
+
+    from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import (
+        N_FOLD_BUCKETS,
+        STATE_V,
+        _state_decode,
+        _state_encode,
+    )
+
+    wins = {7: {0: 1.5, 3_600_000: 2.0}}
+    blob = _state_encode(wins, N_FOLD_BUCKETS)
+    assert _state_decode(blob, N_FOLD_BUCKETS) == wins
     for old in (
-        json.dumps({"v": STATE_V - 1, "nb": nb, "st": {}}),
-        json.dumps({"7": 1.5}),
+        json.dumps({"v": STATE_V - 1, "nb": N_FOLD_BUCKETS, "st": wins}),
+        json.dumps({"7": {"0": 1.5}}),
     ):
         with pytest.raises(ValueError, match=f"v{STATE_V}"):
-            _state_decode(old, nb)
+            _state_decode(old, N_FOLD_BUCKETS)
     with pytest.raises(ValueError, match="fold buckets"):
-        _state_decode(blob, nb * 2)
+        _state_decode(blob, N_FOLD_BUCKETS + 1)
+
+
+def test_bounded_state_decode_pickle_corrupt_raises_versioned():
+    """Bytes that are not a state envelope must surface as the versioned
+    'fresh checkpoint dir' ValueError, never a raw decoder error: a
+    truncated envelope, a non-object JSON value, and a bounded-buffer
+    blob written by the retired pickle state arm (a (version, nb, wins)
+    tuple)."""
+    import pickle
+
+    import pytest
+
+    from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import (
+        N_FOLD_BUCKETS,
+        _state_decode,
+        _state_encode,
+    )
+
+    wins = {1: {0: 2.5, 3_600_000: 4.0}}
+    blob = _state_encode(wins, N_FOLD_BUCKETS)
+    assert _state_decode(blob, N_FOLD_BUCKETS) == wins
+    for bad in (
+        blob[: len(blob) // 2],
+        "[3, 64]",
+        pickle.dumps((3, N_FOLD_BUCKETS, wins), protocol=5),
+        pickle.dumps({"not": "a tuple"}),
+    ):
+        with pytest.raises(ValueError, match="fresh checkpoint dir"):
+            _state_decode(bad, N_FOLD_BUCKETS)
 
 
 def test_pq_refresh_reduces_quantization_error(spark):
