@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from ..fixtures import load
 from ..functions import whitespace_tokens, word_ngrams
 from ..registry import register
-from ..session import env_int
 from .text import _STOP_SQL
 
 # Normalized whitespace-token view of documents; texts are single-space
@@ -183,8 +182,9 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash family changed r3; the semantic oracle — pair set == exact
     # Jaccard — is family-agnostic, and the recall contract is
     # re-asserted at two sfs in tests/test_extensions.py.)
-    # Settled by warm-session A/B (scripts/ab_minhash.py, interleaved
-    # min-of-N at sf0.1, identical downstream): hash-once best 2.04 s
+    # Settled by warm-session A/B (interleaved min-of-N at sf0.1,
+    # identical downstream; SCALE.md "Per-family shuffle budget",
+    # MinHash-LSH row): hash-once best 2.04 s
     # vs per-shingle-×-k best 2.30 s; medians within noise. The r3
     # bench's 3.02 s was scheduler noise on top of this, not an
     # algorithmic regression — and the k-fold reduction in
@@ -608,7 +608,7 @@ def dedup_ngram_jaccard_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ngram_pruned_pairs(
-    spark: SparkSession, sf_dir: str, persist_postings: bool | None = None
+    spark: SparkSession, sf_dir: str, persist_postings: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     # Same group-postings-once / expand-pairs-in-array shape as the
     # unpruned query — document frequency IS the posting-list size, so
@@ -622,8 +622,8 @@ def ngram_pruned_pairs(
     # consumer. Measured at sf0.1 a localCheckpoint of `kept` is a
     # wash (the build is one scan-local pass + one bounded shuffle);
     # at 100 TB persist `kept` explicitly if the rebuild shows up.
-    # r4 follow-up (scripts/ab_ngram_reuse.py): a deterministic
-    # spelling — df via groupBy(s).count() + join, no collect_list in
+    # r4 follow-up (warm-session A/B, SCALE.md "Scale probe", ngram
+    # dedup entry): a deterministic spelling — df via groupBy(s).count() + join, no collect_list in
     # the shared subtree — was ALSO a wash (candidate 2.94 s vs
     # current 2.86 s min-of-3 at sf0.1, identical 256-row output) and
     # materialized zero ReusedExchange nodes under AQE while doubling
@@ -637,58 +637,23 @@ def ngram_pruned_pairs(
     # tag-union rewrite (sizes + pairs from one build, one mixed-key
     # shuffle) was also measured and loses at BOTH scales; two
     # specialized shuffles with map-side partial agg beat one fat one.
-    # persist_postings is scale-adaptive since r15 (VERDICT r14 #5):
-    # None (the default) resolves from the documents source's on-disk
-    # size — off below POSTINGS_PERSIST_MIN_BYTES (sf0.1 is 0.6 MB, a
-    # measured wash, and the driver's bench row stays comparable), on
-    # above it (the 10x probe regime where the r5 measurement wins
-    # 2.8x). Callers can still force either way; at corpus scale
-    # trigger the action then unpersist the returned `kept`.
+    # The registered faces keep the lazy single-plan form (a returned
+    # DataFrame cannot scope an unpersist); at corpus scale call with
+    # persist_postings=True, trigger the action, then unpersist `kept`.
     sized, kept = _pruned_pair_counts(spark, sf_dir, persist_postings)
     j = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
     out = sized.where(j >= 0.5).select("doc_a", "doc_b", j.alias("jaccard"))
     return out, kept
 
 
-# Auto-persist threshold for the shared postings build: the two
-# consumers of `kept` cannot share the shuffle (collect_list blocks
-# ReuseExchange), so the build runs twice unless persisted. Measured:
-# a wash at sf0.1 (0.6 MB documents), a 2.8x win at the 10x probe
-# (~6 MB) — r5 scale_probe. 2 MB splits the two regimes; env knob for
-# deployments whose executors price recompute differently.
-POSTINGS_PERSIST_MIN_BYTES = 2 << 20
-
-
-def _postings_persist_auto(sf_dir: str) -> bool:
-    """Scale-adaptive default for persist_postings: one driver-side
-    stat of the documents source (file or directory), no Spark work."""
-    path = f"{sf_dir}/documents.parquet"
-    try:
-        if os.path.isdir(path):
-            size = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    size += os.path.getsize(os.path.join(root, f))
-        else:
-            size = os.path.getsize(path)
-    except OSError:
-        return False
-    return size >= env_int(
-        "SPARK_GRAFT_POSTINGS_PERSIST_BYTES", POSTINGS_PERSIST_MIN_BYTES
-    )
-
-
 def _pruned_pair_counts(
-    spark: SparkSession, sf_dir: str, persist_postings: bool | None = None
+    spark: SparkSession, sf_dir: str, persist_postings: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     """Shared core of the Jaccard and containment pair queries: one
     postings build -> DF cutoff -> in-array pair expansion -> per-pair
     common counts joined with both docs' pruned set sizes (na, nb).
     Returns (sized pair frame, the `kept` postings for optional
-    persist scoping). persist_postings=None resolves scale-adaptively
-    from the documents source size (r15, VERDICT r14 #5)."""
-    if persist_postings is None:
-        persist_postings = _postings_persist_auto(sf_dir)
+    persist scoping)."""
     sh = shingled(spark, sf_dir)
     ex = sh.select(
         "doc_id", F.explode(F.transform("shingles", lambda s: F.xxhash64(s))).alias("s")

@@ -27,8 +27,9 @@ lists) accretes part-files, and at 100 TB the small-files cost —
 listing, footer reads, task-per-file scheduling — grows with BATCH
 COUNT even though data volume doesn't. Compaction rewrites the table
 to one file per partition (plus an optional associative pre-merge for
-segment rows the reader aggregates anyway), behind the same crash-safe
-whole-directory swap pipeline.compact_prep_ledger established —
+segment rows the reader aggregates anyway), behind the crash-recoverable
+whole-directory swap (_swap_dir/_recover_swap) that
+pipeline.compact_prep_ledger and warehouse.compact_date_partitions share —
 probe results are preserved by construction and pinned by test.
 """
 
@@ -136,12 +137,21 @@ def ensure_index(
     return idx
 
 
+def _aside(live: str) -> str:
+    """_swap_dir's deterministic name for the displaced copy. A
+    Hive-style partition directory (`k=v`) gets a dotted name, which
+    partition discovery skips, so readers of the table never see the
+    copy as an extra partition value."""
+    head, name = os.path.split(live)
+    return os.path.join(head, f".{name}.old") if "=" in name else f"{live}.old"
+
+
 def _recover_swap(live: str) -> None:
     """Heal a crash inside _swap_dir's two-rename window: if the live
     directory is missing but its deterministic displaced copy exists,
     put it back. Idempotent; callers invoke it before touching a
     swappable table."""
-    old = f"{live}.old"
+    old = _aside(live)
     if not os.path.isdir(live) and os.path.isdir(old):
         os.rename(old, live)
 
@@ -149,13 +159,13 @@ def _recover_swap(live: str) -> None:
 def _swap_dir(live: str, tmp: str) -> None:
     """Replace `live` with fully-written `tmp`. POSIX can't rename onto
     a non-empty directory, so there IS a window between the two renames
-    where `live` is absent — but the displaced copy has the
-    DETERMINISTIC name `live.old` (not a random hex dir), so a crash
-    there is healed automatically by _recover_swap on the next touch
-    instead of requiring manual recovery (ADVICE r13). Single-writer
-    per asset (the ensure_index publish contract); a reader racing the
-    swap can transiently see path-not-found and should retry."""
-    old = f"{live}.old"
+    where `live` is absent — but the displaced copy has a DETERMINISTIC
+    name (`_aside`, not a random hex dir), so a crash there is healed
+    automatically by _recover_swap on the next touch instead of
+    requiring manual recovery (ADVICE r13). Single-writer per asset
+    (the ensure_index publish contract); a reader racing the swap can
+    transiently see path-not-found and should retry."""
+    old = _aside(live)
     shutil.rmtree(old, ignore_errors=True)  # leftover from a prior crash
     os.rename(live, old)
     os.rename(tmp, live)
@@ -186,9 +196,10 @@ def compact_parquet_table(
     probe), and optionally re-sorting each partition's rows by
     `sort_col` (the z-order recluster: appends land in the right
     coarse bucket but interleave z runs, so row-group min/max stats
-    loosen until the rewrite re-sorts them). Crash-safe
-    whole-directory swap (the compact_prep_ledger pattern): a crash
-    leaves either the old table intact or the new one published.
+    loosen until the rewrite re-sorts them). Crash-recoverable
+    whole-directory swap (_swap_dir): a crash leaves the old table
+    intact, the new one published, or the old one displaced under a
+    name _recover_swap restores on the next call.
     Returns the number of part-files compacted away (0 = already
     compact, no-op)."""
     from pyspark.sql import functions as F

@@ -206,16 +206,18 @@ def compact_prep_ledger(spark: SparkSession, ledger: str) -> int:
     — associative, so compact-then-merge == merge), so the per-language
     report is preserved by construction (pinned by test).
 
-    Crash-safe whole-directory swap (the indexcache publish idea): the
-    merged segment is staged into a sibling '.tmp-' ledger and two
-    renames swap the directories — a crash leaves either the old
-    ledger intact (stage incomplete) or the new one published; staged
-    and live segments are never globbed together. Returns the number
-    of segments compacted away (0 = already compact, no-op)."""
+    Crash-recoverable whole-directory swap (indexcache._swap_dir): the
+    merged segment is staged into a sibling '.tmp-' ledger and swapped
+    in; a crash mid-swap is healed by _recover_swap on the next call,
+    and staged and live segments are never globbed together. Returns
+    the number of segments compacted away (0 = already compact,
+    no-op)."""
     import os
-    import shutil
     import uuid
 
+    from .indexcache import _recover_swap, _swap_dir
+
+    _recover_swap(ledger)
     segs = sorted(
         d for d in os.listdir(ledger) if d.startswith("seg=")
     )
@@ -230,10 +232,7 @@ def compact_prep_ledger(spark: SparkSession, ledger: str) -> int:
     merged.write.mode("overwrite").parquet(
         os.path.join(tmp, f"seg=c{uuid.uuid4().hex[:8]}")
     )
-    old_dir = f"{ledger}.old-{uuid.uuid4().hex[:8]}"
-    os.rename(ledger, old_dir)
-    os.rename(tmp, ledger)
-    shutil.rmtree(old_dir, ignore_errors=True)
+    _swap_dir(ledger, tmp)
     return len(segs) - 1
 
 

@@ -72,9 +72,9 @@ def paned_sliding_stream(
     once the watermark closes both stages (asserted by differential
     test).
 
-    Measured crossover (scripts/ab_paned_sliding.py — sf0.1 replay,
-    6 micro-batches, local[32], min-of-2 per point, densify=k replays
-    each event k times): naive 7.96 s / paned 10.18 s at 1× (600k
+    Measured crossover (SCALE.md "Per-family shuffle budget",
+    Streaming row — sf0.1 replay, 6 micro-batches, local[32], min-of-2
+    per point, each event replayed k times): naive 7.96 s / paned 10.18 s at 1× (600k
     events), naive 8.82 s / paned 10.50 s at 10× (6M), naive 14.02 s /
     **paned 12.04 s at 40×** (24M events). The second state store
     costs a fixed ~2.2 s/replay of per-batch open/commit, but the
@@ -107,8 +107,8 @@ def paned_sliding_stream(
     return out.select(*cols, "sum_amount")
 
 
-# Measured paned-vs-naive crossover (scripts/ab_paned_sliding.py,
-# SCALE.md "Paned sliding crossover"): under the 50s/10s config
+# Measured paned-vs-naive crossover (SCALE.md "Per-family shuffle
+# budget", Streaming row): under the 50s/10s config
 # (overlap = size/slide = 5) the second state store costs a fixed
 # ~2.2 s per replay while cutting the per-event state-write slope
 # ~2.7×; panes start winning once a micro-batch carries roughly 4M
@@ -128,8 +128,8 @@ def sliding_sum_stream(
     expected_events_per_batch: int | None = None,
 ) -> DataFrame:
     """Sliding-window streaming SUM with the measured plan choice
-    built in, so callers get the scripts/ab_paned_sliding.py guidance
-    without reading SCALE.md.
+    built in, so callers get the measured crossover guidance (SCALE.md
+    "Per-family shuffle budget", Streaming row) without reading it.
 
     mode:
     - "naive": one sliding-window agg; each event writes

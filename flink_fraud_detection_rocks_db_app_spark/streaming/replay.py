@@ -96,13 +96,9 @@ def write_replay_chunks(
     n_chunks: int = 8,
     jitter_ms: int = 0,
     late_every: int = 0,
-    densify: int = 1,
     dup_every: int = 0,
     defer_tail_ms: int = 0,
     with_event_type: bool = False,
-    densify_fresh_keys: bool = False,
-    distributed: bool = False,
-    skew_hot_frac: float = 0.0,
 ) -> str:
     """Materialize the fixture as `n_chunks` sequential parquet files
     under scratch_dir/chunks and return that path.
@@ -110,16 +106,6 @@ def write_replay_chunks(
     Chunks follow *arrival order* (original ts), so with jitter the
     stream is genuinely out-of-order in event time while arrival is
     monotone-ish — the reference's out-of-order model.
-
-    `densify=k` replays each event k times (unique event_ids, ±500ms
-    deterministic spread so copies stay distinct rows in event time):
-    the knob that scales EVENT DENSITY per window without changing the
-    window population — for measuring how per-event state-write costs
-    (e.g. sliding-window Expand) grow against per-batch fixed costs.
-    `densify_fresh_keys=True` instead gives each copy fresh account_ids
-    (offset by a stride derived from the observed max id), scaling the
-    KEY population with state-per-key fixed — the axis keyed-join
-    state grows on.
 
     `dup_every=k` redelivers every k-th event VERBATIM (same event_id,
     same timestamp, arriving right after the original) — the
@@ -136,107 +122,15 @@ def write_replay_chunks(
     watermark and NOTHING is dropped — the stream must still equal
     plain batch SQL (the reference's bounded-out-of-orderness contract,
     oracle-checkable because timestamps never change).
-
-    `skew_hot_frac=f` rehomes a deterministic f-fraction of events
-    (Knuth hash of event_id) onto ONE hot account (the minimum
-    observed id) — the zipf-head fixture for state-under-skew probes:
-    a single key owning ~f of the stream, applied after densify so the
-    hot share holds at every scale.
     """
     out = os.path.join(scratch_dir, "chunks")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     df = _prepared(spark, sf_dir, jitter_ms, late_every, with_event_type)
-    if densify > 1:
-        # densify_fresh_keys chooses WHICH axis grows k-fold: False
-        # (default) keeps the key population fixed so per-key/per-window
-        # state grows with density (the holistic-aggregate / merging-
-        # session probe axis); True gives each copy fresh keys so the
-        # KEY population grows and state-per-key stays fixed (the
-        # "k-times-more-users" axis — the natural scale-up model for
-        # keyed-join state, where fixed keys would grow join OUTPUT
-        # quadratically instead of stream size linearly).
-        k = F.lit(densify)
-        if densify_fresh_keys:
-            # stride from the OBSERVED max account id (next power of
-            # ten, floored at 1M), not a fixed constant — a fixture
-            # whose id space reaches a fixed stride would silently
-            # collide copies (the scale_probe lesson, ADVICE r5)
-            max_acct = df.agg(F.max("account_id")).first()[0] or 0
-            stride = max(1_000_000, 10 ** len(str(max_acct)))
-            acct = (F.col("account_id") + F.col("rep") * F.lit(stride)).alias(
-                "account_id"
-            )
-        else:
-            acct = F.col("account_id")
-        df = df.crossJoin(spark.range(densify).select(F.col("id").alias("rep"))).select(
-            acct,
-            (
-                F.col("t_us")
-                + (F.pmod(F.xxhash64("event_id", "rep"), F.lit(1001)) - 500) * 1000
-            ).alias("t_us"),
-            "amount",
-            (F.col("event_id") * k + F.col("rep")).alias("event_id"),
-            *(["event_type"] if with_event_type else []),
-        )
-    if skew_hot_frac:
-        hot = df.agg(F.min("account_id")).first()[0]
-        gate = F.pmod(F.xxhash64("event_id"), F.lit(1_000_000)) < F.lit(
-            int(skew_hot_frac * 1_000_000)
-        )
-        df = df.withColumn(
-            "account_id",
-            F.when(gate, F.lit(hot)).otherwise(F.col("account_id")),
-        )
     # In-order replay arrives sorted by event time; disordered replay
     # arrives in original (pre-jitter) order, i.e. jitter makes event
     # time non-monotone across arrival — the reference's model.
     order_col = "t_us" if not (jitter_ms or late_every) else "event_id"
-    if distributed:
-        # Executor-side writer (VERDICT r8 #7): the default path below
-        # materializes the WHOLE replay on the driver (orderBy ->
-        # toPandas -> per-chunk to_parquet), which caps how dense the
-        # scale probes can go (~24M events before driver memory is the
-        # limit). Here chunking is a repartitionByRange on the arrival
-        # key — rows never leave the executors; the driver only renames
-        # the n_chunks part files and pins their mtimes. Trade-offs,
-        # documented, which is why this is opt-in for probes rather
-        # than the harness default: chunk boundaries are SAMPLED value
-        # ranges (approximately equal row counts, not the exact
-        # row-count split the driver path produces — fine for in-order
-        # and bounded-jitter probes, whose results are
-        # boundary-independent), and dup_every redelivers event_id % k
-        # rows (a position-free spelling of the same at-least-once
-        # model). defer_tail_ms needs per-chunk event-time maxima
-        # before assignment, which is inherently a two-pass/driver
-        # computation — unsupported here, fail loudly.
-        if defer_tail_ms:
-            raise ValueError(
-                "defer_tail_ms requires the driver-side writer "
-                "(per-chunk maxima precede chunk assignment)"
-            )
-        if dup_every:
-            df = df.unionByName(df.where(F.col("event_id") % dup_every == 0))
-        tmp = os.path.join(scratch_dir, "_chunks_tmp")
-        (
-            df.repartitionByRange(n_chunks, F.col(order_col), F.col("event_id"))
-            .sortWithinPartitions(order_col, "event_id")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        # part-NNNNN numbering follows the range-partition id, which is
-        # ascending in the sort key — lexicographic order IS arrival
-        # order
-        parts = sorted(
-            f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
-        )
-        base = int(os.stat(scratch_dir).st_mtime)
-        for i, part in enumerate(parts):
-            path = os.path.join(out, f"chunk_{i:04d}.parquet")
-            shutil.move(os.path.join(tmp, part), path)
-            os.utime(path, (base + i, base + i))
-        shutil.rmtree(tmp, ignore_errors=True)
-        return out
     pdf = df.orderBy(order_col, "event_id").toPandas()
     if dup_every:
         # stable sort keeps each redelivery immediately after its
@@ -337,12 +231,9 @@ def ensure_replay_chunks(
     n_chunks: int = 8,
     jitter_ms: int = 0,
     late_every: int = 0,
-    densify: int = 1,
     dup_every: int = 0,
     defer_tail_ms: int = 0,
     with_event_type: bool = False,
-    densify_fresh_keys: bool = False,
-    skew_hot_frac: float = 0.0,
 ) -> str:
     """write_replay_chunks, memoized per process (see block comment
     above): the first call for a given (sf_dir, params) builds the
@@ -354,12 +245,9 @@ def ensure_replay_chunks(
         n_chunks,
         jitter_ms,
         late_every,
-        densify,
         dup_every,
         defer_tail_ms,
         with_event_type,
-        densify_fresh_keys,
-        skew_hot_frac,
     )
     canon = _CHUNK_CACHE.get(key)
     if canon is None or not os.path.isdir(canon):
@@ -376,12 +264,9 @@ def ensure_replay_chunks(
             n_chunks=n_chunks,
             jitter_ms=jitter_ms,
             late_every=late_every,
-            densify=densify,
             dup_every=dup_every,
             defer_tail_ms=defer_tail_ms,
             with_event_type=with_event_type,
-            densify_fresh_keys=densify_fresh_keys,
-            skew_hot_frac=skew_hot_frac,
         )
         _CHUNK_CACHE[key] = canon
     out = os.path.join(scratch_dir, "chunks")
@@ -603,13 +488,7 @@ def run_to_memory(sdf: DataFrame, name: str, output_mode: str = "append") -> dic
     "sec": summed triggerExecution time} from StreamingQueryProgress —
     so callers can report throughput in the reference's own metric
     (numEvents / duration, BASELINE.md's Prometheus definition), not
-    just wall time. Also carries the engine's state-store gauges when
-    the query is stateful — "state_rows" / "state_bytes" are the MAX
-    across micro-batches of numRowsTotal / memoryUsedBytes (peak
-    working set, the number the scale probes fit exponents on; for
-    the bucketed Python folds numRowsTotal is the fixed bucket count
-    and memoryUsedBytes is what actually tracks keys). Callers that
-    only want the table ignore it."""
+    just wall time. Callers that only want the table ignore it."""
     q = (
         sdf.writeStream.outputMode(output_mode)
         .format("memory")
@@ -624,15 +503,4 @@ def run_to_memory(sdf: DataFrame, name: str, output_mode: str = "append") -> dic
     progress = q.recentProgress or []
     rows = sum(int(p.get("numInputRows", 0)) for p in progress)
     ms = sum(int((p.get("durationMs") or {}).get("triggerExecution", 0)) for p in progress)
-    state_rows = 0
-    state_bytes = 0
-    for p in progress:
-        for op in p.get("stateOperators") or []:
-            state_rows = max(state_rows, int(op.get("numRowsTotal", 0)))
-            state_bytes = max(state_bytes, int(op.get("memoryUsedBytes", 0)))
-    return {
-        "rows": rows,
-        "sec": round(ms / 1000.0, 3),
-        "state_rows": state_rows,
-        "state_bytes": state_bytes,
-    }
+    return {"rows": rows, "sec": round(ms / 1000.0, 3)}

@@ -207,12 +207,11 @@ def compact_date_partitions(
       input splits; rows never repartition by key. Row content,
       ordering within files aside, is bit-preserved (tested).
     - ATOMIC PER PARTITION: the compacted partition is written to a
-      `.tmp-compact-*` sibling, the old directory is moved aside, the
-      new one renamed into place, then the old is deleted. A crash
-      leaves either the old layout (tmp ignored by readers: dotted
-      prefix) or the completed swap plus a `.trash-*` leftover — never
-      a partial partition. (Directory-rename publish mirrors
-      operators/indexcache.py; on object stores you'd stage a manifest
+      `.tmp-compact-*` sibling (ignored by readers: dotted prefix) and
+      swapped in by operators/indexcache._swap_dir. A crash mid-swap
+      leaves the old partition under a dotted deterministic name that
+      _recover_swap puts back on the next call — never a partial or
+      lost partition. (On object stores you'd stage a manifest
       instead — same contract, different rename primitive.)
 
     Local file listing stands in for the catalog/manifest a real
@@ -221,9 +220,13 @@ def compact_date_partitions(
     """
     import math
     import os
-    import shutil
     import uuid
 
+    from .operators.indexcache import _recover_swap, _swap_dir
+
+    for d in os.listdir(path):  # heal a prior crash mid-swap, if any
+        if d.startswith(f".{partition_prefix}") and d.endswith(".old"):
+            _recover_swap(os.path.join(path, d[1:-4]))
     compacted: dict[str, tuple[int, int]] = {}
     skipped: list[str] = []
     for d in sorted(os.listdir(path)):
@@ -241,15 +244,12 @@ def compact_date_partitions(
             skipped.append(d)
             continue
         tmp = os.path.join(path, f".tmp-compact-{d}-{uuid.uuid4().hex[:8]}")
-        trash = os.path.join(path, f".trash-{d}-{uuid.uuid4().hex[:8]}")
         (
             spark.read.parquet(part_dir)
             .coalesce(n_target)
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        os.rename(part_dir, trash)
-        os.rename(tmp, part_dir)
-        shutil.rmtree(trash)
+        _swap_dir(part_dir, tmp)
         compacted[d] = (len(files), n_target)
     return {"compacted": compacted, "skipped": skipped}

@@ -53,6 +53,26 @@ def session_confs(spark, confs: dict):
             spark.conf.set(k, v)
 
 
+@contextmanager
+def crash_between_swap_renames():
+    """Make the block's second os.rename raise, as a crash between a
+    directory swap's two renames would; the block must raise it."""
+    real, calls = os.rename, []
+
+    def rename(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("crash between the swap's renames")
+        real(src, dst)
+
+    os.rename = rename
+    try:
+        with pytest.raises(OSError, match="crash between"):
+            yield
+    finally:
+        os.rename = real
+
+
 @pytest.fixture()
 def tiny_arrow_batches(spark):
     """Shrink maxRecordsPerBatch so every non-trivial group spans many

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from flink_fraud_detection_rocks_db_app_spark.registry import all_queries
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, crash_between_swap_renames
 
 
 def _rows(spark, name):
@@ -769,23 +769,22 @@ def test_ngram_persist_knob_identical_and_scoped(spark):
     assert not kept.is_cached
 
 
-def test_postings_persist_auto_is_scale_adaptive(monkeypatch):
-    """r15 (VERDICT r14 #5): persist_postings defaults to a
-    scale-adaptive resolution from the documents source size — off at
-    the small SFs (the measured sf0.1 wash keeps the bench row
-    comparable), on past the threshold (the 10x-probe regime where it
-    wins 2.8x), env-overridable, and never raising on a missing dir."""
+def test_pruned_dedup_faces_leave_no_cached_postings(spark, monkeypatch):
+    """The two registered pruned-dedup faces discard `kept`, so they
+    must never persist it: with the retired auto-persist threshold's
+    env var set as low as it goes, running both faces leaves the
+    session's cache manager empty."""
     from flink_fraud_detection_rocks_db_app_spark.operators.dedup import (
-        POSTINGS_PERSIST_MIN_BYTES,
-        _postings_persist_auto,
+        dedup_containment_pairs,
+        dedup_ngram_jaccard_pruned,
     )
 
-    assert _postings_persist_auto(SF_SMALL) is False  # 0.6 MB < 2 MB
     monkeypatch.setenv("SPARK_GRAFT_POSTINGS_PERSIST_BYTES", "1")
-    assert _postings_persist_auto(SF_SMALL) is True
-    monkeypatch.delenv("SPARK_GRAFT_POSTINGS_PERSIST_BYTES")
-    assert _postings_persist_auto("/nonexistent/sfX") is False
-    assert POSTINGS_PERSIST_MIN_BYTES == 2 << 20
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for face in (dedup_ngram_jaccard_pruned, dedup_containment_pairs):
+        face(spark, SF_SMALL).collect()
+    assert cache.isEmpty()
 
 
 def test_hll_sketches_survive_parquet_roundtrip(spark, scratch):
@@ -1151,17 +1150,13 @@ def test_mixture_apply_respects_plan(spark):
             )
 
 
-def test_prep_ledger_compaction_preserves_report(spark, scratch):
-    """compact_prep_ledger: (a) the per-language report is identical
-    before and after compaction (the compactor applies the probe's own
-    merge — associative by construction); (b) the ledger collapses to
-    one segment; (c) a second pass is a no-op; (d) single-segment
-    ledgers are left untouched."""
+def _four_segment_prep_ledger(spark, scratch):
+    """A prep ledger of four per-batch segments, and a function that
+    returns its per-language report."""
     import os
 
     from flink_fraud_detection_rocks_db_app_spark.fixtures import load
     from flink_fraud_detection_rocks_db_app_spark.operators.pipeline import (
-        compact_prep_ledger,
         corpus_report,
         merge_prep_segments,
         prep_segment,
@@ -1183,6 +1178,22 @@ def test_prep_ledger_compaction_preserves_report(spark, scratch):
             for r in corpus_report(merged).collect()
         }
 
+    return ledger, report
+
+
+def test_prep_ledger_compaction_preserves_report(spark, scratch):
+    """compact_prep_ledger: (a) the per-language report is identical
+    before and after compaction (the compactor applies the probe's own
+    merge — associative by construction); (b) the ledger collapses to
+    one segment; (c) a second pass is a no-op; (d) single-segment
+    ledgers are left untouched."""
+    import os
+
+    from flink_fraud_detection_rocks_db_app_spark.operators.pipeline import (
+        compact_prep_ledger,
+    )
+
+    ledger, report = _four_segment_prep_ledger(spark, scratch)
     before = report()
     assert compact_prep_ledger(spark, ledger) == 3
     segs = [d for d in os.listdir(ledger) if d.startswith("seg=")]
@@ -1192,6 +1203,25 @@ def test_prep_ledger_compaction_preserves_report(spark, scratch):
     assert len(segs) == 1 and segs[0].startswith("seg=c"), segs
     assert report() == before
     assert compact_prep_ledger(spark, ledger) == 0
+    assert report() == before
+
+
+def test_prep_ledger_compaction_recovers_from_crash_mid_swap(spark, scratch):
+    """A crash between the directory swap's two renames leaves the
+    ledger displaced, not lost: the next call puts it back and
+    compacts it, and the per-language report is unchanged."""
+    import os
+
+    from flink_fraud_detection_rocks_db_app_spark.operators.pipeline import (
+        compact_prep_ledger,
+    )
+
+    ledger, report = _four_segment_prep_ledger(spark, scratch)
+    before = report()
+    with crash_between_swap_renames():
+        compact_prep_ledger(spark, ledger)
+    assert not os.path.isdir(ledger)
+    assert compact_prep_ledger(spark, ledger) == 3
     assert report() == before
 
 

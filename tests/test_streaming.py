@@ -569,11 +569,12 @@ def test_defer_tail_replay_disorder_is_real_and_bounded(spark, scratch):
 
 
 def test_choose_sliding_mode_encodes_measured_crossover():
-    """The paned-vs-naive decision (scripts/ab_paned_sliding.py,
-    SCALE.md) is API policy now, not documentation: auto picks naive
-    with no density estimate or a sparse one, and flips to paned once
-    expected per-batch state writes (events x overlap) cross the
-    measured 20M threshold (4M events/batch at 50s/10s overlap 5)."""
+    """The paned-vs-naive decision (SCALE.md "Per-family shuffle
+    budget", Streaming row) is API policy now, not documentation: auto
+    picks naive with no density estimate or a sparse one, and flips to
+    paned once expected per-batch state writes (events x overlap)
+    cross the measured 20M threshold (4M events/batch at 50s/10s
+    overlap 5)."""
     import pytest
 
     from flink_fraud_detection_rocks_db_app_spark.streaming import (
@@ -596,89 +597,3 @@ def test_choose_sliding_mode_encodes_measured_crossover():
     assert choose_sliding_mode(50_000, 10_000, "naive", 10**9) == "naive"
     with pytest.raises(ValueError):
         choose_sliding_mode(50_000, 10_000, "always")
-
-
-def test_distributed_replay_writer_equivalent(spark, scratch):
-    """The executor-side chunk writer (distributed=True): same rows,
-    same schema, same arrival-order invariants (monotone chunk mtimes,
-    per-chunk sorted, cross-chunk non-decreasing event time for the
-    in-order replay) as the driver-side writer — and the streamed
-    tumbling aggregate over it equals the driver-path stream's."""
-    import os
-
-    d1 = write_replay_chunks(spark, SF_SMALL, os.path.join(scratch, "drv"), n_chunks=6)
-    d2 = write_replay_chunks(
-        spark, SF_SMALL, os.path.join(scratch, "dist"), n_chunks=6, distributed=True
-    )
-    files = sorted(os.listdir(d2))
-    assert len(files) == 6, files
-    mtimes = [os.stat(os.path.join(d2, f)).st_mtime for f in files]
-    assert mtimes == sorted(mtimes) and len(set(mtimes)) == 6, mtimes
-    rows1 = sorted(map(tuple, read_replay_batch(spark, d1).collect()))
-    rows2 = sorted(map(tuple, read_replay_batch(spark, d2).collect()))
-    assert rows1 == rows2
-    # cross-chunk arrival order: each chunk's min event time >= the
-    # previous chunk's max (ranges, not interleaved row splits)
-    prev_max = None
-    for f in files:
-        ts = spark.read.parquet(os.path.join(d2, f)).agg(
-            F.min("t_us"), F.max("t_us")
-        ).first()
-        if prev_max is not None:
-            assert ts[0] >= prev_max, (f, ts[0], prev_max)
-        prev_max = ts[1]
-    agg = windowed_agg_stream(read_replay_stream(spark, d2), SIZE_MS, watermark=IN_ORDER)
-    run_to_memory(agg, "t_dist_writer")
-    got = {
-        (r.w_start, r.account_id): r.sum_amount
-        for r in spark.table("t_dist_writer").collect()
-    }
-    full = _batch_tumble(spark)
-    for k, v in got.items():
-        assert abs(v - full[k]) < 1e-9, k
-    wm = _max_t_ms(spark)
-    missing = set(_batch_tumble(spark, closed_before_ms=wm)) - set(got)
-    assert not missing, sorted(missing)[:5]
-
-
-def test_replay_skew_hot_frac_rehomes_a_tenth_to_one_account(spark, scratch):
-    """The zipf-head fixture knob (state-under-skew probes): with
-    skew_hot_frac=0.1 one account owns ~10% of every replayed chunk,
-    total row count unchanged, and the rehoming is deterministic."""
-    import os
-
-    base = transactions(spark, SF_SMALL)
-    n_total = base.count()
-    chunks = write_replay_chunks(
-        spark, SF_SMALL, scratch, n_chunks=4, skew_hot_frac=0.1
-    )
-    skewed = spark.read.parquet(os.path.join(chunks, "*.parquet"))
-    assert skewed.count() == n_total
-    hot_id = base.agg(F.min("account_id")).first()[0]
-    top = (
-        skewed.groupBy("account_id")
-        .count()
-        .orderBy(F.desc("count"))
-        .first()
-    )
-    assert top["account_id"] == hot_id
-    share = top["count"] / n_total
-    # the rehomed 10% lands on top of the hot account's organic share
-    # (a tenth of its own rows rehome to itself, a no-op)
-    organic = (
-        base.where(F.col("account_id") == hot_id).count() / n_total
-    )
-    expected = organic + 0.1 * (1 - organic)
-    assert abs(share - expected) < 0.03, (
-        f"hot share {share:.3f}, expected ~{expected:.3f}"
-    )
-    # deterministic: a second materialization rehomes the same rows
-    chunks2 = write_replay_chunks(
-        spark, SF_SMALL, os.path.join(scratch, "again"), n_chunks=4,
-        skew_hot_frac=0.1,
-    )
-    again = spark.read.parquet(os.path.join(chunks2, "*.parquet"))
-    assert (
-        again.where(F.col("account_id") == hot_id).count()
-        == top["count"]
-    )
