@@ -142,16 +142,19 @@ def range_join_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "interval_join_click_purchase",
-    oracle="""
+INTERVAL_JOIN_ORACLE = """
 SELECT c.user_id AS account_id, c.event_id AS click_id, p.event_id AS purchase_id,
        epoch_ms(p.ts) - epoch_ms(c.ts) AS lag_ms, p.value AS purchase_value
 FROM events c JOIN events p
   ON c.user_id = p.user_id
  AND c.event_type = 'click' AND p.event_type = 'purchase'
  AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 7 DAY
-""",
+"""
+
+
+@register(
+    "interval_join_click_purchase",
+    oracle=INTERVAL_JOIN_ORACLE,
     doc="Interval (time-bounded) join: purchases within 7 days after a "
     "click by the same account. Equi-join on the key + range predicate; "
     "Catalyst plans it as a SortMerge/ShuffledHash join with the range "

@@ -38,6 +38,31 @@ _SHINGLES_DUCK = (
     "for i in range(1, len(w) - 1)])"
 )
 
+# Shared oracle fragments: the word-shingle CTEs (t, sh), the exact
+# shingle postings with per-pair common counts (sz, ex, pairs), their
+# DF-pruned form, and the Jaccard verification over sz/pairs.
+_SHINGLE_CTES = f"""t AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
+sh AS (SELECT doc_id, {_SHINGLES_DUCK} AS shingles FROM t)"""
+_COMMON_COUNTS = """ AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
+  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)"""
+_EXACT_PAIRS_CTES = f"""{_SHINGLE_CTES},
+sz AS (SELECT doc_id, len(shingles) AS n FROM sh),
+ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
+pairs{_COMMON_COUNTS}"""
+_JACCARD_SELECT = """SELECT doc_a, doc_b,
+       common::DOUBLE / (sa.n + sb.n - common) AS jaccard
+FROM pairs
+JOIN sz sa ON doc_a = sa.doc_id
+JOIN sz sb ON doc_b = sb.doc_id
+WHERE common::DOUBLE / (sa.n + sb.n - common) >= 0.5
+"""
+_EXACT_JACCARD_ORACLE = f"""
+WITH {_EXACT_PAIRS_CTES}
+{_JACCARD_SELECT}"""
+
 NORM_SQL_SPARK = "regexp_replace(lower(text), '\\\\s+', ' ')"
 NORM_SQL_DUCK = r"regexp_replace(lower(text), '\s+', ' ', 'g')"
 
@@ -93,23 +118,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_ngram_jaccard",
-    oracle=f"""
-WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES_DUCK} AS shingles FROM t),
-sz AS (SELECT doc_id, len(shingles) AS n FROM sh),
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       common::DOUBLE / (sa.n + sb.n - common) AS jaccard
-FROM pairs
-JOIN sz sa ON doc_a = sa.doc_id
-JOIN sz sb ON doc_b = sb.doc_id
-WHERE common::DOUBLE / (sa.n + sb.n - common) >= 0.5
-""",
+    oracle=_EXACT_JACCARD_ORACLE,
     doc="Near-dup pairs by word-3-gram Jaccard >= 0.5 via inverted-index "
     "equi-join (no cross join): |A∩B| from the postings join, "
     "|A∪B| = |A|+|B|-|A∩B|. Jaccard is a ratio of identical ints in both "
@@ -119,17 +128,33 @@ WHERE common::DOUBLE / (sa.n + sb.n - common) >= 0.5
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingled(spark, sf_dir)
     sz = sh.select("doc_id", F.size("shingles").alias("n"))
-    # Postings on the 64-bit shingle hash (cheap keys; collision odds
-    # ~|V|^2/2^65 — immaterial). Instead of a postings SELF-JOIN (which
-    # makes Spark recompute the whole scan->shingle lineage for both
-    # sides), group each shingle's posting list once and expand the
-    # candidate pairs inside the array: single lineage, one shuffle to
-    # the groups, pair volume identical (sum_s df_s*(df_s-1)/2).
+    j = _jaccard()
+    return (
+        _sized_pairs(_postings(sh), sz)
+        .where(j >= NEARDUP_JACCARD)
+        .select("doc_a", "doc_b", j.alias("jaccard"))
+    )
+
+
+def _postings(sh: DataFrame) -> DataFrame:
+    """(s, ds): each shingle's sorted posting list. Postings are on the
+    64-bit shingle hash (cheap keys; collision odds ~|V|^2/2^65 —
+    immaterial). Instead of a postings SELF-JOIN (which makes Spark
+    recompute the whole scan->shingle lineage for both sides), each
+    shingle's posting list is grouped once and _sized_pairs expands
+    the candidate pairs inside the array: single lineage, one shuffle
+    to the groups, pair volume identical (sum_s df_s*(df_s-1)/2)."""
     ex = sh.select(
         "doc_id", F.explode(F.transform("shingles", lambda s: F.xxhash64(s))).alias("s")
     )
-    groups = ex.groupBy("s").agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-    pairs_exploded = groups.where(F.size("ds") > 1).select(
+    return ex.groupBy("s").agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
+
+
+def _sized_pairs(postings: DataFrame, sz: DataFrame) -> DataFrame:
+    """(doc_b, doc_a, common, na, nb): every doc pair sharing a posting
+    list, its shared-shingle count, and both docs' set sizes from
+    `sz` (doc_id, n)."""
+    pairs_exploded = postings.where(F.size("ds") > 1).select(
         F.explode(
             F.expr(
                 "flatten(transform(ds, (x, i) -> "
@@ -144,13 +169,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sza = sz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     szb = sz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    j = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return (
-        pairs.join(sza, "doc_a")
-        .join(szb, "doc_b")
-        .where(j >= NEARDUP_JACCARD)
-        .select("doc_a", "doc_b", j.alias("jaccard"))
-    )
+    return pairs.join(sza, "doc_a").join(szb, "doc_b")
+
+
+def _jaccard():
+    """|A∩B| / |A∪B| over _sized_pairs columns."""
+    return F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
 
 
 # --------------------------------------------------------------- MinHash/LSH
@@ -197,25 +221,6 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sh.select(
         "doc_id", F.expr("transform(shingles, s -> xxhash64(s))").alias("hs")
     ).select("doc_id", F.array(*mh).alias("sig"))
-
-
-_EXACT_JACCARD_ORACLE = f"""
-WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES_DUCK} AS shingles FROM t),
-sz AS (SELECT doc_id, len(shingles) AS n FROM sh),
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       common::DOUBLE / (sa.n + sb.n - common) AS jaccard
-FROM pairs
-JOIN sz sa ON doc_a = sa.doc_id
-JOIN sz sb ON doc_b = sb.doc_id
-WHERE common::DOUBLE / (sa.n + sb.n - common) >= 0.5
-"""
 
 
 @register(
@@ -573,27 +578,22 @@ def dedup_simhash_band_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 MAXDF = 50  # document-frequency cutoff for the pruned variant
 
 
+def _pruned_pairs_ctes(df: str, pairs: str) -> str:
+    """_EXACT_PAIRS_CTES over shingles of document frequency <= MAXDF;
+    `df` and `pairs` name the frequency and pair-count CTEs."""
+    return f"""{_SHINGLE_CTES},
+ex0 AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
+{df} AS (SELECT s, COUNT(*) AS df FROM ex0 GROUP BY 1),
+ex AS (SELECT doc_id, s FROM ex0 JOIN {df} USING (s) WHERE df <= {MAXDF}),
+sz AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY 1),
+{pairs}{_COMMON_COUNTS}"""
+
+
 @register(
     "dedup_ngram_jaccard_pruned",
     oracle=f"""
-WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES_DUCK} AS shingles FROM t),
-ex0 AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-df AS (SELECT s, COUNT(*) AS df FROM ex0 GROUP BY 1),
-ex AS (SELECT doc_id, s FROM ex0 JOIN df USING (s) WHERE df <= {MAXDF}),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY 1),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       common::DOUBLE / (sa.n + sb.n - common) AS jaccard
-FROM pairs
-JOIN sz sa ON doc_a = sa.doc_id
-JOIN sz sb ON doc_b = sb.doc_id
-WHERE common::DOUBLE / (sa.n + sb.n - common) >= 0.5
-""",
+WITH {_pruned_pairs_ctes("df", "pairs")}
+{_JACCARD_SELECT}""",
     doc=f"Near-dup pairs by Jaccard over DF-PRUNED shingles (document "
     f"frequency <= {MAXDF}): hot shingles are dropped from the inverted "
     "index BEFORE the postings self-join, removing the quadratic blowup "
@@ -641,7 +641,7 @@ def ngram_pruned_pairs(
     # DataFrame cannot scope an unpersist); at corpus scale call with
     # persist_postings=True, trigger the action, then unpersist `kept`.
     sized, kept = _pruned_pair_counts(spark, sf_dir, persist_postings)
-    j = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
+    j = _jaccard()
     out = sized.where(j >= 0.5).select("doc_a", "doc_b", j.alias("jaccard"))
     return out, kept
 
@@ -654,12 +654,7 @@ def _pruned_pair_counts(
     common counts joined with both docs' pruned set sizes (na, nb).
     Returns (sized pair frame, the `kept` postings for optional
     persist scoping)."""
-    sh = shingled(spark, sf_dir)
-    ex = sh.select(
-        "doc_id", F.explode(F.transform("shingles", lambda s: F.xxhash64(s))).alias("s")
-    )
-    groups = ex.groupBy("s").agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-    kept = groups.where(F.size("ds") <= MAXDF)
+    kept = _postings(shingled(spark, sf_dir)).where(F.size("ds") <= MAXDF)
     if persist_postings:
         from pyspark import StorageLevel
 
@@ -669,38 +664,13 @@ def _pruned_pair_counts(
         .groupBy("doc_id")
         .agg(F.count("*").alias("n"))
     )
-    pairs_exploded = kept.where(F.size("ds") > 1).select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ds, (x, i) -> "
-                "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-            )
-        ).alias("p")
-    )
-    pairs = (
-        pairs_exploded.select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("common"))
-    )
-    sza = sz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    szb = sz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return pairs.join(sza, "doc_a").join(szb, "doc_b"), kept
+    return _sized_pairs(kept, sz), kept
 
 
 @register(
     "dedup_containment_pairs",
     oracle=f"""
-WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES_DUCK} AS shingles FROM t),
-ex0 AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-df AS (SELECT s, COUNT(*) AS df FROM ex0 GROUP BY 1),
-ex AS (SELECT doc_id, s FROM ex0 JOIN df USING (s) WHERE df <= {MAXDF}),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY 1),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
+WITH {_pruned_pairs_ctes("df", "pairs")}
 SELECT doc_a, doc_b,
        round(common::DOUBLE / LEAST(sa.n, sb.n), 6) AS containment
 FROM pairs
@@ -724,17 +694,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PRUNED_PAIRS_DUCK = f"""
-t AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES_DUCK} AS shingles FROM t),
-ex0 AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-dfc AS (SELECT s, COUNT(*) AS df FROM ex0 GROUP BY 1),
-ex AS (SELECT doc_id, s FROM ex0 JOIN dfc USING (s) WHERE df <= {MAXDF}),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY 1),
-prs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
+{_pruned_pairs_ctes("dfc", "prs")},
 dup_pairs AS (
   SELECT doc_a, doc_b
   FROM prs
@@ -743,6 +703,21 @@ dup_pairs AS (
   WHERE common::DOUBLE / (sa.n + sb.n - common) >= 0.5
 )
 """
+
+
+# the connected-component labels (doc_id, cluster_id) of dup_pairs, as
+# a recursive transitive closure
+_CC_LABEL_CTES = """edges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM dup_pairs
+  UNION ALL
+  SELECT doc_b, doc_a FROM dup_pairs
+),
+reach AS (
+  SELECT src AS node, src AS label FROM edges
+  UNION
+  SELECT e.dst AS node, r.label FROM reach r JOIN edges e ON e.src = r.node
+),
+lab AS (SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY 1)"""
 
 
 def connected_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b",
@@ -818,17 +793,7 @@ def ensure_cc_labels(spark: SparkSession, sf_dir: str) -> str:
     "dedup_clusters",
     oracle=f"""
 WITH RECURSIVE {_PRUNED_PAIRS_DUCK},
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM dup_pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM dup_pairs
-),
-reach AS (
-  SELECT src AS node, src AS label FROM edges
-  UNION
-  SELECT e.dst AS node, r.label FROM reach r JOIN edges e ON e.src = r.node
-),
-lab AS (SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY 1)
+{_CC_LABEL_CTES}
 SELECT doc_id, cluster_id,
        COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
        doc_id = cluster_id AS keep
@@ -862,17 +827,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_keep_best_per_cluster",
     oracle=f"""
 WITH RECURSIVE {_PRUNED_PAIRS_DUCK},
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM dup_pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM dup_pairs
-),
-reach AS (
-  SELECT src AS node, src AS label FROM edges
-  UNION
-  SELECT e.dst AS node, r.label FROM reach r JOIN edges e ON e.src = r.node
-),
-lab AS (SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY 1),
+{_CC_LABEL_CTES},
 qt AS (SELECT doc_id, n_chars, string_split(lower(text), ' ') AS w FROM documents),
 qm AS (
   SELECT doc_id,
@@ -937,8 +892,7 @@ _EVAL_PRED = "doc_id % 97 = 0"
 
 
 _DECON_ORACLE = f"""
-WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES_DUCK} AS shingles FROM t),
+WITH {_SHINGLE_CTES},
 ev AS (SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE {_EVAL_PRED}),
 tr AS (SELECT doc_id, unnest(shingles) AS s FROM sh WHERE NOT ({_EVAL_PRED}))
 SELECT tr.doc_id, COUNT(*) AS n_hits
@@ -1208,15 +1162,7 @@ def span_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------- incremental dedup
 
 _INCR_ORACLE = f"""
-WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES_DUCK} AS shingles FROM t),
-sz AS (SELECT doc_id, len(shingles) AS n FROM sh),
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
+WITH {_EXACT_PAIRS_CTES},
 verified AS (
   SELECT doc_a, doc_b, common * 1.0 / (sa.n + sb.n - common) AS jaccard
   FROM pairs

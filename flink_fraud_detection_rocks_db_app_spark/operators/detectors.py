@@ -136,9 +136,7 @@ def alert_user_daily_sum_gt_300(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------- union + keyed max-by
 
 
-@register(
-    "union_max_by",
-    oracle=f"""
+UNION_MAX_BY_ORACLE = f"""
 WITH a AS ({sql_slide(5 * 60_000, 60_000, "AVG(value) AS mean_amount")}),
 b AS ({sql_tumble(5 * 60_000, "AVG(value) AS mean_amount")}),
 u AS (
@@ -152,7 +150,12 @@ QUALIFY row_number() OVER (
   PARTITION BY account_id
   ORDER BY round(mean_amount, 6) DESC, w_start ASC, src ASC
 ) = 1
-""",
+"""
+
+
+@register(
+    "union_max_by",
+    oracle=UNION_MAX_BY_ORACLE,
     doc="M1 + A7: union of two windowed aggregate streams, then keyed max-by "
     "(reference: GraphSolution-Prometheus-SlidingWindows/src/main/java/spendreport/"
     "FraudDetectionJob.java:125-135, reduce max-by at :126-135). Rank key is "
@@ -291,9 +294,7 @@ def type_threshold_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dynamic_rules_alerts",
-    oracle="""
+DYNAMIC_RULES_ORACLE = """
 WITH rules AS (
   SELECT event_type, round(quantile_cont(value, 0.95), 6) AS threshold
   FROM events GROUP BY 1
@@ -302,7 +303,12 @@ SELECT user_id AS account_id, epoch_ms(e.ts) AS t_ms, e.event_type,
        CAST(e.value AS DOUBLE) AS amount, r.threshold
 FROM events e JOIN rules r USING (event_type)
 WHERE e.value > r.threshold
-""",
+"""
+
+
+@register(
+    "dynamic_rules_alerts",
+    oracle=DYNAMIC_RULES_ORACLE,
     doc="Dynamic-rules detector (Flink broadcast-state pattern, "
     "reference-domain: per-type fraud thresholds maintained outside "
     "the event stream): a derived per-event_type threshold table is "

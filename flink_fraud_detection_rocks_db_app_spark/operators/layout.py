@@ -31,7 +31,6 @@ serving both access paths from one copy of the data.
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,16 +73,39 @@ def _with_z(ev: DataFrame, un: str, tn: str) -> DataFrame:
     )
 
 
+def zorder_bounds(ev: DataFrame, t_ms="t_ms") -> DataFrame:
+    """The one-row (u_min, u_max, t_min, t_max) normalization frame of
+    an events frame carrying `user_id` and the `t_ms` column (or
+    expression)."""
+    return ev.agg(
+        F.min("user_id").alias("u_min"),
+        F.max("user_id").alias("u_max"),
+        F.min(t_ms).alias("t_min"),
+        F.max(t_ms).alias("t_max"),
+    )
+
+
+def write_zbuckets(zed: DataFrame, path: str) -> None:
+    """Write z-attached rows as one directory (and file) per coarse
+    zbucket, rows sorted by the full Morton key inside it so row-group
+    min/max stats stay tight at any row-group size."""
+    (
+        zed.repartition("zbucket")
+        # leading zbucket satisfies the partitionBy writer's required
+        # ordering, so no extra sort is inserted and per-bucket z order
+        # is guaranteed rather than sort-stability-dependent
+        .sortWithinPartitions("zbucket", "z")
+        .write.mode("overwrite")
+        .partitionBy("zbucket")
+        .parquet(path)
+    )
+
+
 def zorder_events(ev: DataFrame) -> DataFrame:
     """Attach z / zbucket to an events frame carrying `user_id` and
     epoch-nanos `ts` (fixtures.load shape)."""
     ev = ev.withColumn("t_ms", F.expr("CAST(ts div 1000000 AS BIGINT)"))
-    stats = ev.agg(
-        F.min("user_id").alias("u_min"),
-        F.max("user_id").alias("u_max"),
-        F.min("t_ms").alias("t_min"),
-        F.max("t_ms").alias("t_max"),
-    )
+    stats = zorder_bounds(ev)
     un = (
         f"CAST(((user_id - u_min) * {_Z_MAX}) div "
         f"greatest(CAST(1 AS BIGINT), u_max - u_min) AS BIGINT)"
@@ -98,20 +120,8 @@ def zorder_events(ev: DataFrame) -> DataFrame:
 
 
 def write_zorder_layout(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Materialize the z-clustered copy of events: one directory (and
-    file) per coarse zbucket, rows sorted by the full Morton key inside
-    it so row-group min/max stats stay tight at any row-group size."""
-    zed = zorder_events(load(spark, sf_dir, "events"))
-    (
-        zed.repartition("zbucket")
-        # leading zbucket satisfies the partitionBy writer's required
-        # ordering, so no extra sort is inserted and per-bucket z order
-        # is guaranteed rather than sort-stability-dependent
-        .sortWithinPartitions("zbucket", "z")
-        .write.mode("overwrite")
-        .partitionBy("zbucket")
-        .parquet(path)
-    )
+    """Materialize the z-clustered copy of events (write_zbuckets)."""
+    write_zbuckets(zorder_events(load(spark, sf_dir, "events")), path)
 
 
 def ensure_zorder_layout(spark: SparkSession, sf_dir: str) -> str:
@@ -153,6 +163,30 @@ GROUP BY event_type
 """
 
 
+def central_slice(zed: DataFrame) -> DataFrame:
+    """The _SLICE_ORACLE slice off any z-ordered copy of events.
+    Contract-bounded driver collect (4 scalars — the probed-cells
+    convention from ann_ivf_topk_indexed): LITERAL bounds are what
+    lets the parquet source push both range predicates into the scan
+    (PushedFilters), which is the entire point of the layout."""
+    b = zorder_bounds(zed).collect()[0]
+    u_lo = b.u_min + ((b.u_max - b.u_min) * 4) // 10
+    u_hi = b.u_min + ((b.u_max - b.u_min) * 6) // 10
+    t_lo = b.t_min + ((b.t_max - b.t_min) * 4) // 10
+    t_hi = b.t_min + ((b.t_max - b.t_min) * 6) // 10
+    return (
+        zed.where(
+            F.col("user_id").between(F.lit(u_lo), F.lit(u_hi))
+            & F.col("t_ms").between(F.lit(t_lo), F.lit(t_hi))
+        )
+        .groupBy("event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 6).alias("sum_value"),
+        )
+    )
+
+
 @register(
     "events_zorder_slice",
     oracle=_SLICE_ORACLE,
@@ -172,32 +206,7 @@ GROUP BY event_type
 )
 def events_zorder_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_zorder_layout(spark, sf_dir)
-    zed = spark.read.parquet(path)
-    # Contract-bounded driver collect (4 scalars — the probed-cells
-    # convention from ann_ivf_topk_indexed): LITERAL bounds are what
-    # lets the parquet source push both range predicates into the scan
-    # (PushedFilters), which is the entire point of the layout.
-    b = zed.agg(
-        F.min("user_id").alias("u_min"),
-        F.max("user_id").alias("u_max"),
-        F.min("t_ms").alias("t_min"),
-        F.max("t_ms").alias("t_max"),
-    ).collect()[0]
-    u_lo = b.u_min + ((b.u_max - b.u_min) * 4) // 10
-    u_hi = b.u_min + ((b.u_max - b.u_min) * 6) // 10
-    t_lo = b.t_min + ((b.t_max - b.t_min) * 4) // 10
-    t_hi = b.t_min + ((b.t_max - b.t_min) * 6) // 10
-    return (
-        zed.where(
-            F.col("user_id").between(F.lit(u_lo), F.lit(u_hi))
-            & F.col("t_ms").between(F.lit(t_lo), F.lit(t_hi))
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
+    return central_slice(spark.read.parquet(path))
 
 
 # ------------------------------------------- appending-table lifecycle
@@ -254,26 +263,11 @@ def write_zorder_base(
     ev = load(spark, sf_dir, "events").where(
         F.pmod(F.col("event_id"), F.lit(ZORDER_BATCH_MOD)) != ZORDER_BATCH_MOD - 1
     ).withColumn("t_ms", F.expr("CAST(ts div 1000000 AS BIGINT)"))
-    bounds = ev.agg(
-        F.min("user_id").alias("u_min"),
-        F.max("user_id").alias("u_max"),
-        F.min("t_ms").alias("t_min"),
-        F.max("t_ms").alias("t_max"),
-    )
-    bounds.write.mode("overwrite").parquet(os.path.join(path, "bounds"))
+    zorder_bounds(ev).write.mode("overwrite").parquet(os.path.join(path, "bounds"))
     zed = zorder_events_frozen(
         ev.drop("t_ms"), spark.read.parquet(os.path.join(path, "bounds"))
     )
-    (
-        zed.repartition("zbucket")
-        # leading zbucket satisfies the partitionBy writer's required
-        # ordering, so no extra sort is inserted and per-bucket z order
-        # is guaranteed rather than sort-stability-dependent
-        .sortWithinPartitions("zbucket", "z")
-        .write.mode("overwrite")
-        .partitionBy("zbucket")
-        .parquet(os.path.join(path, "data"))
-    )
+    write_zbuckets(zed, os.path.join(path, "data"))
     if with_batch:
         batch = load(spark, sf_dir, "events").where(
             F.pmod(F.col("event_id"), F.lit(ZORDER_BATCH_MOD))
@@ -432,23 +426,12 @@ def zorder_stream_sink(asset: str):
             # present-but-partial, or the foreachBatch retry would take
             # the frozen-bounds branch and read uncommitted bounds
             tmp = f"{bounds_dir}.tmp-{uuid.uuid4().hex[:8]}"
-            batch.select(
-                F.min("user_id").alias("u_min"),
-                F.max("user_id").alias("u_max"),
-                F.min(t_ms).alias("t_min"),
-                F.max(t_ms).alias("t_max"),
-            ).write.mode("overwrite").parquet(tmp)
+            zorder_bounds(batch, t_ms).write.mode("overwrite").parquet(tmp)
             os.rename(tmp, bounds_dir)
         else:
             bounds = batch.sparkSession.read.parquet(bounds_dir)
             zed = zorder_events_frozen(batch, bounds)
-        (
-            zed.repartition("zbucket")
-            .sortWithinPartitions("zbucket", "z")
-            .write.mode("overwrite")
-            .partitionBy("zbucket")
-            .parquet(os.path.join(data, f"seg={bid}"))
-        )
+        write_zbuckets(zed, os.path.join(data, f"seg={bid}"))
 
     return sink
 
@@ -501,28 +484,7 @@ def ensure_zorder_base(spark: SparkSession, sf_dir: str) -> str:
 )
 def events_zorder_slice_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     asset = ensure_zorder_base(spark, sf_dir)
-    zed = spark.read.parquet(os.path.join(asset, "data"))
-    b = zed.agg(
-        F.min("user_id").alias("u_min"),
-        F.max("user_id").alias("u_max"),
-        F.min("t_ms").alias("t_min"),
-        F.max("t_ms").alias("t_max"),
-    ).collect()[0]
-    u_lo = b.u_min + ((b.u_max - b.u_min) * 4) // 10
-    u_hi = b.u_min + ((b.u_max - b.u_min) * 6) // 10
-    t_lo = b.t_min + ((b.t_max - b.t_min) * 4) // 10
-    t_hi = b.t_min + ((b.t_max - b.t_min) * 6) // 10
-    return (
-        zed.where(
-            F.col("user_id").between(F.lit(u_lo), F.lit(u_hi))
-            & F.col("t_ms").between(F.lit(t_lo), F.lit(t_hi))
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
+    return central_slice(spark.read.parquet(os.path.join(asset, "data")))
 
 
 # ------------------------------------------------- bounds-refresh arm
@@ -588,21 +550,10 @@ def refresh_zorder_layout(spark: SparkSession, asset: str) -> int:
     rows = zed.drop("z", "zbucket", "t_ms")
     t_ms = F.expr("CAST(ts div 1000000 AS BIGINT)")
     new_bounds_tmp = f"{bounds_dir}.tmp-{uuid.uuid4().hex[:8]}"
-    rows.agg(
-        F.min("user_id").alias("u_min"),
-        F.max("user_id").alias("u_max"),
-        F.min(t_ms).alias("t_min"),
-        F.max(t_ms).alias("t_max"),
-    ).write.mode("overwrite").parquet(new_bounds_tmp)
+    zorder_bounds(rows, t_ms).write.mode("overwrite").parquet(new_bounds_tmp)
     rezed = zorder_events_frozen(rows, spark.read.parquet(new_bounds_tmp))
     new_data_tmp = f"{data}.tmp-{uuid.uuid4().hex[:8]}"
-    (
-        rezed.repartition("zbucket")
-        .sortWithinPartitions("zbucket", "z")
-        .write.mode("overwrite")
-        .partitionBy("zbucket")
-        .parquet(new_data_tmp)
-    )
+    write_zbuckets(rezed, new_data_tmp)
     _swap_dir(data, new_data_tmp)
     _swap_dir(bounds_dir, new_bounds_tmp)
     return len(hot_before)
@@ -622,31 +573,15 @@ def write_zorder_refreshed(spark: SparkSession, sf_dir: str, path: str) -> None:
     ev = load(spark, sf_dir, "events").withColumn(
         "t_ms", F.expr("CAST(ts div 1000000 AS BIGINT)")
     )
-    dom = ev.agg(
-        F.min("user_id").alias("u_min"),
-        F.max("user_id").alias("u_max"),
-        F.min("t_ms").alias("t_min"),
-        F.max("t_ms").alias("t_max"),
-    ).collect()[0]
+    dom = zorder_bounds(ev).collect()[0]
     u_mid = dom.u_min + (dom.u_max - dom.u_min) * 5 // 10
     t_mid = dom.t_min + (dom.t_max - dom.t_min) * 5 // 10
     stale = ev.where((F.col("user_id") <= u_mid) & (F.col("t_ms") <= t_mid))
-    stale.agg(
-        F.min("user_id").alias("u_min"),
-        F.max("user_id").alias("u_max"),
-        F.min("t_ms").alias("t_min"),
-        F.max("t_ms").alias("t_max"),
-    ).write.mode("overwrite").parquet(os.path.join(path, "bounds"))
+    zorder_bounds(stale).write.mode("overwrite").parquet(os.path.join(path, "bounds"))
     zed = zorder_events_frozen(
         ev.drop("t_ms"), spark.read.parquet(os.path.join(path, "bounds"))
     )
-    (
-        zed.repartition("zbucket")
-        .sortWithinPartitions("zbucket", "z")
-        .write.mode("overwrite")
-        .partitionBy("zbucket")
-        .parquet(os.path.join(path, "data"))
-    )
+    write_zbuckets(zed, os.path.join(path, "data"))
     stale_data = spark.read.parquet(os.path.join(path, "data"))
     stale_data.groupBy(F.col("zbucket").cast("long").alias("zbucket")).agg(
         F.count("*").alias("n_rows")
@@ -698,25 +633,4 @@ def ensure_zorder_refreshed(spark: SparkSession, sf_dir: str) -> str:
 )
 def events_zorder_slice_refreshed(spark: SparkSession, sf_dir: str) -> DataFrame:
     asset = ensure_zorder_refreshed(spark, sf_dir)
-    zed = spark.read.parquet(os.path.join(asset, "data"))
-    b = zed.agg(
-        F.min("user_id").alias("u_min"),
-        F.max("user_id").alias("u_max"),
-        F.min("t_ms").alias("t_min"),
-        F.max("t_ms").alias("t_max"),
-    ).collect()[0]
-    u_lo = b.u_min + ((b.u_max - b.u_min) * 4) // 10
-    u_hi = b.u_min + ((b.u_max - b.u_min) * 6) // 10
-    t_lo = b.t_min + ((b.t_max - b.t_min) * 4) // 10
-    t_hi = b.t_min + ((b.t_max - b.t_min) * 6) // 10
-    return (
-        zed.where(
-            F.col("user_id").between(F.lit(u_lo), F.lit(u_hi))
-            & F.col("t_ms").between(F.lit(t_lo), F.lit(t_hi))
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
+    return central_slice(spark.read.parquet(os.path.join(asset, "data")))

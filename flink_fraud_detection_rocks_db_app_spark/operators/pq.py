@@ -50,7 +50,9 @@ from .similarity import (
     TOP_K,
     _ivf_assigned,
     _ivf_centroids,
+    _drift,
     _ivf_probes,
+    _mean_vectors,
     _vectors,
 )
 
@@ -179,6 +181,16 @@ def _queries_with_luts(spark: SparkSession, sf_dir: str, cb) -> DataFrame:
 _ADC_SUM = f"round(aggregate(zip_with(codes, luts, (c, l) -> l[c]), {_FOLD}), 6)"
 
 
+def _adc_scored(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, adist) over (code row x query LUT) pairs,
+    each query's own vector excluded."""
+    return pairs.where(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.expr(_ADC_SUM).alias("adist"),
+    )
+
+
 def _adc_rank(scored: DataFrame, keep: int = TOP_K) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
     return (
@@ -255,19 +267,14 @@ QUALIFY row_number() OVER (
     tags=("similarity", "ann", "pq"),
 )
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cb = _codebook(spark, sf_dir)
+    return _pq_topk(spark, sf_dir, _codebook(spark, sf_dir))
+
+
+def _pq_topk(spark: SparkSession, sf_dir: str, cb) -> DataFrame:
+    """Exhaustive ADC top-k of every vector encoded under codebook `cb`."""
     enc = _encoded(spark, sf_dir, cb)
     q = _queries_with_luts(spark, sf_dir, cb)
-    scored = (
-        enc.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(_ADC_SUM).alias("adist"),
-        )
-    )
-    return _adc_rank(scored)
+    return _adc_rank(_adc_scored(enc.crossJoin(F.broadcast(q))))
 
 
 # IVFPQ: IVF cell pruning first, ADC ranking inside the probed lists.
@@ -348,15 +355,7 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = _encoded(spark, sf_dir, cb).join(assigned, "vec_id")
     # (query_id, cell, luts): one bounded row per probed cell
     q = _queries_with_luts(spark, sf_dir, cb).join(probes, "query_id")
-    return (
-        enc.join(F.broadcast(q), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(_ADC_SUM).alias("adist"),
-        )
-    )
+    return _adc_scored(enc.join(F.broadcast(q), "cell"))
 
 
 # FAISS's IndexRefineFlat stage: widen the compressed-domain pool to
@@ -542,14 +541,27 @@ def _probe_ivfpq_index(spark: SparkSession, sf_dir: str, idx: str) -> DataFrame:
     """The IVFPQ index probe against an explicit asset path — shared by
     the ensure_index-cached registered query above and the
     streaming-ingestion face (which probes its stream-built scratch
-    asset): quantizers read back frozen from the asset, probed cells
-    become literal PartitionFilters, ADC ranks only those lists."""
+    asset): ADC ranks only the probed lists."""
+    return _adc_rank(_ivfpq_index_scored(spark, sf_dir, idx))
+
+
+def _ivfpq_index_scored(
+    spark: SparkSession, sf_dir: str, idx: str, keep=None
+) -> DataFrame:
+    """(query_id, neighbor_id, adist) over an IVFPQ asset's probed
+    lists: quantizers read back frozen from the asset, probed cells
+    become literal PartitionFilters. `keep`, a predicate on query_id,
+    narrows the queries before the probed cells are collected."""
     import os
 
     cb = _codebook_from_index(spark, idx)
     cents = spark.read.parquet(os.path.join(idx, "centroids"))
     e = _vectors(spark, sf_dir)
-    probes = _ivf_probes(e, cents).select("query_id", "cell")
+    probes = _ivf_probes(e, cents)
+    q = _queries_with_luts(spark, sf_dir, cb)
+    if keep is not None:
+        probes, q = probes.where(keep), q.where(keep)
+    probes = probes.select("query_id", "cell")
     # contract-bounded driver collect (≤ N_QUERIES × IVF_NPROBE ids):
     # literal cells are what let the parquet source prune the other
     # compressed inverted lists at planning time
@@ -557,17 +569,7 @@ def _probe_ivfpq_index(spark: SparkSession, sf_dir: str, idx: str) -> DataFrame:
     enc = spark.read.parquet(os.path.join(idx, "codes")).where(
         F.col("cell").isin(cells)
     )
-    q = _queries_with_luts(spark, sf_dir, cb).join(probes, "query_id")
-    scored = (
-        enc.join(F.broadcast(q), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(_ADC_SUM).alias("adist"),
-        )
-    )
-    return _adc_rank(scored)
+    return _adc_scored(enc.join(F.broadcast(q.join(probes, "query_id")), "cell"))
 
 
 def append_to_ivfpq_index(vectors: DataFrame, index_path: str) -> None:
@@ -660,11 +662,9 @@ def ann_ivfpq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     return recall_vs_exact(spark, sf_dir, ann_ivfpq_topk(spark, sf_dir))
 
 
-@register(
-    "ann_pq_drift_monitor",
-    oracle=f"""
-WITH {_PQ_CTES},
-asn AS (
+# per-codeword rounded mean subvectors (mv), shared by the drift
+# monitor's and the codebook refresh's oracles
+_PQ_MEAN_CTES = """asn AS (
   SELECT enc.vec_id, enc.m, enc.code, sub.sv
   FROM enc JOIN sub ON enc.vec_id = sub.vec_id AND enc.m = sub.m
 ),
@@ -673,7 +673,14 @@ mm AS (
   FROM (SELECT m, code, unnest(sv) AS val, unnest(range(len(sv))) AS pos FROM asn)
   GROUP BY 1, 2, 3
 ),
-mv AS (SELECT m, code, list(mc ORDER BY pos) AS mvec FROM mm GROUP BY 1, 2),
+mv AS (SELECT m, code, list(mc ORDER BY pos) AS mvec FROM mm GROUP BY 1, 2)"""
+
+
+@register(
+    "ann_pq_drift_monitor",
+    oracle=f"""
+WITH {_PQ_CTES},
+{_PQ_MEAN_CTES},
 occ AS (SELECT m, code, COUNT(*)::BIGINT AS n_vectors FROM enc GROUP BY 1, 2)
 SELECT cb.m::BIGINT AS m, cb.code::BIGINT AS code,
        COALESCE(occ.n_vectors, 0)::BIGINT AS n_vectors,
@@ -711,27 +718,11 @@ def ann_pq_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cs.subs").alias("sv"),
         )
     )
-    mm = (
-        pairs.select("m", "code", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("m", "code", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("mc"))
-        .groupBy("m", "code")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(struct(pos, mc))), x -> x.mc)"
-            ).alias("mvec")
-        )
-    )
+    mm = _mean_vectors(pairs, ["m", "code"], "sv")
     occ = pairs.groupBy("m", "code").agg(F.count("*").alias("n_vectors"))
     cw = spark.createDataFrame(
         [(m, c, cb[m][c]) for m in range(PQ_M) for c in range(PQ_KS)],
         "m long, code long, cv array<double>",
-    )
-    drift = F.sqrt(
-        F.expr(
-            "aggregate(zip_with(cv, mvec, (x, y) -> (x - y) * (x - y)), "
-            "CAST(0.0 AS DOUBLE), (s, x) -> s + x)"
-        )
     )
     return (
         cw.join(F.broadcast(occ), ["m", "code"], "left")
@@ -740,7 +731,7 @@ def ann_pq_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             "m",
             "code",
             F.coalesce("n_vectors", F.lit(0)).cast("long").alias("n_vectors"),
-            F.round(drift, 6).alias("drift"),
+            F.round(_drift(), 6).alias("drift"),
         )
     )
 
@@ -782,18 +773,7 @@ def _refreshed_codebook(
             F.col("cs.subs").alias("sv"),
         )
     )
-    mm = (
-        pairs.select("m", "code", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("m", "code", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("mc"))
-        .groupBy("m", "code")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(struct(pos, mc))), x -> x.mc)"
-            ).alias("mvec")
-        )
-        .collect()
-    )
+    mm = _mean_vectors(pairs, ["m", "code"], "sv").collect()
     means = {(r["m"], r["code"]): list(r["mvec"]) for r in mm}
     return [
         [means.get((m, c), cb[m][c]) for c in range(PQ_KS)]
@@ -803,16 +783,7 @@ def _refreshed_codebook(
 
 _PQ_REFRESH_ORACLE = f"""
 WITH {_PQ_CTES},
-asn AS (
-  SELECT enc.vec_id, enc.m, enc.code, sub.sv
-  FROM enc JOIN sub ON enc.vec_id = sub.vec_id AND enc.m = sub.m
-),
-mm AS (
-  SELECT m, code, pos, round(avg(val), 6) AS mc
-  FROM (SELECT m, code, unnest(sv) AS val, unnest(range(len(sv))) AS pos FROM asn)
-  GROUP BY 1, 2, 3
-),
-mv AS (SELECT m, code, list(mc ORDER BY pos) AS mvec FROM mm GROUP BY 1, 2),
+{_PQ_MEAN_CTES},
 cb2 AS (
   SELECT cb.m, cb.code, COALESCE(mv.mvec, cb.cv) AS cv
   FROM cb LEFT JOIN mv USING (m, code)
@@ -872,16 +843,4 @@ QUALIFY row_number() OVER (
     tags=("similarity", "ann", "pq", "lifecycle"),
 )
 def ann_pq_refreshed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cb2 = _refreshed_codebook(spark, sf_dir)
-    enc = _encoded(spark, sf_dir, cb2)
-    q = _queries_with_luts(spark, sf_dir, cb2)
-    scored = (
-        enc.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(_ADC_SUM).alias("adist"),
-        )
-    )
-    return _adc_rank(scored)
+    return _pq_topk(spark, sf_dir, _refreshed_codebook(spark, sf_dir))

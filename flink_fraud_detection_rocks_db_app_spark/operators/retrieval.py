@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from ..fixtures import load
 from ..registry import register
-from .text import _BM25_CONTRIB
+from .text import _BM25_CONTRIB, term_ordered_sum
 
 MLT_QUERIES = 5  # query docs = doc_id < 5
 MLT_TERMS = 10  # "interesting terms" kept per query doc
@@ -62,6 +62,38 @@ _IDF = "ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5) + 1.0)"
 def _toks(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
+    )
+
+
+def _mlt_interest(qtf: DataFrame, df: DataFrame, stats: DataFrame) -> DataFrame:
+    """(query_id, term, df): the interesting terms, top tf·idf within
+    each query doc."""
+    return (
+        qtf.join(F.broadcast(df), "term")
+        .crossJoin(F.broadcast(stats.select("n_docs")))
+        .withColumn("tscore", F.round(F.expr(f"qtf * {_IDF}"), 6))
+        .withColumn(
+            "trk",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    F.desc("tscore"), F.asc("term")
+                )
+            ),
+        )
+        .where(F.col("trk") <= MLT_TERMS)
+        .select("query_id", "term", "df")
+    )
+
+
+def _mlt_bm25(pairs: DataFrame, stats: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, mlt_bm25) from (query, doc, interesting
+    term) rows carrying tf, df and dl: contributions fold in sorted
+    term order, 6dp-rounded."""
+    contrib = pairs.crossJoin(F.broadcast(stats)).select(
+        "query_id", "doc_id", "term", F.expr(_BM25_CONTRIB).alias("c")
+    )
+    return contrib.groupBy("query_id", F.col("doc_id").alias("neighbor_id")).agg(
+        term_ordered_sum().alias("mlt_bm25")
     )
 
 
@@ -92,22 +124,7 @@ def _mlt_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.countDistinct("doc_id").alias("df"))
     )
-    # interesting terms: top tf·idf within each query doc
-    interest = (
-        qtf.join(F.broadcast(df), "term")
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .withColumn("tscore", F.round(F.expr(f"qtf * {_IDF}"), 6))
-        .withColumn(
-            "trk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("tscore"), F.asc("term")
-                )
-            ),
-        )
-        .where(F.col("trk") <= MLT_TERMS)
-        .select("query_id", "term", "df")
-    )
+    interest = _mlt_interest(qtf, df, stats)
     # corpus term frequencies for the selected terms only
     tf = (
         tok.join(
@@ -116,36 +133,26 @@ def _mlt_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
-    contrib = (
+    pairs = (
         tf.join(F.broadcast(interest), "term")
         .where(F.col("doc_id") != F.col("query_id"))
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", "term", F.expr(_BM25_CONTRIB).alias("c"))
     )
-    return contrib.groupBy(
-        "query_id", F.col("doc_id").alias("neighbor_id")
-    ).agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "c"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["c"],
-            ),
-            6,
-        ).alias("mlt_bm25")
+    return _mlt_bm25(pairs, stats)
+
+
+def _mlt_top(scored: DataFrame) -> DataFrame:
+    """The MLT_TOP_K best-scored neighbours of each query doc."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("mlt_bm25"), F.asc("neighbor_id")
+    )
+    return scored.withColumn("rk", F.row_number().over(w)).where(
+        F.col("rk") <= MLT_TOP_K
     )
 
 
 def _mlt_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("mlt_bm25"), F.asc("neighbor_id")
-    )
-    return (
-        _mlt_scored(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= MLT_TOP_K)
-    )
+    return _mlt_top(_mlt_scored(spark, sf_dir))
 
 
 def _mlt_scored_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,20 +167,11 @@ def _mlt_scored_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as the probe-cell sets). Score-identical to the scan form
     by construction (same tokenization wrote the index; exact-integer
     stats divide to the same avgdl), so it shares _MLT_ORACLE."""
-    import os
-
-    from .text import BM25_TERM_BUCKETS, ensure_bm25_index
+    from .text import BM25_TERM_BUCKETS, bm25_index_stats, ensure_bm25_index
 
     idx = ensure_bm25_index(spark, sf_dir)
     postings_all = spark.read.parquet(os.path.join(idx, "postings"))
-    stats = (
-        spark.read.parquet(os.path.join(idx, "stats"))
-        .agg(F.sum("sum_dl").alias("sum_dl"), F.sum("n_docs").alias("n_docs"))
-        .select(
-            (F.col("sum_dl").cast("double") / F.col("n_docs")).alias("avgdl"),
-            "n_docs",
-        )
-    )
+    stats = bm25_index_stats(spark, idx)
     qtf = postings_all.where(F.col("doc_id") < MLT_QUERIES).select(
         F.col("doc_id").alias("query_id"), "term", F.col("tf").alias("qtf")
     )
@@ -192,50 +190,15 @@ def _mlt_scored_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("term").isin(cand)
     )
     df = pruned.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    interest = (
-        qtf.join(F.broadcast(df), "term")
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .withColumn("tscore", F.round(F.expr(f"qtf * {_IDF}"), 6))
-        .withColumn(
-            "trk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("tscore"), F.asc("term")
-                )
-            ),
-        )
-        .where(F.col("trk") <= MLT_TERMS)
-        .select("query_id", "term", "df")
+    interest = _mlt_interest(qtf, df, stats)
+    pairs = pruned.join(F.broadcast(interest), "term").where(
+        F.col("doc_id") != F.col("query_id")
     )
-    contrib = (
-        pruned.join(F.broadcast(interest), "term")
-        .where(F.col("doc_id") != F.col("query_id"))
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", "term", F.expr(_BM25_CONTRIB).alias("c"))
-    )
-    return contrib.groupBy(
-        "query_id", F.col("doc_id").alias("neighbor_id")
-    ).agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "c"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["c"],
-            ),
-            6,
-        ).alias("mlt_bm25")
-    )
+    return _mlt_bm25(pairs, stats)
 
 
 def _mlt_ranked_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("mlt_bm25"), F.asc("neighbor_id")
-    )
-    return (
-        _mlt_scored_indexed(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= MLT_TOP_K)
-    )
+    return _mlt_top(_mlt_scored_indexed(spark, sf_dir))
 
 
 # ---- shared oracle CTEs: the full MLT replay --------------------------
@@ -502,45 +465,13 @@ def _sem_ranked_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     are read ONLY for the query vectors (vec_id < pushdown filters);
     the corpus side is the cell-partitioned compressed codes table,
     pruned to the probed cells at planning time."""
-    import os
+    from .pq import _ivfpq_index_scored, ensure_ivfpq_index
 
-    from .pq import (
-        _ADC_SUM,
-        _codebook_from_index,
-        _queries_with_luts,
-        ensure_ivfpq_index,
-    )
-    from .similarity import _ivf_probes, _vectors
-
-    idx = ensure_ivfpq_index(spark, sf_dir)
-    cb = _codebook_from_index(spark, idx)
-    cents = spark.read.parquet(os.path.join(idx, "centroids"))
-    e = _vectors(spark, sf_dir)
-    probes = (
-        _ivf_probes(e, cents)
-        .where(F.col("query_id") < MLT_QUERIES)
-        .select("query_id", "cell")
-    )
-    # contract-bounded driver collect (≤ MLT_QUERIES × nprobe ids):
-    # literal cells become planning-time PartitionFilters on the codes
-    # table — the other compressed inverted lists are never opened
-    cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
-    enc = spark.read.parquet(os.path.join(idx, "codes")).where(
-        F.col("cell").isin(cells)
-    )
-    q = (
-        _queries_with_luts(spark, sf_dir, cb)
-        .where(F.col("query_id") < MLT_QUERIES)
-        .join(probes, "query_id")
-    )
-    scored = (
-        enc.join(F.broadcast(q), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(_ADC_SUM).alias("adist"),
-        )
+    scored = _ivfpq_index_scored(
+        spark,
+        sf_dir,
+        ensure_ivfpq_index(spark, sf_dir),
+        F.col("query_id") < MLT_QUERIES,
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
     return (
@@ -727,9 +658,11 @@ def _idcg_literals() -> str:
     return ", ".join(f"CAST({v!r} AS DOUBLE)" for v in _IDCG_BY_LEN)
 
 
-def _hybrid_ndcg_oracle() -> str:
-    return f"""
-WITH exact_h AS ({_HYBRID_ORACLE}),
+def _hybrid_ranked_ctes() -> str:
+    """WITH exact_h (gold fusion), idx_h (indexed fusion) and sysr: the
+    indexed fusion's rank p per query, shared by the nDCG and MRR
+    oracles."""
+    return f"""WITH exact_h AS ({_HYBRID_ORACLE}),
 idx_h AS ({_hybrid_idx_oracle()}),
 sysr AS (
   SELECT query_id, neighbor_id,
@@ -737,7 +670,12 @@ sysr AS (
            PARTITION BY query_id ORDER BY rrf DESC, neighbor_id ASC
          ) AS p
   FROM idx_h
-),
+)"""
+
+
+def _hybrid_ndcg_oracle() -> str:
+    return f"""
+{_hybrid_ranked_ctes()},
 gold AS (
   SELECT query_id, neighbor_id,
          row_number() OVER (
@@ -841,15 +779,7 @@ def hybrid_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hybrid_mrr_oracle() -> str:
     return f"""
-WITH exact_h AS ({_HYBRID_ORACLE}),
-idx_h AS ({_hybrid_idx_oracle()}),
-sysr AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (
-           PARTITION BY query_id ORDER BY rrf DESC, neighbor_id ASC
-         ) AS p
-  FROM idx_h
-),
+{_hybrid_ranked_ctes()},
 hit AS (
   SELECT s.query_id, CAST(min(s.p) AS BIGINT) AS first_rel
   FROM sysr s

@@ -1109,6 +1109,32 @@ def ann_ivf_balance_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _mean_vectors(rows: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """(*keys, mvec): the elementwise mean of the `vec` arrays in each
+    `keys` group, each component 6dp-rounded."""
+    return (
+        rows.select(*keys, F.posexplode(vec).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(F.round(F.avg("val"), 6).alias("mc"))
+        .groupBy(*keys)
+        .agg(
+            F.expr(
+                "transform(sort_array(collect_list(struct(pos, mc))), x -> x.mc)"
+            ).alias("mvec")
+        )
+    )
+
+
+def _drift():
+    """L2 distance between a cell's centroid `cv` and its mean `mvec`."""
+    return F.sqrt(
+        F.expr(
+            "aggregate(zip_with(cv, mvec, (x, y) -> (x - y) * (x - y)), "
+            "CAST(0.0 AS DOUBLE), (s, x) -> s + x)"
+        )
+    )
+
+
 def ivf_health_report(inv: DataFrame, cents: DataFrame) -> DataFrame:
     """Combined balance + drift report over arbitrary inverted-lists
     (`cell`, `v`) and quantizer (`cell`, `cv`) frames — the shared
@@ -1117,27 +1143,11 @@ def ivf_health_report(inv: DataFrame, cents: DataFrame) -> DataFrame:
     definition regardless of how the index was built."""
     inv = inv.select(F.col("cell").cast("long").alias("cell"), "v")
     occ = inv.groupBy("cell").agg(F.count("*").alias("n_vectors"))
-    m = (
-        inv.select("cell", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cell", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("mc"))
-        .groupBy("cell")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(struct(pos, mc))), x -> x.mc)"
-            ).alias("mvec")
-        )
-    )
+    m = _mean_vectors(inv, ["cell"], "v")
     cents = cents.select(F.col("cell").cast("long").alias("cell"), "cv")
     total = occ.agg(F.sum("n_vectors").alias("total"))
     n = F.coalesce("n_vectors", F.lit(0)).cast("long")
     scaled = n * IVF_CELLS
-    drift = F.sqrt(
-        F.expr(
-            "aggregate(zip_with(cv, mvec, (x, y) -> (x - y) * (x - y)), "
-            "CAST(0.0 AS DOUBLE), (s, x) -> s + x)"
-        )
-    )
     return (
         cents.join(F.broadcast(occ), "cell", "left")
         .join(F.broadcast(m), "cell", "left")
@@ -1150,10 +1160,21 @@ def ivf_health_report(inv: DataFrame, cents: DataFrame) -> DataFrame:
             ),
             (scaled > IVF_HOT_FACTOR * F.col("total")).alias("hot"),
             (n == 0).alias("dead"),
-            F.round(drift, 6).alias("drift"),
+            F.round(_drift(), 6).alias("drift"),
         )
     )
 
+
+_IVF_OCC_CTE = (
+    "occ AS (SELECT cell, COUNT(*)::BIGINT AS n_vectors FROM assigned GROUP BY cell)"
+)
+# per-cell rounded mean vectors, the SQL side of _mean_vectors
+_IVF_MEAN_CTES = """m AS (
+  SELECT cell, pos, round(avg(val), 6) AS mc
+  FROM (SELECT cell, unnest(v) AS val, unnest(range(len(v))) AS pos FROM assigned)
+  GROUP BY cell, pos
+),
+mv AS (SELECT cell, list(mc ORDER BY pos) AS mvec FROM m GROUP BY cell)"""
 
 # Combined health oracle over the shared assignment CTEs — the
 # streamed twin compares the STREAM-BUILT index's report against this
@@ -1161,14 +1182,9 @@ def ivf_health_report(inv: DataFrame, cents: DataFrame) -> DataFrame:
 # segmentation-independent, so micro-batch layout cannot move a count
 # or a mean).
 IVF_HEALTH_ORACLE = f"""{_IVF_ASSIGN_CTES},
-occ AS (SELECT cell, COUNT(*)::BIGINT AS n_vectors FROM assigned GROUP BY cell),
+{_IVF_OCC_CTE},
 tot AS (SELECT SUM(n_vectors)::BIGINT AS total FROM occ),
-m AS (
-  SELECT cell, pos, round(avg(val), 6) AS mc
-  FROM (SELECT cell, unnest(v) AS val, unnest(range(len(v))) AS pos FROM assigned)
-  GROUP BY cell, pos
-),
-mv AS (SELECT cell, list(mc ORDER BY pos) AS mvec FROM m GROUP BY cell)
+{_IVF_MEAN_CTES}
 SELECT c.cell,
        COALESCE(o.n_vectors, 0)::BIGINT AS n_vectors,
        round((COALESCE(o.n_vectors, 0) * {IVF_CELLS})::DOUBLE / total::DOUBLE, 6)
@@ -1186,13 +1202,8 @@ CROSS JOIN tot
 @register(
     "ann_ivf_drift_monitor",
     oracle=f"""{_IVF_ASSIGN_CTES},
-m AS (
-  SELECT cell, pos, round(avg(val), 6) AS mc
-  FROM (SELECT cell, unnest(v) AS val, unnest(range(len(v))) AS pos FROM assigned)
-  GROUP BY cell, pos
-),
-mv AS (SELECT cell, list(mc ORDER BY pos) AS mvec FROM m GROUP BY cell),
-occ AS (SELECT cell, COUNT(*)::BIGINT AS n_vectors FROM assigned GROUP BY cell)
+{_IVF_MEAN_CTES},
+{_IVF_OCC_CTE}
 SELECT c.cell,
        COALESCE(o.n_vectors, 0)::BIGINT AS n_vectors,
        round(list_distance(c.cv, mv.mvec), 6) AS drift
@@ -1223,26 +1234,10 @@ def ann_ivf_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     inv = spark.read.parquet(idx).select(
         F.col("cell").cast("long").alias("cell"), "v"
     )
-    m = (
-        inv.select("cell", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cell", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("mc"))
-        .groupBy("cell")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(struct(pos, mc))), x -> x.mc)"
-            ).alias("mvec")
-        )
-    )
+    m = _mean_vectors(inv, ["cell"], "v")
     occ = inv.groupBy("cell").agg(F.count("*").alias("n_vectors"))
     cents = _ivf_centroids(_vectors(spark, sf_dir)).select(
         F.col("cell").cast("long").alias("cell"), "cv"
-    )
-    drift = F.sqrt(
-        F.expr(
-            "aggregate(zip_with(cv, mvec, (x, y) -> (x - y) * (x - y)), "
-            "CAST(0.0 AS DOUBLE), (s, x) -> s + x)"
-        )
     )
     return (
         cents.join(F.broadcast(occ), "cell", "left")
@@ -1250,7 +1245,7 @@ def ann_ivf_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "cell",
             F.coalesce("n_vectors", F.lit(0)).cast("long").alias("n_vectors"),
-            F.round(drift, 6).alias("drift"),
+            F.round(_drift(), 6).alias("drift"),
         )
     )
 
@@ -1370,6 +1365,42 @@ def write_semdedup_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     write_semdedup_base(e.where(~_semdedup_batch_mask()), path)
 
 
+def semdedup_batch_losers(
+    vectors: DataFrame, index_path: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Judge a new-vector batch (vec_id, v) against a SemDeDup asset:
+    score it under the FROZEN quantizer and pair it against the touched
+    cells' current members plus itself. Returns (the batch's scored
+    rows, persisted — the caller unpersists; the asset's scored rows;
+    the new losers)."""
+    import os
+
+    spark = vectors.sparkSession
+    cents = spark.read.parquet(os.path.join(index_path, "centroids"))
+    cnorm = cents.select("cell", "cv", F.sqrt(dot("cv", "cv")).alias("cn"))
+    bscored = _semdedup_score(_kmeans_assign(vectors, cents), cnorm).persist()
+    # bounded collect (<= K cells) that ENABLES partition pruning on the
+    # scored asset — same contract as the IVF / BM25 index probes
+    cells = sorted(r["cell"] for r in bscored.select("cell").distinct().collect())
+    existing = (
+        spark.read.parquet(os.path.join(index_path, "scored"))
+        .withColumn("cell", F.col("cell").cast("long"))
+        .select("vec_id", "cell", "v", "nv", "cos_centroid")
+    )
+    cand = (
+        existing.where(F.col("cell").isin(cells))
+        .withColumn("is_new", F.lit(False))
+        .unionByName(bscored.withColumn("is_new", F.lit(True)))
+    )
+    a, b = _scored_sides(cand)
+    new_losers = _semdedup_pair_losers(
+        a.join(b, "cell")
+        .where(F.col("id_a") < F.col("id_b"))
+        .where(F.col("new_a") | F.col("new_b"))
+    )
+    return bscored, existing, new_losers
+
+
 def append_to_semdedup_index(vectors: DataFrame, index_path: str) -> None:
     """Append a batch of NEW vectors (vec_id, v) to a persisted SemDeDup
     asset: score the batch under the FROZEN quantizer, judge it against
@@ -1400,27 +1431,7 @@ def append_to_semdedup_index(vectors: DataFrame, index_path: str) -> None:
             f"in the asset (e.g. {dup[0].vec_id!r}) — appending would "
             "duplicate scored rows and corrupt the keep verdict"
         )
-    cents = spark.read.parquet(os.path.join(index_path, "centroids"))
-    cnorm = cents.select("cell", "cv", F.sqrt(dot("cv", "cv")).alias("cn"))
-    bscored = _semdedup_score(_kmeans_assign(vectors, cents), cnorm).persist()
-    # bounded collect (<= K cells) enabling partition pruning on scored/
-    cells = sorted(r["cell"] for r in bscored.select("cell").distinct().collect())
-    existing = (
-        spark.read.parquet(scored_dir)
-        .withColumn("cell", F.col("cell").cast("long"))
-        .select("vec_id", "cell", "v", "nv", "cos_centroid")
-    )
-    cand = (
-        existing.where(F.col("cell").isin(cells))
-        .withColumn("is_new", F.lit(False))
-        .unionByName(bscored.withColumn("is_new", F.lit(True)))
-    )
-    a, b = _scored_sides(cand)
-    new_losers = _semdedup_pair_losers(
-        a.join(b, "cell")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(F.col("new_a") | F.col("new_b"))
-    )
+    bscored, _existing, new_losers = semdedup_batch_losers(vectors, index_path)
     new_losers.write.mode("append").parquet(os.path.join(index_path, "losers"))
     bscored.write.mode("append").partitionBy("cell").parquet(scored_dir)
     bscored.unpersist()
@@ -1496,30 +1507,9 @@ def semdedup_incremental_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embeddings",
         lambda tmp: write_semdedup_index(spark, sf_dir, tmp),
     )
-    cents = spark.read.parquet(os.path.join(idx, "centroids"))
-    cnorm = cents.select("cell", "cv", F.sqrt(dot("cv", "cv")).alias("cn"))
     e = _vectors(spark, sf_dir).select("vec_id", "v")
-    bscored = _semdedup_score(
-        _kmeans_assign(e.where(_semdedup_batch_mask()), cents), cnorm
-    ).persist()
-    # bounded collect (<= K cells) that ENABLES partition pruning on the
-    # scored asset — same contract as the IVF / BM25 index probes
-    cells = sorted(r["cell"] for r in bscored.select("cell").distinct().collect())
-    existing = (
-        spark.read.parquet(os.path.join(idx, "scored"))
-        .withColumn("cell", F.col("cell").cast("long"))
-        .select("vec_id", "cell", "v", "nv", "cos_centroid")
-    )
-    cand = (
-        existing.where(F.col("cell").isin(cells))
-        .withColumn("is_new", F.lit(False))
-        .unionByName(bscored.withColumn("is_new", F.lit(True)))
-    )
-    a, b = _scored_sides(cand)
-    new_losers = _semdedup_pair_losers(
-        a.join(b, "cell")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(F.col("new_a") | F.col("new_b"))
+    bscored, existing, new_losers = semdedup_batch_losers(
+        e.where(_semdedup_batch_mask()), idx
     )
     all_losers = (
         spark.read.parquet(os.path.join(idx, "losers"))

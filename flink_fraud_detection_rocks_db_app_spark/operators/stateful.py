@@ -27,10 +27,11 @@ from ..registry import register
 from ..streaming.stateful import (
     EWMA_SCHEMA,
     capped_session_rows,
-    ewma_rows,
+    ewma_step,
     running_mean_alerts_batch,
     running_sum_alerts_batch,
     sorted_account_fold,
+    step_rows,
 )
 
 
@@ -207,7 +208,7 @@ def ewma_batch(df: DataFrame, alpha: float) -> DataFrame:
     The classic adaptive-baseline smoother for fraud amounts — one
     float of state per key forever. Same sorted-account fold as F3/F5;
     identical IEEE op order per key makes the oracle bit-exact."""
-    return sorted_account_fold(df, partial(ewma_rows, alpha=alpha), EWMA_SCHEMA)
+    return sorted_account_fold(df, step_rows(partial(ewma_step, alpha)), EWMA_SCHEMA)
 
 
 # Recursive-CTE oracle for the EWMA recursion — shared by the batch

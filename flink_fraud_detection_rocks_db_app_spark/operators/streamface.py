@@ -89,13 +89,19 @@ from ..streaming.rollup import (
     run_users_sketch_rollup,
 )
 from ..streaming.stateful import pattern_rising_stream
-from .asof import ASOF_ORACLE
-from .detectors import _RISING_ORACLE, type_threshold_rules
-from .graph import _ENTITY, _pagerank_iterate, _trade_pairs
+from .asof import ASOF_ORACLE, INTERVAL_JOIN_ORACLE, orders_asof_flat
+from .detectors import (
+    _RISING_ORACLE,
+    DYNAMIC_RULES_ORACLE,
+    UNION_MAX_BY_ORACLE,
+    type_threshold_rules,
+)
+from .graph import _ENTITY, _pagerank_iterate, _pagerank_oracle, _trade_pairs
 from .indexcache import ensure_index
-from .layout import ZORDER_BATCH_MOD, zorder_stream_sink
+from .layout import _SLICE_ORACLE, ZORDER_BATCH_MOD, central_slice, zorder_stream_sink
 from .pipeline import PREP_ORACLE, corpus_report, merge_prep_segments, prep_segment
 from .pq import (
+    _IVFPQ_ORACLE,
     PQ_KS,
     _codebook_from_vectors,
     _encoded_over,
@@ -105,11 +111,13 @@ from .pq import (
 from .similarity import _IVF_ORACLE as _STREAM_IVF_ORACLE
 from .similarity import (
     IVF_CELLS,
+    IVF_HEALTH_ORACLE,
     _ivf_assigned,
     _ivf_centroids,
     _ivf_probes,
     _ivf_rerank,
     _semdedup_batch_mask,
+    _semdedup_incr_oracle,
     _vectors,
     _vectors_over,
     append_to_ivf_index,
@@ -127,6 +135,8 @@ from .temporal import (
 )
 from .text import (
     _BM25_ORACLE,
+    _MG_ORACLE,
+    _PSI_ORACLE,
     MG_COUNTERS,
     MG_TOP,
     PSI_BATCH_MOD,
@@ -484,15 +494,7 @@ def _click_purchase_join(read, click_ids, purchase_ids, how="inner") -> DataFram
 
 @register(
     "stream_interval_join_replay",
-    # identical contract to the batch interval_join_click_purchase
-    oracle="""
-SELECT c.user_id AS account_id, c.event_id AS click_id, p.event_id AS purchase_id,
-       epoch_ms(p.ts) - epoch_ms(c.ts) AS lag_ms, p.value AS purchase_value
-FROM events c JOIN events p
-  ON c.user_id = p.user_id
- AND c.event_type = 'click' AND p.event_type = 'purchase'
- AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 7 DAY
-""",
+    oracle=INTERVAL_JOIN_ORACLE,
     doc="Stream-STREAM interval join under the oracle gate: clicks and "
     "purchases are two watermarked streams over the same replay; the "
     "join keeps 7 days of click state (watermark-bounded eviction — "
@@ -828,22 +830,7 @@ def stream_users_sketch_rollup_replay(spark: SparkSession, sf_dir: str) -> DataF
 
 @register(
     "stream_union_max_by_replay",
-    # identical contract to the batch union_max_by row
-    oracle=f"""
-WITH a AS ({sql_slide(5 * 60_000, 60_000, "AVG(value) AS mean_amount")}),
-b AS ({sql_tumble(5 * 60_000, "AVG(value) AS mean_amount")}),
-u AS (
-  SELECT *, 'slide' AS src FROM a
-  UNION ALL
-  SELECT *, 'tumble' AS src FROM b
-)
-SELECT account_id, w_start, round(mean_amount, 6) AS mean_r, src
-FROM u
-QUALIFY row_number() OVER (
-  PARTITION BY account_id
-  ORDER BY round(mean_amount, 6) DESC, w_start ASC, src ASC
-) = 1
-""",
+    oracle=UNION_MAX_BY_ORACLE,
     doc="M1 + A7 through the real streaming engine: TWO independently "
     "watermarked windowed aggregates (5m/1m sliding mean and 5m "
     "tumbling mean) over the same replay are UNIONED in one streaming "
@@ -971,17 +958,7 @@ def stream_count_or_time_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_dynamic_rules_replay",
-    # identical contract to the batch dynamic_rules_alerts
-    oracle="""
-WITH rules AS (
-  SELECT event_type, round(quantile_cont(value, 0.95), 6) AS threshold
-  FROM events GROUP BY 1
-)
-SELECT user_id AS account_id, epoch_ms(e.ts) AS t_ms, e.event_type,
-       CAST(e.value AS DOUBLE) AS amount, r.threshold
-FROM events e JOIN rules r USING (event_type)
-WHERE e.value > r.threshold
-""",
+    oracle=DYNAMIC_RULES_ORACLE,
     doc="The broadcast-state rules pattern as a STREAM-STATIC join "
     "under the oracle gate: the per-type p95 rules frame (O(|types|), "
     "always broadcast) joins the live typed replay and every "
@@ -1087,19 +1064,7 @@ def stream_bm25_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_asof_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        load(spark, sf_dir, "orders")
-        .groupBy("o_custkey", "o_orderdate")
-        .agg(F.max("o_orderkey").alias("ok"))
-        .select(
-            F.col("o_custkey").alias("user_id"),
-            # unix_date: timezone-independent midnight epoch (the
-            # batch face's convention)
-            (
-                F.unix_date(F.col("o_orderdate").cast("date")).cast("long")
-                * F.lit(86_400_000).cast("long")
-            ).alias("o_ms"),
-            "ok",
-        )
+        orders_asof_flat(spark, sf_dir)
         .groupBy("user_id")
         .agg(F.sort_array(F.collect_list(F.struct("o_ms", "ok"))).alias("arr"))
     )
@@ -1177,15 +1142,9 @@ def stream_corpus_prep_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _collected(corpus_report(merged))  # bounded: one row per language
 
 
-def _zorder_slice_oracle() -> str:
-    from .layout import _SLICE_ORACLE
-
-    return _SLICE_ORACLE
-
-
 @register(
     "stream_zorder_ingest_replay",
-    oracle=_zorder_slice_oracle(),
+    oracle=_SLICE_ORACLE,
     doc="The z-ordered table maintained under streaming INGESTION — "
     "the layout pillar's ingest leg, same shape as the BM25/IVF "
     "ingest faces: the first arrival chunk carries the BASE split "
@@ -1226,40 +1185,13 @@ def stream_zorder_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             chunk,
             zorder_stream_sink(asset),
         )
-        zed = spark.read.parquet(os.path.join(asset, "data"))
-        b = zed.agg(
-            F.min("user_id").alias("u_min"),
-            F.max("user_id").alias("u_max"),
-            F.min("t_ms").alias("t_min"),
-            F.max("t_ms").alias("t_max"),
-        ).collect()[0]
-        u_lo = b.u_min + ((b.u_max - b.u_min) * 4) // 10
-        u_hi = b.u_min + ((b.u_max - b.u_min) * 6) // 10
-        t_lo = b.t_min + ((b.t_max - b.t_min) * 4) // 10
-        t_hi = b.t_min + ((b.t_max - b.t_min) * 6) // 10
-        out = (
-            zed.where(
-                F.col("user_id").between(F.lit(u_lo), F.lit(u_hi))
-                & F.col("t_ms").between(F.lit(t_lo), F.lit(t_hi))
-            )
-            .groupBy("event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 6).alias("sum_value"),
-            )
-        )
+        out = central_slice(spark.read.parquet(os.path.join(asset, "data")))
         return _collected(out)  # bounded: one row per event_type
-
-
-def _psi_oracle() -> str:
-    from .text import _PSI_ORACLE
-
-    return _PSI_ORACLE
 
 
 @register(
     "stream_quality_psi_replay",
-    oracle=_psi_oracle(),
+    oracle=_PSI_ORACLE,
     doc="The data-drift gate under streaming INGESTION — the PSI "
     "sibling of stream_corpus_prep_replay: the batch split "
     "(doc_id % 8 == 7) arrives as 3 document chunks; each micro-batch "
@@ -1371,15 +1303,9 @@ def stream_ivf_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _collected(_ivf_rerank(inv, probes))  # bounded: N_QUERIES x TOP_K
 
 
-def _ivf_health_oracle() -> str:
-    from .similarity import IVF_HEALTH_ORACLE
-
-    return IVF_HEALTH_ORACLE
-
-
 @register(
     "stream_ivf_health_replay",
-    oracle=_ivf_health_oracle(),
+    oracle=IVF_HEALTH_ORACLE,
     doc="The index-health triple's STREAMED leg: after the same "
     "3-chunk streaming ingestion stream_ivf_ingest_replay runs "
     "(bootstrap, then frozen-quantizer appends), emit the combined "
@@ -1408,15 +1334,9 @@ def stream_ivf_health_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _collected(ivf_health_report(inv, cents))  # bounded: IVF_CELLS rows
 
 
-def _stream_ivfpq_oracle() -> str:
-    from .pq import _IVFPQ_ORACLE
-
-    return _IVFPQ_ORACLE
-
-
 @register(
     "stream_ivfpq_ingest_replay",
-    oracle=_stream_ivfpq_oracle(),
+    oracle=_IVFPQ_ORACLE,
     doc="Streaming ingestion maintaining the IVFPQ index — the "
     "COMPRESSED-domain sibling of stream_ivf_ingest_replay, i.e. the "
     "deployed 100 TB index form kept current under arrival: the first "
@@ -1493,15 +1413,9 @@ def stream_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _collected(out)  # bounded: N_QUERIES x TOP_K rows
 
 
-def _stream_semdedup_oracle() -> str:
-    from .similarity import _semdedup_incr_oracle
-
-    return _semdedup_incr_oracle()
-
-
 @register(
     "stream_semdedup_ingest_replay",
-    oracle=_stream_semdedup_oracle(),
+    oracle=_semdedup_incr_oracle(),
     doc="Streaming SEMANTIC-dedup ingestion — completing the "
     "incremental-ingest quartet next to the BM25, IVF and corpus-prep "
     "faces: the first arrival chunk carries the base (~7/8) split, "
@@ -1733,18 +1647,7 @@ def stream_scd2_tombstoned_replay(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "stream_mg_ingest_replay",
-    oracle="""
-WITH toks AS (
-  SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents
-),
-c AS (
-  SELECT tok, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1
-)
-SELECT tok, n,
-       CAST(row_number() OVER (ORDER BY n DESC, tok ASC) AS BIGINT) AS rnk,
-       TRUE AS est_within_bound
-FROM c ORDER BY n DESC, tok ASC LIMIT 20
-""",
+    oracle=_MG_ORACLE,
     doc="The frequency sketch MAINTAINED under streaming ingestion: "
     "each arriving document chunk writes its merged Misra-Gries "
     "summary as a k-row ledger segment (per-batch-id path, "
@@ -1803,15 +1706,9 @@ def stream_mg_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------- graph edge ingestion
 
 
-def _graph_oracle() -> str:
-    from .graph import _pagerank_oracle
-
-    return _pagerank_oracle()
-
-
 @register(
     "stream_pagerank_ingest_replay",
-    oracle=_graph_oracle(),
+    oracle=_pagerank_oracle(),
     doc="The graph pillar's streaming twin (with it EVERY extension "
     "pillar has one): the trade-pair edge source arrives in three "
     "hash-disjoint chunks through the ACTUAL engine, a foreachBatch "

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..fixtures import load
@@ -81,20 +81,11 @@ quality AS (
 """
 
 
-@register(
-    "doc_quality_score",
-    oracle=f"""
-WITH {QUALITY_SQL_CTES}
-SELECT doc_id, quality FROM quality
-""",
-    doc="Quality score: length saturation + lexical diversity + stopword-"
-    "ratio proximity, rounded to 6dp so the score is engine-stable. The "
-    "standard cheap pre-LLM data filter shape.",
-    tags=("text",),
-)
-def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+def quality_over(docs: DataFrame) -> DataFrame:
+    """(doc_id, quality) over any documents frame: the Spark form of
+    QUALITY_SQL_CTES."""
     stop_list = ", ".join(f"'{s}'" for s in STOPWORDS)
-    m = load(spark, sf_dir, "documents").selectExpr(
+    m = docs.selectExpr(
         "doc_id",
         "size(split(lower(text), ' ')) AS n_tokens",
         "size(array_distinct(split(lower(text), ' '))) / CAST(size(split(lower(text), ' ')) AS DOUBLE) AS distinct_ratio",
@@ -107,6 +98,21 @@ def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         6,
     )
     return m.select("doc_id", quality.alias("quality"))
+
+
+@register(
+    "doc_quality_score",
+    oracle=f"""
+WITH {QUALITY_SQL_CTES}
+SELECT doc_id, quality FROM quality
+""",
+    doc="Quality score: length saturation + lexical diversity + stopword-"
+    "ratio proximity, rounded to 6dp so the score is engine-stable. The "
+    "standard cheap pre-LLM data filter shape.",
+    tags=("text",),
+)
+def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return quality_over(load(spark, sf_dir, "documents"))
 
 
 PSI_BATCH_MOD = 8  # batch = doc_id % MOD == MOD-1, the IVF/zorder split
@@ -218,25 +224,11 @@ def psi_from_counts(counts: DataFrame) -> DataFrame:
 
 def quality_buckets_over(docs: DataFrame) -> DataFrame:
     """(doc_id, bucket) over any documents frame — the one bucketing
-    definition (identical expressions to doc_quality_score + the
-    decile floor), shared by the batch face's scorer and the streaming
-    ledger's per-chunk segments."""
-    stop_list = ", ".join(f"'{s}'" for s in STOPWORDS)
-    m = docs.selectExpr(
+    definition (quality_over + the decile floor), shared by the batch
+    face's scorer and the streaming ledger's per-chunk segments."""
+    return quality_over(docs).select(
         "doc_id",
-        "size(split(lower(text), ' ')) AS n_tokens",
-        "size(array_distinct(split(lower(text), ' '))) / CAST(size(split(lower(text), ' ')) AS DOUBLE) AS distinct_ratio",
-        f"size(filter(split(lower(text), ' '), x -> x IN ({stop_list}))) / CAST(size(split(lower(text), ' ')) AS DOUBLE) AS stop_ratio",
-    )
-    quality = F.round(
-        0.4 * F.least(F.col("n_tokens") / 100.0, F.lit(1.0))
-        + 0.4 * F.col("distinct_ratio")
-        + 0.2 * (1.0 - F.abs(F.col("stop_ratio") - 0.4)),
-        6,
-    )
-    return m.select(
-        "doc_id",
-        F.least(F.lit(PSI_BUCKETS - 1), F.floor(quality * PSI_BUCKETS))
+        F.least(F.lit(PSI_BUCKETS - 1), F.floor(F.col("quality") * PSI_BUCKETS))
         .cast("long")
         .alias("bucket"),
     )
@@ -973,6 +965,34 @@ QUALIFY rk <= {BM25_TOP_K}
 """
 
 
+def term_ordered_sum():
+    """Aggregate: a group's per-term contributions `c` summed in sorted
+    term order, 6dp-rounded — fixed fold order, so both engines add the
+    same doubles in the same order."""
+    return F.round(
+        F.aggregate(
+            F.sort_array(F.collect_list(F.struct("term", "c"))),
+            F.lit(0.0),
+            lambda acc, x: acc + x["c"],
+        ),
+        6,
+    )
+
+
+def _bm25_ranked(terms: DataFrame, stats: DataFrame) -> DataFrame:
+    """Top-BM25_TOP_K ranking from per-(doc, term) rows carrying tf, df
+    and dl, and the one-row (avgdl, n_docs) `stats`: contributions fold
+    in sorted term order, 6dp-rounded; rk is assigned on the returned
+    rows only."""
+    contrib = terms.crossJoin(F.broadcast(stats)).select(
+        "doc_id", "term", F.expr(_BM25_CONTRIB).alias("c")
+    )
+    scored = contrib.groupBy("doc_id").agg(term_ordered_sum().alias("bm25"))
+    topk = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(BM25_TOP_K)
+    w = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
+    return topk.withColumn("rk", F.row_number().over(w))
+
+
 @register(
     "bm25_query_topk",
     oracle=_BM25_ORACLE,
@@ -991,8 +1011,6 @@ QUALIFY rk <= {BM25_TOP_K}
     tags=("text", "join"),
 )
 def bm25_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load(spark, sf_dir, "documents")
     dl = docs.select(
         "doc_id", F.size(F.split(F.lower("text"), " ")).cast("long").alias("dl")
@@ -1006,25 +1024,7 @@ def bm25_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("term").isin(*BM25_QUERY))
     tf = q.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df = q.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    contrib = (
-        tf.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "term", F.expr(_BM25_CONTRIB).alias("c"))
-    )
-    scored = contrib.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "c"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["c"],
-            ),
-            6,
-        ).alias("bm25")
-    )
-    topk = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(BM25_TOP_K)
-    w = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
-    return topk.withColumn("rk", F.row_number().over(w))
+    return _bm25_ranked(tf.join(F.broadcast(df), "term").join(dl, "doc_id"), stats)
 
 
 # ----------------------------------------------- materialized BM25 index
@@ -1165,9 +1165,22 @@ def bm25_query_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _probe_bm25_index(spark, ensure_bm25_index(spark, sf_dir))
 
 
-def _probe_bm25_index(spark: SparkSession, idx: str) -> DataFrame:
-    from pyspark.sql import Window
+def bm25_index_stats(spark: SparkSession, idx: str) -> DataFrame:
+    """The one-row (avgdl, n_docs) frame of a BM25 index. Stats rows are
+    exact integer sums, one per segment: aggregate them and derive
+    avgdl from the totals — bit-identical however the corpus was
+    segmented (the append-path contract)."""
+    return (
+        spark.read.parquet(os.path.join(idx, "stats"))
+        .agg(F.sum("sum_dl").alias("sum_dl"), F.sum("n_docs").alias("n_docs"))
+        .select(
+            (F.col("sum_dl").cast("double") / F.col("n_docs")).alias("avgdl"),
+            "n_docs",
+        )
+    )
 
+
+def _probe_bm25_index(spark: SparkSession, idx: str) -> DataFrame:
     # literal bucket ids: |query| values, computed with the same
     # xxhash64 the writer used, via a 1-row local frame
     buckets = sorted(
@@ -1190,35 +1203,8 @@ def _probe_bm25_index(spark: SparkSession, idx: str) -> DataFrame:
         .where(F.col("term").isin(*BM25_QUERY))
     )
     df = postings.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    # stats rows are exact integer sums, one per segment: aggregate
-    # them and derive avgdl from the totals — bit-identical however
-    # the corpus was segmented (the append-path contract)
-    stats = (
-        spark.read.parquet(os.path.join(idx, "stats"))
-        .agg(F.sum("sum_dl").alias("sum_dl"), F.sum("n_docs").alias("n_docs"))
-        .select(
-            (F.col("sum_dl").cast("double") / F.col("n_docs")).alias("avgdl"),
-            "n_docs",
-        )
-    )
-    contrib = (
-        postings.join(F.broadcast(df), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "term", F.expr(_BM25_CONTRIB).alias("c"))
-    )
-    scored = contrib.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "c"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["c"],
-            ),
-            6,
-        ).alias("bm25")
-    )
-    topk = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(BM25_TOP_K)
-    w = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
-    return topk.withColumn("rk", F.row_number().over(w))
+    stats = bm25_index_stats(spark, idx)
+    return _bm25_ranked(postings.join(F.broadcast(df), "term"), stats)
 
 
 @register(
@@ -1319,8 +1305,6 @@ LIMIT 50
     tags=("text", "tokens", "aggregate"),
 )
 def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     words = load(spark, sf_dir, "documents").select(
         F.explode(F.split(F.lower("text"), " ")).alias("w")
     )
@@ -1383,8 +1367,6 @@ FROM cum
     tags=("text", "eval", "quality"),
 )
 def score_auc_quality_vs_en(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     q = doc_quality_score(spark, sf_dir)
     lab = q.join(
         load(spark, sf_dir, "documents").select("doc_id", "lang"), "doc_id"
@@ -1440,8 +1422,6 @@ GROUP BY p.label_lang, p.guess_lang, t.label_n
     tags=("text", "langid", "eval"),
 )
 def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     pred = doc_langid(spark, sf_dir)
     cm = pred.groupBy("label_lang", "guess_lang").agg(
         F.count("*").cast("long").alias("n")
@@ -1541,8 +1521,6 @@ FROM c ORDER BY n DESC, tok ASC LIMIT 20
     tags=("text", "sketch", "approx", "eval"),
 )
 def heavy_hitters_mg_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
     est = mg_summary_over(docs)

@@ -224,58 +224,46 @@ def _chunk_cache_root() -> str:
     return root
 
 
-def ensure_replay_chunks(
-    spark: SparkSession,
-    sf_dir: str,
-    scratch_dir: str,
-    n_chunks: int = 8,
-    jitter_ms: int = 0,
-    late_every: int = 0,
-    dup_every: int = 0,
-    defer_tail_ms: int = 0,
-    with_event_type: bool = False,
-) -> str:
-    """write_replay_chunks, memoized per process (see block comment
-    above): the first call for a given (sf_dir, params) builds the
-    canonical chunk set from the parquet fixture; every call hardlinks
-    the chunk files into scratch_dir/chunks and returns that path, so
-    callers own a private directory they may append sentinels to."""
-    key = (
-        os.path.abspath(sf_dir),
-        n_chunks,
-        jitter_ms,
-        late_every,
-        dup_every,
-        defer_tail_ms,
-        with_event_type,
-    )
+def _memo_linked(scratch_dir: str, sub: str, key: tuple, build) -> str:
+    """The process-scoped memo (see block comment above): the first call
+    for `key` runs `build(fresh_dir)`, which writes the canonical files
+    and returns their directory; every call hardlinks those files into
+    scratch_dir/<sub> and returns that path."""
     canon = _CHUNK_CACHE.get(key)
     if canon is None or not os.path.isdir(canon):
         import uuid as _uuid
 
-        canon_parent = os.path.join(
+        fresh = os.path.join(
             _chunk_cache_root(), f"c{len(_CHUNK_CACHE)}-{_uuid.uuid4().hex[:6]}"
         )
-        os.makedirs(canon_parent, exist_ok=True)
-        canon = write_replay_chunks(
-            spark,
-            sf_dir,
-            canon_parent,
-            n_chunks=n_chunks,
-            jitter_ms=jitter_ms,
-            late_every=late_every,
-            dup_every=dup_every,
-            defer_tail_ms=defer_tail_ms,
-            with_event_type=with_event_type,
-        )
+        os.makedirs(fresh, exist_ok=True)
+        canon = build(fresh)
         _CHUNK_CACHE[key] = canon
-    out = os.path.join(scratch_dir, "chunks")
+    out = os.path.join(scratch_dir, sub)
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     for f in sorted(os.listdir(canon)):
-        if f.endswith(".parquet"):
-            os.link(os.path.join(canon, f), os.path.join(out, f))
+        path = os.path.join(canon, f)
+        if os.path.isfile(path):
+            os.link(path, os.path.join(out, f))
     return out
+
+
+def ensure_replay_chunks(
+    spark: SparkSession, sf_dir: str, scratch_dir: str, **writer_kw
+) -> str:
+    """write_replay_chunks(**writer_kw), memoized per process: the first
+    call for a given (sf_dir, writer_kw) builds the canonical chunk set
+    from the parquet fixture; every call hardlinks the chunk files into
+    scratch_dir/chunks and returns that path, so callers own a private
+    directory they may append sentinels to."""
+    key = ("replay", os.path.abspath(sf_dir), tuple(sorted(writer_kw.items())))
+    return _memo_linked(
+        scratch_dir,
+        "chunks",
+        key,
+        lambda canon: write_replay_chunks(spark, sf_dir, canon, **writer_kw),
+    )
 
 
 def ensure_arrival_chunks(
@@ -295,23 +283,12 @@ def ensure_arrival_chunks(
     scratch teardown never touches the canonical copy. Nothing
     persists past the process (same atexit teardown as the replay
     chunk cache)."""
-    canon = _CHUNK_CACHE.get(("arrivals", cache_key))
-    if canon is None or not os.path.isdir(canon):
-        import uuid as _uuid
 
-        canon = os.path.join(
-            _chunk_cache_root(), f"a-{_uuid.uuid4().hex[:6]}"
-        )
+    def canon_dir(canon: str) -> str:
         build(canon)
-        _CHUNK_CACHE[("arrivals", cache_key)] = canon
-    out = os.path.join(scratch_dir, "arrivals")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    for f in sorted(os.listdir(canon)):
-        path = os.path.join(canon, f)
-        if os.path.isfile(path):
-            os.link(path, os.path.join(out, f))
-    return out
+        return canon
+
+    return _memo_linked(scratch_dir, "arrivals", ("arrivals", cache_key), canon_dir)
 
 
 def max_chunk_t_us(chunks_dir: str) -> int:

@@ -264,46 +264,55 @@ def sorted_account_fold(
     )
 
 
-def running_sum_rows(keys, t_ms, amounts, threshold: float) -> list[tuple]:
-    """F5 fold body: per-key running sum; alert + reset when the sum
-    exceeds `threshold`."""
-    rows, cur, s = [], None, 0.0
-    for k, t, a in zip(keys, t_ms, amounts):
-        if k != cur:
-            cur, s = k, 0.0
-        s += a
+def running_sum_step(threshold: float, sums: dict, rows, _wm) -> tuple:
+    """F5 step: running sum per account; alert + reset when the sum
+    exceeds `threshold`. State: {account: running_sum}."""
+    out = []
+    for k, t, a in rows:
+        s = sums.get(k, 0.0) + a
         if s > threshold:
-            rows.append((int(k), int(t), s))
+            out.append((k, t, s))
             s = 0.0
-    return rows
+        sums[k] = s
+    return out, None
 
 
-def running_mean_rows(keys, t_ms, amounts, threshold: float) -> list[tuple]:
-    """F3 fold body: per-key running (sum, count); alert + reset when
-    the mean exceeds `threshold`."""
-    rows, cur, s, c = [], None, 0.0, 0
-    for k, t, a in zip(keys, t_ms, amounts):
-        if k != cur:
-            cur, s, c = k, 0.0, 0
+def running_mean_step(threshold: float, st: dict, rows, _wm) -> tuple:
+    """F3 step: running (sum, count) per account; alert + reset when the
+    mean exceeds `threshold`. State: {account: [sum, count]}."""
+    out = []
+    for k, t, a in rows:
+        s, c = st.get(k, (0.0, 0))
         s += a
         c += 1
         if s / c > threshold:
-            rows.append((int(k), int(t), s / c))
+            out.append((k, t, s / c))
             s, c = 0.0, 0
-    return rows
+        st[k] = [s, c]
+    return out, None
 
 
-def ewma_rows(keys, t_ms, amounts, alpha: float) -> list[tuple]:
-    """EWMA fold body, seeded with each key's first value:
-    ewma_1 = x_1; ewma_i = a*x_i + (1-a)*ewma_{i-1}. One row per event."""
-    rows, cur, prev = [], None, 0.0
-    for k, t, a in zip(keys, t_ms, amounts):
-        if k != cur:
-            cur, prev = k, float(a)
-        else:
-            prev = alpha * float(a) + (1 - alpha) * prev
-        rows.append((int(k), int(t), prev))
-    return rows
+def ewma_step(alpha: float, st: dict, rows, _wm) -> tuple:
+    """EWMA step, seeded with each account's first value:
+    ewma_1 = x_1; ewma_i = a*x_i + (1-a)*ewma_{i-1}. One row per event.
+    State: {account: ewma}."""
+    out = []
+    for k, t, a in rows:
+        prev = st.get(k)
+        prev = a if prev is None else alpha * a + (1 - alpha) * prev
+        st[k] = prev
+        out.append((k, t, prev))
+    return out, None
+
+
+def step_rows(step):
+    """Batch form of a streaming fold `step`: `sorted_account_fold` hands
+    it whole accounts, so each call starts from empty state."""
+
+    def fold_rows(keys, t_ms, amounts):
+        return step({}, zip(keys, t_ms, amounts), None)[0]
+
+    return fold_rows
 
 
 def capped_session_rows(keys, t_ms, _amounts, gap_ms: int, max_ms: int) -> list[tuple]:
@@ -332,13 +341,13 @@ def running_sum_alerts_batch(df: DataFrame, threshold: float) -> DataFrame:
     """F5: per-key running sum; alert + reset state when sum > threshold
     (reference: workspace/frauddetection/src/main/java/spendreport/FraudDetector.java:29-46).
     Batch fold over (event_time, event_id) order."""
-    return sorted_account_fold(df, partial(running_sum_rows, threshold=threshold))
+    return sorted_account_fold(df, step_rows(partial(running_sum_step, threshold)))
 
 
 def running_mean_alerts_batch(df: DataFrame, threshold: float) -> DataFrame:
     """F3: per-key running (sum, count); alert + reset when mean > threshold
     (reference: TumblingWindowWithTest/src/main/java/spendreport/FraudDetectorSliding.java:33-71)."""
-    return sorted_account_fold(df, partial(running_mean_rows, threshold=threshold))
+    return sorted_account_fold(df, step_rows(partial(running_mean_step, threshold)))
 
 
 def running_sum_alerts_stream(stream: DataFrame, threshold: float) -> DataFrame:
@@ -346,38 +355,24 @@ def running_sum_alerts_stream(stream: DataFrame, threshold: float) -> DataFrame:
     crossing, exactly like the reference's per-key ValueState
     (reference: workspace/frauddetection/src/main/java/spendreport/FraudDetector.java:29-46).
     State: {account: running_sum}."""
-
-    def step(sums, rows, _wm):
-        out = []
-        for k, t, a in rows:
-            s = sums.get(k, 0.0) + a
-            if s > threshold:
-                out.append((k, t, s))
-                s = 0.0
-            sums[k] = s
-        return out, None
-
-    return _keyed_fold(stream, step, ALERT_SCHEMA, ("account_id", "t_ms", "amount"))
+    return _keyed_fold(
+        stream,
+        partial(running_sum_step, threshold),
+        ALERT_SCHEMA,
+        ("account_id", "t_ms", "amount"),
+    )
 
 
 def running_mean_alerts_stream(stream: DataFrame, threshold: float) -> DataFrame:
     """Streaming F3: per-key (sum, count) state, alert + reset when the
     running mean crosses the threshold
     (reference: TumblingWindowWithTest/src/main/java/spendreport/FraudDetectorSliding.java:33-71)."""
-
-    def step(st, rows, _wm):
-        out = []
-        for k, t, a in rows:
-            s, c = st.get(k, (0.0, 0))
-            s += a
-            c += 1
-            if s / c > threshold:
-                out.append((k, t, s / c))
-                s, c = 0.0, 0
-            st[k] = [s, c]
-        return out, None
-
-    return _keyed_fold(stream, step, ALERT_SCHEMA, ("account_id", "t_ms", "amount"))
+    return _keyed_fold(
+        stream,
+        partial(running_mean_step, threshold),
+        ALERT_SCHEMA,
+        ("account_id", "t_ms", "amount"),
+    )
 
 
 # ---------------------------------------------------------------------- T3
@@ -660,17 +655,9 @@ def ewma_stream(stream: DataFrame, alpha: float = 0.2) -> DataFrame:
     the smallest possible adaptive-baseline detector state. Same
     (account_id, t_us, event_id) fold order as the batch form, so
     stream==batch is a direct row compare (differential-tested)."""
-
-    def step(st, rows, _wm):
-        out = []
-        for k, t, a in rows:
-            prev = st.get(k)
-            prev = a if prev is None else alpha * a + (1 - alpha) * prev
-            st[k] = prev
-            out.append((k, t, prev))
-        return out, None
-
-    return _keyed_fold(stream, step, EWMA_SCHEMA, ("account_id", "t_ms", "amount"))
+    return _keyed_fold(
+        stream, partial(ewma_step, alpha), EWMA_SCHEMA, ("account_id", "t_ms", "amount")
+    )
 
 
 RISING_SCHEMA = T.StructType(

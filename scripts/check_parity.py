@@ -25,66 +25,14 @@ Usage:
 
 from __future__ import annotations
 
-import math
 import os
 import sys
-import time
-
-import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from flink_fraud_detection_rocks_db_app_spark.fixtures import TABLES
 from flink_fraud_detection_rocks_db_app_spark.registry import all_queries
 from flink_fraud_detection_rocks_db_app_spark.session import get_spark
-
-REL_TOL = 1e-9
-
-
-def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
-
-
-def normalize(rows: list[tuple], colnames: list[str]) -> list[tuple]:
-    """Sort columns by name, then sort rows; floats kept as floats."""
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-
-    def key(v):
-        return (v is None, str(type(v)), str(v))
-
-    out = [tuple(r[i] for i in order) for r in rows]
-    return sorted(out, key=lambda r: tuple(key(v) for v in r))
-
-
-def values_match(a, b, exact: bool = False) -> bool:
-    if isinstance(a, float) or isinstance(b, float):
-        if a is None or b is None:
-            return a is b
-        fa, fb = float(a), float(b)
-        if exact:
-            # Driver-style: raw value equality, no tolerance. NaN==NaN
-            # so a NaN cell doesn't spuriously fail on both sides.
-            return fa == fb or (math.isnan(fa) and math.isnan(fb))
-        return math.isclose(fa, fb, rel_tol=REL_TOL, abs_tol=1e-12)
-    return a == b
-
-
-def compare(spark_rows, spark_cols, duck_rows, duck_cols,
-            exact: bool = False) -> str | None:
-    if len(spark_rows) != len(duck_rows):
-        return f"row count {len(spark_rows)} vs {len(duck_rows)}"
-    if sorted(c.lower() for c in spark_cols) != sorted(c.lower() for c in duck_cols):
-        return f"columns {sorted(spark_cols)} vs {sorted(duck_cols)}"
-    a = normalize(spark_rows, [c.lower() for c in spark_cols])
-    b = normalize(duck_rows, [c.lower() for c in duck_cols])
-    for i, (ra, rb) in enumerate(zip(a, b)):
-        for va, vb in zip(ra, rb):
-            if not values_match(va, vb, exact=exact):
-                return f"row {i}: {ra} vs {rb}"
-    return None
+from flink_fraud_detection_rocks_db_app_spark.testing import REL_TOL, parity_sweep
 
 
 def main() -> int:
@@ -108,26 +56,7 @@ def main() -> int:
         )
     else:
         spark = get_spark(cpus=16, shuffle_partitions=16)
-    con = duck_con(sf_dir)
-    failures = []
-    for name, spec in sorted(specs.items()):
-        t0 = time.time()
-        sdf = spec.fn(spark, sf_dir)
-        spark_rows = [tuple(r) for r in sdf.collect()]
-        spark_cols = sdf.columns
-        if spec.oracle is None:
-            print(f"  {name}: {len(spark_rows)} rows (rows-only, no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            continue
-        res = con.execute(spec.oracle)
-        duck_cols = [d[0] for d in res.description]
-        duck_rows = res.fetchall()
-        err = compare(spark_rows, spark_cols, duck_rows, duck_cols, exact=exact)
-        status = "OK " if err is None else "FAIL"
-        print(f"  {name}: {status} {len(spark_rows)} rows [{time.time()-t0:.1f}s]"
-              + (f" — {err}" if err else ""))
-        if err:
-            failures.append(name)
+    failures = parity_sweep(spark, sf_dir, dict(sorted(specs.items())), exact)
     mode = "exact" if exact else f"rel_tol={REL_TOL}"
     print(f"\n{len(specs) - len(failures)}/{len(specs)} queries match ({mode})")
     if failures:

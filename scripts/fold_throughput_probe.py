@@ -1,9 +1,9 @@
 """Sequential-Arrow-fold throughput probe (VERDICT r12 #6): measure
-the pure-Python rows/s of the four order-sensitive fold BODIES — the
+the pure-Python rows/s of the four order-sensitive fold bodies — the
 only operators left whose hot path runs the Python interpreter per
 row — so the 100 TB story for them is quantified, not asserted.
 
-What is measured: the production fold bodies (imported from
+What is measured: the production fold steps (imported from
 streaming/stateful.py) exactly as `sorted_account_fold` runs them —
 Python lists already sorted by (account, t_us, event_id), the per-row
 loop; the Arrow transfer and the output batch build are excluded (the
@@ -12,9 +12,9 @@ engine runs one fold per shuffle partition in parallel across
 executors, so cluster throughput = this number x cores until the scan
 outruns it.
 
-  F5 running sum   running_sum_rows      (registry threshold 500)
-  F3 running mean  running_mean_rows     (registry threshold 90)
-  EWMA             ewma_rows             (operators/stateful.EWMA_ALPHA)
+  F5 running sum   running_sum_step      (registry threshold 500)
+  F3 running mean  running_mean_step     (registry threshold 90)
+  EWMA             ewma_step             (operators/stateful.EWMA_ALPHA)
   session cap      capped_session_rows   (operators/stateful gap + cap)
 
 Usage: python scripts/fold_throughput_probe.py [sf_dir] [repeats]
@@ -27,6 +27,7 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 import duckdb
 
@@ -39,9 +40,10 @@ from flink_fraud_detection_rocks_db_app_spark.operators.stateful import (  # noq
 )
 from flink_fraud_detection_rocks_db_app_spark.streaming.stateful import (  # noqa: E402
     capped_session_rows,
-    ewma_rows,
-    running_mean_rows,
-    running_sum_rows,
+    ewma_step,
+    running_mean_step,
+    running_sum_step,
+    step_rows,
 )
 
 
@@ -65,24 +67,24 @@ def main() -> None:
     amounts = pdf["amount"].tolist()
 
     folds = {
-        "f5_running_sum": lambda: running_sum_rows(keys, t_ms, amounts, 500.0),
-        "f3_running_mean": lambda: running_mean_rows(keys, t_ms, amounts, 90.0),
-        "ewma": lambda: ewma_rows(keys, t_ms, amounts, EWMA_ALPHA),
-        "session_cap": lambda: capped_session_rows(
-            keys, t_ms, amounts, SESSION_CAP_GAP_MS, SESSION_CAP_MAX_MS
+        "f5_running_sum": step_rows(partial(running_sum_step, 500.0)),
+        "f3_running_mean": step_rows(partial(running_mean_step, 90.0)),
+        "ewma": step_rows(partial(ewma_step, EWMA_ALPHA)),
+        "session_cap": partial(
+            capped_session_rows, gap_ms=SESSION_CAP_GAP_MS, max_ms=SESSION_CAP_MAX_MS
         ),
     }
     report = {"sf_dir": sf_dir, "rows": n, "repeats": repeats, "rows_per_sec": {}}
-    for name, run in folds.items():
-        best = min(_timed(run) for _ in range(repeats))
+    for name, fold in folds.items():
+        best = min(_timed(fold, keys, t_ms, amounts) for _ in range(repeats))
         report["rows_per_sec"][name] = int(n / best)
         print(f"{name}: {n} rows in {best:.3f}s -> {int(n / best):,} rows/s", flush=True)
     print(json.dumps(report))
 
 
-def _timed(fn) -> float:
+def _timed(fn, *args) -> float:
     t0 = time.perf_counter()
-    fn()
+    fn(*args)
     return time.perf_counter() - t0
 
 

@@ -270,17 +270,13 @@ def _semdedup_append_fixed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     density; the production knob that flattens it is K ∝ corpus
     (cluster size constant), probed separately as semdedup_scaled_k.
     min-of-2 keeps the warm probe of the ensure_index asset."""
-    from flink_fraud_detection_rocks_db_app_spark.functions import dot
     from flink_fraud_detection_rocks_db_app_spark.operators.indexcache import (
         ensure_index,
     )
     from flink_fraud_detection_rocks_db_app_spark.operators.similarity import (
-        _kmeans_assign,
-        _scored_sides,
         _semdedup_batch_mask,
-        _semdedup_pair_losers,
-        _semdedup_score,
         _vectors,
+        semdedup_batch_losers,
         write_semdedup_index,
     )
 
@@ -290,8 +286,6 @@ def _semdedup_append_fixed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embeddings",
         lambda tmp: write_semdedup_index(spark, sf_dir, tmp),
     )
-    cents = spark.read.parquet(os.path.join(idx, "centroids"))
-    cnorm = cents.select("cell", "cv", F.sqrt(dot("cv", "cv")).alias("cn"))
     # the SAME 64 base-copy batch ids at every scale (copies shift ids
     # by >= the stride, so base ids stay below it)
     batch = (
@@ -301,24 +295,7 @@ def _semdedup_append_fixed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(64)
         .select("vec_id", "v")
     )
-    bscored = _semdedup_score(_kmeans_assign(batch, cents), cnorm).persist()
-    cells = sorted(r["cell"] for r in bscored.select("cell").distinct().collect())
-    existing = (
-        spark.read.parquet(os.path.join(idx, "scored"))
-        .withColumn("cell", F.col("cell").cast("long"))
-        .select("vec_id", "cell", "v", "nv", "cos_centroid")
-    )
-    cand = (
-        existing.where(F.col("cell").isin(cells))
-        .withColumn("is_new", F.lit(False))
-        .unionByName(bscored.withColumn("is_new", F.lit(True)))
-    )
-    a, b = _scored_sides(cand)
-    return _semdedup_pair_losers(
-        a.join(b, "cell")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(F.col("new_a") | F.col("new_b"))
-    )
+    return semdedup_batch_losers(batch, idx)[2]
 
 
 # probes that aren't registered queries: name -> (spark, sf_dir) -> DF

@@ -16,15 +16,13 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession
 
-from check_parity import compare, duck_con
 from flink_fraud_detection_rocks_db_app_spark.registry import DRIVER_WINDOW, all_queries
+from flink_fraud_detection_rocks_db_app_spark.testing import parity_sweep
 
 
 def main() -> int:
@@ -37,37 +35,15 @@ def main() -> int:
     else:
         sf_dir, names = "/root/testdata/sf0.01", args
     names = names or list(DRIVER_WINDOW)
+    specs = all_queries()
+    specs = {n: specs[n] for n in names}
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    con = duck_con(sf_dir)
-    specs = all_queries()
-    fails = []
-    for n in names:
-        t0 = time.time()
-        try:
-            spec = specs[n]
-            sdf = spec.fn(spark, sf_dir)
-            srows, scols = sdf.collect(), sdf.columns
-            if spec.oracle is None:
-                err = None if srows else "no oracle and zero rows"
-                tag = "OK (rows-only)" if err is None else f"FAIL {err}"
-            else:
-                cur = con.execute(spec.oracle)
-                err = compare(
-                    srows, scols, cur.fetchall(),
-                    [d[0] for d in cur.description], exact=True,
-                )
-                tag = "OK" if err is None else f"FAIL {err}"
-        except Exception as e:  # noqa: BLE001 — per-query record, never abort
-            err = f"EXC {e.__class__.__name__}: {str(e)[:150]}"
-            tag = f"FAIL {err}"
-        print(f"  {n}: {tag} [{time.time() - t0:.1f}s]", flush=True)
-        if err is not None:
-            fails.append(n)
-    print(f"{len(names) - len(fails)}/{len(names)} vanilla-session match")
+    fails = parity_sweep(spark, sf_dir, specs, exact=True)
+    print(f"{len(specs) - len(fails)}/{len(specs)} vanilla-session match")
     return 1 if fails else 0
 
 
