@@ -6,10 +6,11 @@ The reference's `Alert` is a payload-free marker object
 our alert rows carry (account_id, w_start, agg value) — strictly more
 informative, same trigger condition.
 
-Threshold gating rounds the aggregate to 6 decimals before comparing,
-so double summation-order differences between Spark and the DuckDB
-oracle cannot flip a row in or out of the result (documented tolerance;
-SURVEY §5 comparison rule).
+Threshold gating compares the aggregate rounded to 6 decimals, so
+double summation-order differences between Spark and the DuckDB oracle
+cannot flip a row in or out of the result (documented tolerance;
+SURVEY §5 comparison rule). The F2 rule itself is `jobs.alert_stream`,
+the same one the stream jobs apply.
 """
 
 from __future__ import annotations
@@ -19,7 +20,8 @@ from pyspark.sql import functions as F
 
 from ..fixtures import load, transactions
 from ..registry import register
-from .windows import MS, sliding, sql_slide, sql_tumble, tumbling
+from ..streaming.jobs import alert_stream, window_agg
+from .windows import sql_slide, sql_tumble, tumble_sum_3s
 
 # ------------------------------------------------------------- projections
 
@@ -96,8 +98,16 @@ def filter_amount_gt_100(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("alert", "parity"),
 )
 def alert_tumble_sum_3s_gt_10000(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = tumbling(transactions(spark, sf_dir), 3 * MS["s"], [F.round(F.sum("amount"), 6).alias("sum_amount")])
-    return agg.where(F.round("sum_amount", 6) > 10000)
+    return alert_stream(tumble_sum_3s(spark, sf_dir), 10000)
+
+
+def _daily_sum(spark: SparkSession, sf_dir: str, key: str | None = "account_id") -> DataFrame:
+    return window_agg(
+        transactions(spark, sf_dir),
+        F.window("event_time", "1 day"),
+        [F.round(F.sum("amount"), 6).alias("sum_amount")],
+        key,
+    )
 
 
 @register(
@@ -113,10 +123,7 @@ def alert_tumble_sum_3s_gt_10000(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("alert",),
 )
 def alert_global_daily_sum_gt_10000(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = tumbling(
-        transactions(spark, sf_dir), MS["d"], [F.round(F.sum("amount"), 6).alias("sum_amount")], key=None
-    )
-    return agg.where(F.round("sum_amount", 6) > 10000)
+    return alert_stream(_daily_sum(spark, sf_dir, key=None), 10000)
 
 
 @register(
@@ -129,8 +136,7 @@ def alert_global_daily_sum_gt_10000(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("alert",),
 )
 def alert_user_daily_sum_gt_300(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = tumbling(transactions(spark, sf_dir), MS["d"], [F.round(F.sum("amount"), 6).alias("sum_amount")])
-    return agg.where(F.round("sum_amount", 6) > 300)
+    return alert_stream(_daily_sum(spark, sf_dir), 300)
 
 
 # --------------------------------------------------- union + keyed max-by
@@ -165,12 +171,12 @@ QUALIFY row_number() OVER (
 )
 def union_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = transactions(spark, sf_dir)
-    a = sliding(df, 5 * MS["m"], MS["m"], [F.avg("amount").alias("mean_amount")]).withColumn(
-        "src", F.lit("slide")
-    )
-    b = tumbling(df, 5 * MS["m"], [F.avg("amount").alias("mean_amount")]).withColumn(
-        "src", F.lit("tumble")
-    )
+    a = window_agg(
+        df, F.window("event_time", "5 minutes", "1 minute"), [F.avg("amount").alias("mean_amount")]
+    ).withColumn("src", F.lit("slide"))
+    b = window_agg(
+        df, F.window("event_time", "5 minutes"), [F.avg("amount").alias("mean_amount")]
+    ).withColumn("src", F.lit("tumble"))
     u = a.unionByName(b).withColumn("mean_r", F.round("mean_amount", 6))
     w = Window.partitionBy("account_id").orderBy(
         F.desc("mean_r"), F.asc("w_start"), F.asc("src")

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..fixtures import load
 from ..registry import register
+from ..streaming.jobs import window_agg
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
@@ -501,6 +502,13 @@ TOPK_WINDOW_MS = 3_600_000
 TOPK_N = 3
 
 
+def _typed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_time, event_type) over the raw events."""
+    return load(spark, sf_dir, "events").select(
+        F.timestamp_micros(F.expr("ts div 1000")).alias("event_time"), "event_type"
+    )
+
+
 @register(
     "window_heavy_hitters_1h",
     oracle=f"""
@@ -530,18 +538,11 @@ WHERE rnk <= {TOPK_N}
 def window_heavy_hitters_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    counts = (
-        load(spark, sf_dir, "events")
-        .select(
-            F.timestamp_micros(F.expr("ts div 1000")).alias("event_time"),
-            "event_type",
-        )
-        .groupBy(
-            F.window("event_time", f"{TOPK_WINDOW_MS} milliseconds").alias("w"),
-            "event_type",
-        )
-        .agg(F.count("*").alias("n"))
-        .select(F.unix_millis(F.col("w.start")).alias("w_start"), "event_type", "n")
+    counts = window_agg(
+        _typed_events(spark, sf_dir),
+        F.window("event_time", f"{TOPK_WINDOW_MS} milliseconds"),
+        [F.count("*").alias("n")],
+        key="event_type",
     )
     rnk = F.row_number().over(
         W.partitionBy("w_start").orderBy(F.desc("n"), F.asc("event_type"))
@@ -568,17 +569,13 @@ def window_heavy_hitters_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_heavy_hitters_1h_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        load(spark, sf_dir, "events")
-        .select(
-            F.timestamp_micros(F.expr("ts div 1000")).alias("event_time"),
-            "event_type",
+        window_agg(
+            _typed_events(spark, sf_dir),
+            F.window("event_time", f"{TOPK_WINDOW_MS} milliseconds"),
+            [F.expr(f"approx_top_k(event_type, {TOPK_N})").alias("tk")],
+            key=None,
         )
-        .groupBy(F.window("event_time", f"{TOPK_WINDOW_MS} milliseconds").alias("w"))
-        .agg(F.expr(f"approx_top_k(event_type, {TOPK_N})").alias("tk"))
-        .select(
-            F.unix_millis(F.col("w.start")).alias("w_start"),
-            F.explode("tk").alias("e"),
-        )
+        .select("w_start", F.explode("tk").alias("e"))
         .select(
             "w_start",
             F.col("e.item").alias("event_type"),

@@ -956,14 +956,23 @@ def semdedup_over(e: DataFrame, k: int, tau: float) -> DataFrame:
     # final assignment argmin'd against — the oracle joins the same pair
     cnorm = cents.select("cell", "cv", F.sqrt(dot("cv", "cv")).alias("cn"))
     # `scored` (which embeds the whole Lloyd loop) feeds BOTH sides of
-    # the pair join AND the final keep/drop join — persist so the loop
-    # runs once, not three times (at corpus scale this is the cached
-    # cluster-assignment asset every SemDeDup stage shares)
-    scored = _semdedup_score(assigned, cnorm).persist()
+    # the pair join AND the final keep/drop join — materialize it so the
+    # loop runs once, not three times (at corpus scale this is the
+    # cluster-assignment asset every SemDeDup stage shares). A local
+    # checkpoint, not persist(): its blocks live as long as the returned
+    # frame, where a persisted plan stays in the session's cache.
+    scored = _semdedup_score(assigned, cnorm).localCheckpoint(eager=True)
     a, b = _scored_sides(scored)
     losers = _semdedup_pair_losers(
         a.join(b, "cell").where(F.col("id_a") < F.col("id_b")), tau
-    ).withColumn("_drop", F.lit(1))
+    )
+    return _verdict(scored, losers)
+
+
+def _verdict(scored: DataFrame, losers: DataFrame) -> DataFrame:
+    """(vec_id, cluster, cos_centroid, kept): a scored vector is kept
+    iff its vec_id is not among the `losers`."""
+    losers = losers.withColumn("_drop", F.lit(1))
     return scored.join(F.broadcast(losers), "vec_id", "left").select(
         "vec_id",
         F.col("cell").alias("cluster"),
@@ -1371,14 +1380,16 @@ def semdedup_batch_losers(
     """Judge a new-vector batch (vec_id, v) against a SemDeDup asset:
     score it under the FROZEN quantizer and pair it against the touched
     cells' current members plus itself. Returns (the batch's scored
-    rows, persisted — the caller unpersists; the asset's scored rows;
-    the new losers)."""
+    rows, locally checkpointed so every reader shares one scoring pass;
+    the asset's scored rows; the new losers)."""
     import os
 
     spark = vectors.sparkSession
     cents = spark.read.parquet(os.path.join(index_path, "centroids"))
     cnorm = cents.select("cell", "cv", F.sqrt(dot("cv", "cv")).alias("cn"))
-    bscored = _semdedup_score(_kmeans_assign(vectors, cents), cnorm).persist()
+    bscored = _semdedup_score(_kmeans_assign(vectors, cents), cnorm).localCheckpoint(
+        eager=True
+    )
     # bounded collect (<= K cells) that ENABLES partition pruning on the
     # scored asset — same contract as the IVF / BM25 index probes
     cells = sorted(r["cell"] for r in bscored.select("cell").distinct().collect())
@@ -1434,7 +1445,6 @@ def append_to_semdedup_index(vectors: DataFrame, index_path: str) -> None:
     bscored, _existing, new_losers = semdedup_batch_losers(vectors, index_path)
     new_losers.write.mode("append").parquet(os.path.join(index_path, "losers"))
     bscored.write.mode("append").partitionBy("cell").parquet(scored_dir)
-    bscored.unpersist()
 
 
 def semdedup_verdict_from_index(spark: SparkSession, index_path: str) -> DataFrame:
@@ -1448,17 +1458,7 @@ def semdedup_verdict_from_index(spark: SparkSession, index_path: str) -> DataFra
         .withColumn("cell", F.col("cell").cast("long"))
         .select("vec_id", "cell", "cos_centroid")
     )
-    losers = (
-        spark.read.parquet(os.path.join(index_path, "losers"))
-        .distinct()
-        .withColumn("_drop", F.lit(1))
-    )
-    return scored.join(F.broadcast(losers), "vec_id", "left").select(
-        "vec_id",
-        F.col("cell").alias("cluster"),
-        "cos_centroid",
-        F.col("_drop").isNull().alias("kept"),
-    )
+    return _verdict(scored, spark.read.parquet(os.path.join(index_path, "losers")).distinct())
 
 
 def _semdedup_incr_oracle() -> str:
@@ -1512,21 +1512,9 @@ def semdedup_incremental_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.where(_semdedup_batch_mask()), idx
     )
     all_losers = (
-        spark.read.parquet(os.path.join(idx, "losers"))
-        .unionByName(new_losers)
-        .distinct()
-        .withColumn("_drop", F.lit(1))
+        spark.read.parquet(os.path.join(idx, "losers")).unionByName(new_losers).distinct()
     )
-    return (
-        existing.unionByName(bscored)
-        .join(F.broadcast(all_losers), "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("cell").alias("cluster"),
-            "cos_centroid",
-            F.col("_drop").isNull().alias("kept"),
-        )
-    )
+    return _verdict(existing.unionByName(bscored), all_losers)
 
 
 _LSH_RECALL_ORACLE = recall_oracle(_lsh_oracle_sql())

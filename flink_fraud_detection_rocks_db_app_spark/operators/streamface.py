@@ -83,10 +83,11 @@ from ..streaming import (
 )
 from ..streaming.replay import ensure_arrival_chunks
 from ..streaming.rollup import (
+    daily_rollup_stream,
+    daily_users_sketch_stream,
     read_rollup,
     read_sketch_rollup,
-    run_continuous_rollup,
-    run_users_sketch_rollup,
+    run_rollup,
 )
 from ..streaming.stateful import pattern_rising_stream
 from .asof import ASOF_ORACLE, INTERVAL_JOIN_ORACLE, orders_asof_flat
@@ -754,9 +755,9 @@ def stream_continuous_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFra
         chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
         table_dir = os.path.join(scratch, "rollup")
         with replay_state_confs(spark):
-            run_continuous_rollup(
+            run_rollup(
                 spark,
-                read_replay_stream(spark, chunks),
+                daily_rollup_stream(read_replay_stream(spark, chunks)),
                 table_dir,
                 os.path.join(scratch, "ckpt"),
             )
@@ -798,11 +799,12 @@ def stream_users_sketch_rollup_replay(spark: SparkSession, sf_dir: str) -> DataF
         chunks = ensure_replay_chunks(spark, sf_dir, scratch, n_chunks=6)
         table_dir = os.path.join(scratch, "sketches")
         with replay_state_confs(spark):
-            run_users_sketch_rollup(
+            run_rollup(
                 spark,
-                read_replay_stream(spark, chunks),
+                daily_users_sketch_stream(read_replay_stream(spark, chunks)),
                 table_dir,
                 os.path.join(scratch, "ckpt"),
+                keys=("day",),
             )
         est = read_sketch_rollup(spark, table_dir).select(
             F.col("day").alias("day_no"),

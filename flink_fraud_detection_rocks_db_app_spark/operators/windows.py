@@ -6,13 +6,16 @@ over — a record-buffer strategy and a pane-slicing strategy
 master/src/main/java/InorderTumblingWindow/CustomSlidingWindow.java:25-147) —
 plus Flink built-in assigners used as test oracles. In Spark all of
 them are the single declarative `F.window()` / `F.session_window()`
-expression: Catalyst plans the partial/final aggregation split that the
-reference hand-codes as `AggregateFunction.merge`, and the sliding
-"pane sharing" optimization becomes Spark's Expand + partial-agg
-pipeline (see plans/ notes and SURVEY §4).
+expression, passed to one builder, `streaming.jobs.window_agg`, which
+the stream jobs and rollups call too. Catalyst plans the partial/final
+aggregation split that the reference hand-codes as
+`AggregateFunction.merge`, and the sliding "pane sharing" optimization
+becomes Spark's Expand + partial-agg pipeline (see plans/ notes and
+SURVEY §4).
 
 Window-start convention: epoch-ms BIGINT `w_start` on both engines —
-Spark `unix_millis(window.start)`, DuckDB `(epoch_ms(ts)//size)*size`.
+Spark `unix_millis(window.start)` (in `window_agg`), DuckDB
+`(epoch_ms(ts)//size)*size`.
 Both floor the raw parquet nanosecond timestamps, and Spark's window
 alignment is epoch-based with fixed-width intervals, so the arithmetic
 is bit-identical.
@@ -34,59 +37,9 @@ from pyspark.sql import functions as F
 
 from ..fixtures import transactions
 from ..registry import register
+from ..streaming.jobs import window_agg
 
 MS = {"s": 1_000, "m": 60_000, "h": 3_600_000, "d": 86_400_000}
-
-
-def _dur(ms: int) -> str:
-    """Milliseconds -> Spark interval string."""
-    return f"{ms} milliseconds"
-
-
-def tumbling(
-    df: DataFrame,
-    size_ms: int,
-    aggs: list,
-    key: str | None = "account_id",
-    time_col: str = "event_time",
-) -> DataFrame:
-    """Keyed (or global) tumbling window aggregate.
-
-    Parity: CustomTumblingWindow assigns [ts - ts % size, +size)
-    (reference: master/src/main/java/InorderTumblingWindow/CustomTumblingWindow.java:41-43)
-    which is exactly Spark's epoch-aligned window().
-    """
-    keys = [F.window(time_col, _dur(size_ms)).alias("w")]
-    if key:
-        keys.append(F.col(key))
-    out = df.groupBy(*keys).agg(*aggs)
-    cols = [F.unix_millis(F.col("w.start")).alias("w_start")]
-    if key:
-        cols.append(F.col(key))
-    return out.select(*cols, *[c for c in out.columns if c not in ("w", key)])
-
-
-def sliding(
-    df: DataFrame,
-    size_ms: int,
-    slide_ms: int,
-    aggs: list,
-    key: str | None = "account_id",
-    time_col: str = "event_time",
-) -> DataFrame:
-    """Keyed (or global) sliding window aggregate.
-
-    Parity: CustomSlidingWindow assigns the set of windows covering an
-    element (reference: master/src/main/java/InorderTumblingWindow/CustomSlidingWindow.java:33-46).
-    """
-    keys = [F.window(time_col, _dur(size_ms), _dur(slide_ms)).alias("w")]
-    if key:
-        keys.append(F.col(key))
-    out = df.groupBy(*keys).agg(*aggs)
-    cols = [F.unix_millis(F.col("w.start")).alias("w_start")]
-    if key:
-        cols.append(F.col(key))
-    return out.select(*cols, *[c for c in out.columns if c not in ("w", key)])
 
 
 # ---------------------------------------------------------------- SQL helpers
@@ -97,14 +50,12 @@ def sql_tumble(
     agg_sql: str,
     key: bool = True,
     having: str | None = None,
-    where: str | None = None,
 ) -> str:
     key_sel = "user_id AS account_id, " if key else ""
     group = "GROUP BY 1, 2" if key else "GROUP BY 1"
     return (
         f"SELECT (epoch_ms(ts) // {size_ms}) * {size_ms} AS w_start, {key_sel}{agg_sql} "
-        f"FROM events {f'WHERE {where} ' if where else ''}{group}"
-        f"{f' HAVING {having}' if having else ''}"
+        f"FROM events {group}{f' HAVING {having}' if having else ''}"
     )
 
 
@@ -113,7 +64,6 @@ def sql_slide(
     slide_ms: int,
     agg_sql: str,
     key: bool = True,
-    having: str | None = None,
 ) -> str:
     """Sliding windows via explicit window-start enumeration.
 
@@ -132,7 +82,7 @@ c AS (
   FROM e CROSS JOIN (SELECT unnest(range({nwin})) AS i)
   WHERE (tms // {slide_ms}) * {slide_ms} - i * {slide_ms} > tms - {size_ms}
 )
-SELECT w_start, {key_sel}{agg_sql} FROM c {group}{f" HAVING {having}" if having else ""}
+SELECT w_start, {key_sel}{agg_sql} FROM c {group}
 """
 
 
@@ -148,7 +98,11 @@ SELECT w_start, {key_sel}{agg_sql} FROM c {group}{f" HAVING {having}" if having 
     tags=("window", "tumbling", "parity"),
 )
 def tumble_sum_3s(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling(transactions(spark, sf_dir), 3 * MS["s"], [F.round(F.sum("amount"), 6).alias("sum_amount")])
+    return window_agg(
+        transactions(spark, sf_dir),
+        F.window("event_time", "3 seconds"),
+        [F.round(F.sum("amount"), 6).alias("sum_amount")],
+    )
 
 
 @register(
@@ -159,7 +113,11 @@ def tumble_sum_3s(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "tumbling", "parity"),
 )
 def tumble_sum_5s(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling(transactions(spark, sf_dir), 5 * MS["s"], [F.round(F.sum("amount"), 6).alias("sum_amount")])
+    return window_agg(
+        transactions(spark, sf_dir),
+        F.window("event_time", "5 seconds"),
+        [F.round(F.sum("amount"), 6).alias("sum_amount")],
+    )
 
 
 @register(
@@ -170,7 +128,11 @@ def tumble_sum_5s(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "tumbling", "parity"),
 )
 def tumble_sum_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling(transactions(spark, sf_dir), 5 * MS["m"], [F.round(F.sum("amount"), 6).alias("sum_amount")])
+    return window_agg(
+        transactions(spark, sf_dir),
+        F.window("event_time", "5 minutes"),
+        [F.round(F.sum("amount"), 6).alias("sum_amount")],
+    )
 
 
 @register(
@@ -181,9 +143,9 @@ def tumble_sum_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "tumbling", "parity"),
 )
 def tumble_mean_3s(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling(
+    return window_agg(
         transactions(spark, sf_dir),
-        3 * MS["s"],
+        F.window("event_time", "3 seconds"),
         [F.round(F.avg("amount"), 6).alias("mean_amount"), F.count("*").alias("n_events")],
     )
 
@@ -200,9 +162,9 @@ def tumble_mean_3s(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "tumbling"),
 )
 def tumble_stats_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling(
+    return window_agg(
         transactions(spark, sf_dir),
-        MS["h"],
+        F.window("event_time", "1 hour"),
         [
             F.round(F.sum("amount"), 6).alias("sum_amount"),
             F.round(F.avg("amount"), 6).alias("mean_amount"),
@@ -224,8 +186,10 @@ def tumble_stats_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "sliding", "parity"),
 )
 def slide_mean_50s_10s(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sliding(
-        transactions(spark, sf_dir), 50 * MS["s"], 10 * MS["s"], [F.round(F.avg("amount"), 6).alias("mean_amount")]
+    return window_agg(
+        transactions(spark, sf_dir),
+        F.window("event_time", "50 seconds", "10 seconds"),
+        [F.round(F.avg("amount"), 6).alias("mean_amount")],
     )
 
 
@@ -237,8 +201,10 @@ def slide_mean_50s_10s(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "sliding", "parity"),
 )
 def slide_sum_5m_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sliding(
-        transactions(spark, sf_dir), 5 * MS["m"], MS["m"], [F.round(F.sum("amount"), 6).alias("sum_amount")]
+    return window_agg(
+        transactions(spark, sf_dir),
+        F.window("event_time", "5 minutes", "1 minute"),
+        [F.round(F.sum("amount"), 6).alias("sum_amount")],
     )
 
 
@@ -250,8 +216,11 @@ def slide_sum_5m_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "sliding", "global", "parity"),
 )
 def global_slide_mean_5m_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sliding(
-        transactions(spark, sf_dir), 5 * MS["m"], MS["m"], [F.round(F.avg("amount"), 6).alias("mean_amount")], key=None
+    return window_agg(
+        transactions(spark, sf_dir),
+        F.window("event_time", "5 minutes", "1 minute"),
+        [F.round(F.avg("amount"), 6).alias("mean_amount")],
+        key=None,
     )
 
 
@@ -328,15 +297,10 @@ FROM s {group}
     tags=("window", "session"),
 )
 def session_sum_user_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = transactions(spark, sf_dir)
-    out = df.groupBy(
-        F.session_window("event_time", "6 hours").alias("w"), F.col("account_id")
-    ).agg(F.round(F.sum("amount"), 6).alias("sum_amount"), F.count("*").alias("n_events"))
-    return out.select(
-        F.unix_millis(F.col("w.start")).alias("w_start"),
-        "account_id",
-        "sum_amount",
-        "n_events",
+    return window_agg(
+        transactions(spark, sf_dir),
+        F.session_window("event_time", "6 hours"),
+        [F.round(F.sum("amount"), 6).alias("sum_amount"), F.count("*").alias("n_events")],
     )
 
 
@@ -347,13 +311,13 @@ def session_sum_user_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "session", "global"),
 )
 def session_sum_global_10m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = transactions(spark, sf_dir).withColumn("g", F.lit(1))
-    out = df.groupBy(F.session_window("event_time", "10 minutes").alias("w"), "g").agg(
-        F.round(F.sum("amount"), 6).alias("sum_amount"), F.count("*").alias("n_events")
-    )
-    return out.select(
-        F.unix_millis(F.col("w.start")).alias("w_start"), "sum_amount", "n_events"
-    )
+    # a constant key `g`, not key=None, which plans an unkeyed session Aggregate
+    return window_agg(
+        transactions(spark, sf_dir).withColumn("g", F.lit(1)),
+        F.session_window("event_time", "10 minutes"),
+        [F.round(F.sum("amount"), 6).alias("sum_amount"), F.count("*").alias("n_events")],
+        key="g",
+    ).drop("g")
 
 
 # --------------------------------------------- windowed distinct counting
@@ -369,9 +333,9 @@ def session_sum_global_10m(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "tumbling", "distinct"),
 )
 def tumble_distinct_users_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling(
+    return window_agg(
         transactions(spark, sf_dir),
-        MS["h"],
+        F.window("event_time", "1 hour"),
         [F.countDistinct("account_id").alias("n_users")],
         key=None,
     )
@@ -389,9 +353,9 @@ def tumble_approx_distinct_users_1h(spark: SparkSession, sf_dir: str) -> DataFra
     numeric check on the raw estimates. Scale story unchanged: HLL
     partials are mergeable, so the shuffle moves O(windows) sketches,
     never O(rows) expanded values."""
-    return tumbling(
+    return window_agg(
         transactions(spark, sf_dir),
-        MS["h"],
+        F.window("event_time", "1 hour"),
         [F.approx_count_distinct("account_id", rsd=0.02).alias("n_users_approx")],
         key=None,
     )
@@ -427,9 +391,9 @@ def tumble_approx_distinct_users_bounded(spark: SparkSession, sf_dir: str) -> Da
     deduped = (
         transactions(spark, sf_dir)
         .select(
-            F.unix_millis(
-                F.window("event_time", _dur(MS["h"])).getField("start")
-            ).alias("w_start"),
+            F.unix_millis(F.window("event_time", "1 hour").getField("start")).alias(
+                "w_start"
+            ),
             "account_id",
         )
         .distinct()
@@ -475,9 +439,9 @@ def tumble_approx_distinct_users_bounded(spark: SparkSession, sf_dir: str) -> Da
     tags=("window", "tumbling", "holistic"),
 )
 def tumble_median_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling(
+    return window_agg(
         transactions(spark, sf_dir),
-        MS["h"],
+        F.window("event_time", "1 hour"),
         [
             F.expr("percentile(amount, 0.5)").alias("median_amount"),
             F.count("*").alias("n_events"),
@@ -502,9 +466,9 @@ def tumble_median_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "tumbling", "holistic", "approx"),
 )
 def tumble_approx_median_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling(
+    return window_agg(
         transactions(spark, sf_dir),
-        MS["h"],
+        F.window("event_time", "1 hour"),
         [
             F.expr("approx_percentile(amount, 0.5, 10000)").alias("median_amount_approx"),
             F.count("*").alias("n_events"),
@@ -525,10 +489,9 @@ def tumble_approx_median_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "sliding", "holistic"),
 )
 def slide_median_5m_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sliding(
+    return window_agg(
         transactions(spark, sf_dir),
-        5 * MS["m"],
-        MS["m"],
+        F.window("event_time", "5 minutes", "1 minute"),
         [F.expr("percentile(amount, 0.5)").alias("median_amount")],
     )
 
@@ -554,9 +517,9 @@ def slide_median_5m_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "tumbling", "holistic", "approx"),
 )
 def tumble_approx_median_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = tumbling(
+    df = window_agg(
         transactions(spark, sf_dir),
-        MS["h"],
+        F.window("event_time", "1 hour"),
         [
             F.expr("percentile(amount, 0.5)").alias("median_amount"),
             F.count("*").alias("n_events"),

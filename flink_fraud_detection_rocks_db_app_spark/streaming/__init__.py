@@ -11,6 +11,7 @@ from .jobs import (  # noqa: F401
     paned_sliding_stream,
     session_agg_stream,
     sliding_sum_stream,
+    window_agg,
     windowed_agg_stream,
 )
 from .listener import JobMetrics, MetricsListener  # noqa: F401
@@ -18,7 +19,7 @@ from .rollup import (  # noqa: F401
     continuous_rollup_sink,
     daily_rollup_stream,
     read_rollup,
-    run_continuous_rollup,
+    run_rollup,
 )
 from .replay import (  # noqa: F401
     REPLAY_STATE_PARTITIONS,

@@ -1,6 +1,15 @@
 """Declarative Structured Streaming jobs mirroring the reference's
 entry points (EP1/EP2 shapes), plus watermark wiring.
 
+`window_agg` is the one event-time window aggregate: group by a
+`F.window`/`F.session_window` column (and a key), aggregate, and emit
+the window start as epoch-ms BIGINT `w_start` (registry convention).
+The batch window queries (`operators/windows.py`, `detectors.py`,
+`olap.py`), the stream jobs below and the daily rollups
+(`rollup.py`) all call it. One query serves batch and stream
+unchanged: Spark drops `withWatermark` from a batch plan, so a stream
+job's output equals its batch twin's by a direct DataFrame compare.
+
 Watermark parity (SURVEY §1.4):
 - in-order: AscendingTimestampExtractor == `withWatermark(_, "0 seconds")`
   (reference: master/src/main/java/InorderTumblingWindow/FraudDetectionJob.java:52-58)
@@ -15,11 +24,43 @@ compare final results, not emission timing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 IN_ORDER = "0 seconds"
 OUT_OF_ORDER_5S = "5 seconds"
+
+
+def window_agg(
+    df: DataFrame,
+    win: Column,
+    aggs: list,
+    key: str | None = "account_id",
+    watermark: str | None = None,
+) -> DataFrame:
+    """Event-time window aggregate: optional watermark on `event_time`
+    -> group by the window column `win` (`F.window` or
+    `F.session_window`) and `key` -> `aggs`. Emits `w_start`
+    (epoch-ms BIGINT window start), then `key`, then the aggregates.
+
+    Parity: CustomTumblingWindow assigns [ts - ts % size, +size) and
+    CustomSlidingWindow the set of windows covering an element
+    (reference: master/src/main/java/InorderTumblingWindow/CustomTumblingWindow.java:41-43,
+    master/src/main/java/InorderTumblingWindow/CustomSlidingWindow.java:33-46),
+    which is exactly Spark's epoch-aligned window().
+
+    `watermark=None` means no watermark is declared: a batch input, or
+    a stream ALREADY watermarked upstream (e.g. by
+    dropDuplicatesWithinWatermark or a pane aggregate); re-declaring it
+    between chained stateful operators is disallowed."""
+    src = df if watermark is None else df.withWatermark("event_time", watermark)
+    keys = [F.col(key)] if key else []
+    out = src.groupBy(win.alias("w"), *keys).agg(*aggs)
+    return out.select(
+        F.unix_millis(F.col("w.start")).alias("w_start"),
+        *keys,
+        *[c for c in out.columns if c not in ("w", key)],
+    )
 
 
 def windowed_agg_stream(
@@ -30,27 +71,16 @@ def windowed_agg_stream(
     key: str | None = "account_id",
     aggs: list | None = None,
 ) -> DataFrame:
-    """EP1/EP2 streaming shape: watermark -> keyed event-time window ->
-    aggregate. Output columns match the batch `windows.tumbling/sliding`
-    builders so stream==batch equality is a direct DataFrame compare.
-
-    `watermark=None` means the input is ALREADY watermarked (e.g. by an
-    upstream stateful operator like dropDuplicatesWithinWatermark);
-    re-declaring it between chained stateful operators is disallowed."""
-    if aggs is None:
-        aggs = [F.sum("amount").alias("sum_amount")]
-    win = (
-        F.window("event_time", f"{size_ms} milliseconds")
-        if slide_ms is None
-        else F.window("event_time", f"{size_ms} milliseconds", f"{slide_ms} milliseconds")
+    """EP1/EP2 streaming shape: watermark -> keyed tumbling (or, with
+    `slide_ms`, sliding) event-time window -> aggregate (default
+    `sum_amount`)."""
+    return window_agg(
+        stream,
+        F.window("event_time", f"{size_ms} milliseconds", slide_ms and f"{slide_ms} milliseconds"),
+        aggs or [F.sum("amount").alias("sum_amount")],
+        key,
+        watermark,
     )
-    keys = [win.alias("w")] + ([F.col(key)] if key else [])
-    src = stream if watermark is None else stream.withWatermark("event_time", watermark)
-    out = src.groupBy(*keys).agg(*aggs)
-    cols = [F.unix_millis(F.col("w.start")).alias("w_start")]
-    if key:
-        cols.append(F.col(key))
-    return out.select(*cols, *[c for c in out.columns if c not in ("w", key)])
 
 
 def paned_sliding_stream(
@@ -95,16 +125,12 @@ def paned_sliding_stream(
         .groupBy(*keys)
         .agg(F.sum("amount").alias("pane_sum"))
     )
-    outer_keys = [
-        F.window(
-            F.window_time("p"), f"{size_ms} milliseconds", f"{slide_ms} milliseconds"
-        ).alias("w")
-    ] + ([F.col(key)] if key else [])
-    out = panes.groupBy(*outer_keys).agg(F.sum("pane_sum").alias("sum_amount"))
-    cols = [F.unix_millis(F.col("w.start")).alias("w_start")]
-    if key:
-        cols.append(F.col(key))
-    return out.select(*cols, "sum_amount")
+    return window_agg(
+        panes,
+        F.window(F.window_time("p"), f"{size_ms} milliseconds", f"{slide_ms} milliseconds"),
+        [F.sum("pane_sum").alias("sum_amount")],
+        key,
+    )
 
 
 # Measured paned-vs-naive crossover (SCALE.md "Per-family shuffle
@@ -172,10 +198,11 @@ def choose_sliding_mode(
     return "paned" if dense else "naive"
 
 
-def alert_stream(agg_stream: DataFrame, threshold: float, value_col: str = "sum_amount") -> DataFrame:
-    """F2: stateless threshold on the windowed aggregate -> alerts
-    (reference: master/src/main/java/InorderTumblingWindow/FraudDetector2.java:14-31)."""
-    return agg_stream.where(F.col(value_col) > threshold)
+def alert_stream(agg_stream: DataFrame, threshold: float) -> DataFrame:
+    """F2: stateless threshold on the windowed `sum_amount` -> alerts
+    (reference: master/src/main/java/InorderTumblingWindow/FraudDetector2.java:14-31).
+    The batch alert detectors apply the same rule."""
+    return agg_stream.where(F.col("sum_amount") > threshold)
 
 
 def session_agg_stream(
@@ -185,22 +212,18 @@ def session_agg_stream(
     key: str | None = "account_id",
 ) -> DataFrame:
     """Streaming session windows: watermark -> session_window(gap) ->
-    aggregate. Sessions MERGE as events arrive (Spark keeps per-key
+    sum and count. Sessions MERGE as events arrive (Spark keeps per-key
     open sessions in the state store and the watermark closes them) —
     the merging-window capability the reference's custom trigger
-    machinery was built toward, as one declarative operator. Output
-    columns match the batch `session_sum_*` builders so stream==batch
-    equality is a direct compare.
+    machinery was built toward, as one declarative operator.
     """
-    win = F.session_window("event_time", f"{gap_ms} milliseconds")
-    keys = [win.alias("w")] + ([F.col(key)] if key else [])
-    out = stream.withWatermark("event_time", watermark).groupBy(*keys).agg(
-        F.sum("amount").alias("sum_amount"), F.count("*").alias("n_events")
+    return window_agg(
+        stream,
+        F.session_window("event_time", f"{gap_ms} milliseconds"),
+        [F.sum("amount").alias("sum_amount"), F.count("*").alias("n_events")],
+        key,
+        watermark,
     )
-    cols = [F.unix_millis(F.col("w.start")).alias("w_start")]
-    if key:
-        cols.append(F.col(key))
-    return out.select(*cols, "sum_amount", "n_events")
 
 
 def chained_windows_stream(

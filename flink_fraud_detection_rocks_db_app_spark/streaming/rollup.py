@@ -39,25 +39,23 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .jobs import IN_ORDER, window_agg
+
 DAY_MS = 86_400_000
 
 
-def daily_rollup_stream(stream: DataFrame, watermark: str = "0 seconds") -> DataFrame:
+def daily_rollup_stream(stream: DataFrame) -> DataFrame:
     """Per-(day, account) running sum/count in update mode — the
     continuous-aggregate query itself (event-time tumbling day)."""
-    out = (
-        stream.withWatermark("event_time", watermark)
-        .groupBy(
-            F.window("event_time", f"{DAY_MS} milliseconds").alias("w"),
-            "account_id",
-        )
-        .agg(F.sum("amount").alias("sum_amount"), F.count("*").alias("n_events"))
-    )
-    return out.select(
-        (F.unix_millis(F.col("w.start")) / F.lit(DAY_MS)).cast("long").alias("day"),
-        "account_id",
-        "sum_amount",
-        "n_events",
+    return _daily(stream, [F.sum("amount").alias("sum_amount"), F.count("*").alias("n_events")])
+
+
+def _daily(stream: DataFrame, aggs: list, key: str | None = "account_id") -> DataFrame:
+    """In-order tumbling-day `window_agg`, its `w_start` replaced by the
+    day number `day`."""
+    agg = window_agg(stream, F.window("event_time", f"{DAY_MS} milliseconds"), aggs, key, IN_ORDER)
+    return agg.select(
+        (F.col("w_start") / F.lit(DAY_MS)).cast("long").alias("day"), *agg.columns[1:]
     )
 
 
@@ -112,20 +110,22 @@ def continuous_rollup_sink(
     return merge
 
 
-def run_continuous_rollup(
+def run_rollup(
     spark: SparkSession,
-    stream: DataFrame,
+    rollup: DataFrame,
     table_dir: str,
     checkpoint_dir: str,
-    watermark: str = "0 seconds",
+    keys: tuple[str, ...] = ("day", "account_id"),
 ) -> None:
-    """Drive the continuous rollup over a (finite) replay stream to
-    completion. On a live stream this would run forever; the table is
-    queryable (spark.read.parquet) at any point."""
+    """Drive an update-mode rollup (`daily_rollup_stream`, or
+    `daily_users_sketch_stream` with keys=("day",)) over a (finite)
+    replay to completion, merging each micro-batch into the table by
+    `keys`. On a live stream this would run forever; the table is
+    queryable (spark.read.parquet) at any point, and a sketch table's
+    any horizon is a hll_union_agg over its O(days) rows."""
     q = (
-        daily_rollup_stream(stream, watermark)
-        .writeStream.outputMode("update")
-        .foreachBatch(continuous_rollup_sink(spark, table_dir))
+        rollup.writeStream.outputMode("update")
+        .foreachBatch(continuous_rollup_sink(spark, table_dir, keys))
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
@@ -147,7 +147,7 @@ def read_rollup(spark: SparkSession, table_dir: str) -> DataFrame:
 
 # ------------------------------------------------- sketch rollup variant
 
-def daily_users_sketch_stream(stream: DataFrame, watermark: str = "0 seconds") -> DataFrame:
+def daily_users_sketch_stream(stream: DataFrame) -> DataFrame:
     """Per-day DISTINCT-USER HLL sketch in update mode — the
     continuous-aggregate form of the persisted-sketch cardinality
     pattern (weekly_users_sketch_rollup's batch twin). The streaming
@@ -158,39 +158,7 @@ def daily_users_sketch_stream(stream: DataFrame, watermark: str = "0 seconds") -
     is absorbed TWICE over: redelivered raw events are set-semantics
     no-ops inside the sketch, and a redelivered batch rewrites the
     same final sketch row."""
-    out = (
-        stream.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", f"{DAY_MS} milliseconds").alias("w"))
-        .agg(F.expr("hll_sketch_agg(account_id)").alias("sk"))
-    )
-    return out.select(
-        (F.unix_millis(F.col("w.start")) / F.lit(DAY_MS)).cast("long").alias("day"),
-        "sk",
-    )
-
-
-def run_users_sketch_rollup(
-    spark: SparkSession,
-    stream: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "0 seconds",
-) -> None:
-    """Drive the continuous sketch rollup over a (finite) replay to
-    completion; the day->sketch table is queryable at any point and
-    any horizon is a hll_union_agg over its O(days) rows."""
-    q = (
-        daily_users_sketch_stream(stream, watermark)
-        .writeStream.outputMode("update")
-        .foreachBatch(continuous_rollup_sink(spark, table_dir, keys=("day",)))
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    return _daily(stream, [F.expr("hll_sketch_agg(account_id)").alias("sk")], key=None)
 
 
 def read_sketch_rollup(spark: SparkSession, table_dir: str) -> DataFrame:

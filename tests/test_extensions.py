@@ -787,6 +787,21 @@ def test_pruned_dedup_faces_leave_no_cached_postings(spark, monkeypatch):
     assert cache.isEmpty()
 
 
+def test_semdedup_faces_leave_no_cached_relation(spark):
+    """Both SemDeDup faces materialize their scored frame for reuse
+    inside one call; it must live with the returned frame, not in the
+    session's cache, so the cache manager is empty after each face
+    returns (the returned verdict stays usable)."""
+    from flink_fraud_detection_rocks_db_app_spark.registry import all_queries
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for name in ("semdedup_keep", "semdedup_incremental_keep"):
+        out = all_queries()[name].fn(spark, SF_SMALL)
+        assert cache.isEmpty(), name
+        assert out.count() > 0, name
+
+
 def test_hll_sketches_survive_parquet_roundtrip(spark, scratch):
     """The sketch-rollup pattern only works at 100 TB if the daily
     sketches are genuinely STORABLE: write the per-day binary sketches

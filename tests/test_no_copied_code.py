@@ -1,5 +1,6 @@
 """Guard against copied code: no run of 10 consecutive code lines may
-appear twice across the package, bench.py and scripts/.
+appear twice across the package, bench.py and scripts/, and the
+event-time window start `w_start` is built in one function.
 
 Each line is stripped; blank lines and lines starting with `#` are
 dropped before windowing, so re-indenting or re-commenting a copy does
@@ -8,6 +9,7 @@ call."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
 
@@ -47,3 +49,24 @@ def test_no_ten_line_window_repeats():
     dups = repeated_windows()
     where = sorted({loc for at in dups.values() for loc in at})
     assert not dups, f"{len(dups)} repeated 10-line windows at {where[:40]}"
+
+
+def test_w_start_built_in_one_function():
+    """`w_start` (the window start as epoch-ms BIGINT) is built from a
+    window struct only inside `streaming.jobs.window_agg`; every batch
+    query, stream and rollup that groups by an event-time window calls
+    it."""
+    needle = 'unix_millis(F.col("w.start"))'
+    found = []
+    for path in _files():
+        with open(path, encoding="utf-8") as fh:
+            found += [(path, n) for n, line in enumerate(fh, 1) if needle in line]
+    jobs = os.path.join(ROOT, "flink_fraud_detection_rocks_db_app_spark", "streaming", "jobs.py")
+    with open(jobs, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    fn = next(
+        f for f in tree.body if isinstance(f, ast.FunctionDef) and f.name == "window_agg"
+    )
+    where = [(os.path.relpath(p, ROOT), n) for p, n in found]
+    assert len(found) == 1, where
+    assert found[0][0] == jobs and fn.lineno <= found[0][1] <= fn.end_lineno, where

@@ -139,7 +139,7 @@ def test_streaming_restart_invariant_to_shuffle_partitions(spark, scratch):
 
     from pyspark.sql import functions as F
 
-    from flink_fraud_detection_rocks_db_app_spark.operators.windows import MS, tumbling
+    from flink_fraud_detection_rocks_db_app_spark.operators.windows import MS
     from flink_fraud_detection_rocks_db_app_spark.streaming import (
         IN_ORDER,
         read_replay_batch,
@@ -191,7 +191,7 @@ def test_streaming_restart_invariant_to_shuffle_partitions(spark, scratch):
     batch = read_replay_batch(spark, chunks)
     full = {
         (r.w_start, r.account_id): r.sum_amount
-        for r in tumbling(batch, size_ms, [F.sum("amount").alias("sum_amount")]).collect()
+        for r in windowed_agg_stream(batch, size_ms, watermark=None).collect()
     }
     wm = batch.agg(F.max(F.unix_millis("event_time"))).collect()[0][0]
     want = {k: v for k, v in full.items() if k[0] + size_ms <= wm}

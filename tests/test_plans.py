@@ -49,6 +49,34 @@ def test_tumbling_is_single_shuffle_hashagg(spark):
     assert "HashAggregate" in plan
 
 
+def test_window_agg_drops_watermark_on_batch(spark):
+    """One window builder serves batch queries and streams because Spark
+    drops `withWatermark` from a batch plan: over a batch
+    `transactions` frame, `window_agg` with the in-order watermark
+    optimizes to the same plan as with none."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from flink_fraud_detection_rocks_db_app_spark.streaming.jobs import (
+        IN_ORDER,
+        window_agg,
+    )
+
+    def plan(watermark):
+        df = window_agg(
+            transactions(spark, SF_SMALL),
+            F.window("event_time", "3 seconds"),
+            [F.sum("amount").alias("sum_amount")],
+            watermark=watermark,
+        )
+        return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+    with_wm = plan(IN_ORDER)
+    assert "EventTimeWatermark" not in with_wm and "-T0ms" not in with_wm, with_wm
+    assert with_wm == plan(None)
+
+
 def test_whole_stage_codegen_on_hot_path(spark):
     # AQE wraps the un-executed plan, hiding codegen spans; disable it
     # just for the inspection so the subtrees are visible.

@@ -22,10 +22,10 @@ from flink_fraud_detection_rocks_db_app_spark.streaming import (
     read_replay_stream,
     run_to_memory,
     running_sum_alerts_stream,
+    window_agg,
     windowed_agg_stream,
     write_replay_chunks,
 )
-from flink_fraud_detection_rocks_db_app_spark.operators.windows import tumbling
 
 from .conftest import SF_SMALL
 
@@ -115,7 +115,7 @@ def test_file_sink_checkpoint_restart(spark, scratch):
     batch = read_replay_batch(spark, chunks)
     full = {
         (r.w_start, r.account_id): r.sum_amount
-        for r in tumbling(batch, SIZE_MS, [F.sum("amount").alias("sum_amount")]).collect()
+        for r in windowed_agg_stream(batch, SIZE_MS, watermark=None).collect()
     }
     wm = batch.agg(F.max(F.unix_millis("event_time"))).collect()[0][0]
     want = {k: v for k, v in full.items() if k[0] + SIZE_MS <= wm}
@@ -312,7 +312,7 @@ def test_continuous_rollup_maintains_daily_table(spark, scratch):
         continuous_rollup_sink,
         daily_rollup_stream,
         read_rollup,
-        run_continuous_rollup,
+        run_rollup,
     )
     from flink_fraud_detection_rocks_db_app_spark.streaming.rollup import DAY_MS
 
@@ -336,14 +336,14 @@ def test_continuous_rollup_maintains_daily_table(spark, scratch):
     # first half of the replay, then query the table mid-stream
     for f in files[:3]:
         shutil.copy2(f, live)
-    run_continuous_rollup(spark, read_replay_stream(spark, live), table, ckpt)
+    run_rollup(spark, daily_rollup_stream(read_replay_stream(spark, live)), table, ckpt)
     mid = {tuple(r) for r in read_rollup(spark, table).collect()}
     assert mid == {tuple(r) for r in batch_rollup(live).collect()}
 
     # rest of the replay resumes from the checkpoint
     for f in files[3:]:
         shutil.copy2(f, live)
-    run_continuous_rollup(spark, read_replay_stream(spark, live), table, ckpt)
+    run_rollup(spark, daily_rollup_stream(read_replay_stream(spark, live)), table, ckpt)
     final = {tuple(r) for r in read_rollup(spark, table).collect()}
     assert final == {tuple(r) for r in batch_rollup(live).collect()}
     assert len(final) > len(mid)
@@ -457,7 +457,6 @@ def test_orc_round_trip_runs_registered_query(spark, scratch):
     """ORC lake parity: events written to ORC and read back produce the
     same tumbling aggregate as the parquet fixture path."""
     from flink_fraud_detection_rocks_db_app_spark.fixtures import transactions
-    from flink_fraud_detection_rocks_db_app_spark.operators.windows import tumbling
     from flink_fraud_detection_rocks_db_app_spark.sources.files import read_orc, write_orc
     from pyspark.sql import functions as F
 
@@ -465,9 +464,10 @@ def test_orc_round_trip_runs_registered_query(spark, scratch):
     path = os.path.join(scratch, "tx_orc")
     write_orc(tx, path)
     orc_tx = read_orc(spark, path)
+    win = F.window("event_time", "3 seconds")
     agg = [F.sum("amount").alias("sum_amount")]
-    a = tumbling(tx, 3000, agg).orderBy("w_start", "account_id").collect()
-    b = tumbling(orc_tx, 3000, agg).orderBy("w_start", "account_id").collect()
+    a = window_agg(tx, win, agg).orderBy("w_start", "account_id").collect()
+    b = window_agg(orc_tx, win, agg).orderBy("w_start", "account_id").collect()
     assert a == b and len(a) > 0
 
 
@@ -836,7 +836,7 @@ def test_bounded_buffer_checkpoint_restart(spark, scratch):
     }
     full = {
         (r.w_start, r.account_id): r.sum_amount
-        for r in tumbling(batch, size_ms, [F.sum("amount").alias("sum_amount")]).collect()
+        for r in windowed_agg_stream(batch, size_ms, watermark=None).collect()
     }
     keep: dict[int, list[int]] = {}
     for w, a in full:

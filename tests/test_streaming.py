@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_fraud_detection_rocks_db_app_spark.operators.windows import MS, tumbling
+from flink_fraud_detection_rocks_db_app_spark.operators.windows import MS
 from flink_fraud_detection_rocks_db_app_spark.fixtures import (
     transactions,
     transactions_with_id,
@@ -32,9 +32,7 @@ SIZE_MS = MS["h"]  # 1h tumbling: dense enough at sf0.001
 
 
 def _batch_tumble(spark, closed_before_ms=None):
-    df = tumbling(
-        transactions(spark, SF_SMALL), SIZE_MS, [F.sum("amount").alias("sum_amount")]
-    )
+    df = windowed_agg_stream(transactions(spark, SF_SMALL), SIZE_MS, watermark=None)
     rows = {(r.w_start, r.account_id): r.sum_amount for r in df.collect()}
     if closed_before_ms is not None:
         rows = {k: v for k, v in rows.items() if k[0] + SIZE_MS <= closed_before_ms}
@@ -78,7 +76,7 @@ def test_stream_out_of_order_bounded_jitter(spark, scratch):
     }
     # batch over the same jittered input
     batch_src = read_replay_batch(spark, chunks)
-    want_df = tumbling(batch_src, SIZE_MS, [F.sum("amount").alias("sum_amount")])
+    want_df = windowed_agg_stream(batch_src, SIZE_MS, watermark=None)
     want = {(r.w_start, r.account_id): r.sum_amount for r in want_df.collect()}
     wm = (
         batch_src.agg(F.max(F.unix_millis("event_time"))).collect()[0][0] - 5_000
@@ -531,7 +529,7 @@ def test_stream_holistic_median_equals_batch(spark, scratch):
         (r.w_start, r.account_id): r.median_amount
         for r in spark.table("t_median").collect()
     }
-    batch = tumbling(transactions(spark, SF_SMALL), SIZE_MS, med)
+    batch = windowed_agg_stream(transactions(spark, SF_SMALL), SIZE_MS, watermark=None, aggs=med)
     full = {(r.w_start, r.account_id): r.median_amount for r in batch.collect()}
     assert got, "stream emitted nothing"
     for k, v in got.items():

@@ -10,7 +10,7 @@ from flink_fraud_detection_rocks_db_app_spark.fixtures import transactions_with_
 from flink_fraud_detection_rocks_db_app_spark.operators.stateful import (
     count_or_time_segments,
 )
-from flink_fraud_detection_rocks_db_app_spark.operators.windows import MS, sliding
+from flink_fraud_detection_rocks_db_app_spark.operators.windows import MS
 from flink_fraud_detection_rocks_db_app_spark.streaming import (
     IN_ORDER,
     count_or_time_stream,
@@ -95,8 +95,8 @@ def test_sliding_stream_equals_batch(spark, scratch):
     batch_src = read_replay_batch(spark, chunks)
     want = {
         (r.w_start, r.account_id): r.sum_amount
-        for r in sliding(
-            batch_src, size_ms, slide_ms, [F.sum("amount").alias("sum_amount")]
+        for r in windowed_agg_stream(
+            batch_src, size_ms, slide_ms=slide_ms, watermark=None
         ).collect()
     }
     wm = batch_src.agg(F.max(F.unix_millis("event_time"))).collect()[0][0]
@@ -426,8 +426,9 @@ def test_sketch_rollup_absorbs_redelivery(spark, scratch):
     from pyspark.sql import functions as F
 
     from flink_fraud_detection_rocks_db_app_spark.streaming.rollup import (
+        daily_users_sketch_stream,
         read_sketch_rollup,
-        run_users_sketch_rollup,
+        run_rollup,
     )
 
     chunks = write_replay_chunks(spark, SF_SMALL, scratch, n_chunks=4)
@@ -444,11 +445,12 @@ def test_sketch_rollup_absorbs_redelivery(spark, scratch):
     tables = {}
     for tag, src in (("clean", chunks), ("dup", dup_dir)):
         tdir = os.path.join(scratch, f"sk_{tag}")
-        run_users_sketch_rollup(
+        run_rollup(
             spark,
-            read_replay_stream(spark, src),
+            daily_users_sketch_stream(read_replay_stream(spark, src)),
             tdir,
             os.path.join(scratch, f"ckpt_{tag}"),
+            keys=("day",),
         )
         tables[tag] = {
             r.day: bytes(r.sk) for r in read_sketch_rollup(spark, tdir).collect()
@@ -547,8 +549,9 @@ def test_replay_faces_leave_session_clean(spark):
     """Replay faces release everything they create: the memory-sink view
     is dropped before the face returns (the returned frame keeps its
     analysed plan and stays usable), no streaming query stays active,
-    and the per-call scratch directory is gone. Three harness shapes:
-    sentinel + rounding, no sentinel, complete output mode."""
+    the per-call scratch directory is gone and nothing is left cached.
+    Three harness shapes: sentinel + rounding, no sentinel, complete
+    output mode."""
     import os
 
     from flink_fraud_detection_rocks_db_app_spark.operators.streamface import (
@@ -564,6 +567,7 @@ def test_replay_faces_leave_session_clean(spark):
             return set()
         return set(os.listdir(_SCRATCH_ROOT)) - {chunk_cache}
 
+    spark.catalog.clearCache()
     tables = {t.name for t in spark.catalog.listTables()}
     before = scratch_entries()
     for name in (
@@ -575,3 +579,4 @@ def test_replay_faces_leave_session_clean(spark):
     assert {t.name for t in spark.catalog.listTables()} == tables
     assert spark.streams.active == []
     assert scratch_entries() == before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
